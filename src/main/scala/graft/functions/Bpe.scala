@@ -389,56 +389,39 @@ t AS (SELECT doc_id, CAST(sum(len(string_split(trim(ds), '  '))) AS INTEGER)
   // subtract-at-read like the other count families; compaction folds
   // history (CountChannelGrowthProbe measured the curve).
 
-  private val CountSchema = "word STRING, wc BIGINT"
+  private def countChannel(dir: String) = ShardWrite.CountChannel(
+    s"$dir/counts", s"$dir/retire", "word STRING, wc BIGINT", Seq("word"))
 
   /** Append one ingest batch's (word, wc) contribution as a
     * `_SUCCESS`-claimed shard. Returns false iff replayed. */
   def wordCountsAppend(docs: DataFrame, text: String,
                        dir: String, batchId: Long): Boolean =
-    countsWrite(docs, text, s"$dir/counts", batchId)
+    countChannel(dir).append(batchId, wordCounts(docs, text))
 
   /** The retire channel: tombstoned docs replay their word counts here;
     * [[wordCountsFromShards]] subtracts at read. */
   def wordCountsRetire(docs: DataFrame, text: String,
                        dir: String, batchId: Long): Boolean =
-    countsWrite(docs, text, s"$dir/retire", batchId)
-
-  private def countsWrite(docs: DataFrame, text: String,
-                          table: String, batchId: Long): Boolean =
-    ShardWrite.claimBatch(docs.sparkSession, table, batchId) match {
-      case None => false
-      case Some(shard) =>
-        wordCounts(docs, text).write.parquet(shard)
-        true
-    }
+    countChannel(dir).retire(batchId, wordCounts(docs, text))
 
   /** The vocabulary table from the accumulated shards: ingest − retire,
     * vanished words net to wc = 0 and drop (a zero-count word must not
     * reach pair counting). Reads through the m-shard watermark rule. */
   def wordCountsFromShards(spark: SparkSession, dir: String): DataFrame =
-    ShardWrite.readShards(spark, s"$dir/counts", CountSchema)
-      .select(col("word"), col("wc"))
-      .unionByName(ShardWrite.readShards(spark, s"$dir/retire", CountSchema)
-        .select(col("word"), (-col("wc")).as("wc")))
-      .groupBy("word").agg(sum(col("wc")).as("wc"))
-      .where(col("wc") > 0)
+    countChannel(dir).netted(spark)
 
   /** Fold both channels to one merged m-shard each (watermark
     * discipline; counts re-SUM, so training is bit-stable across the
     * rewrite). */
   def compactWordCounts(spark: SparkSession,
-                        dir: String): ((Int, Int), (Int, Int)) = {
-    def fold(table: String) =
-      ShardWrite.compactShards(spark, table, CountSchema)(
-        _.groupBy("word").agg(sum(col("wc")).as("wc")))
-    (fold(s"$dir/counts"), fold(s"$dir/retire"))
-  }
+                        dir: String): ((Int, Int), (Int, Int)) =
+    countChannel(dir).compact(spark)
 
   /** The STREAMING sink twin of [[wordCountsAppend]] (the
     * `startTfIndexSink` discipline every other maintained family has):
     * a document stream continuously feeds the tokenizer's (word, wc)
     * ingest channel, one `_SUCCESS`-claimed shard per micro-batch —
-    * replay-idempotent through [[graft.functions.ShardWrite.claimBatch]]
+    * replay-idempotent through [[graft.functions.ShardWrite.appendBatch]]
     * (a foreachBatch retry of a committed batch id is a no-op, and a
     * batch at/below a compaction watermark never double-counts).
     * `compactEvery > 0` folds both channels to one m-shard every N

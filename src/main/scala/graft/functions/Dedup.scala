@@ -135,7 +135,7 @@ object Dedup {
     * verdict's "largest recurring recompute" (every run re-exploded the
     * full corpus): each fresh-docs batch appends its per-line-key
     * DISTINCT-DOC counts to `$dir/batch=<id>` under the standard
-    * `_SUCCESS` claim discipline ([[ShardWrite.claimBatch]] — replays
+    * `_SUCCESS` claim discipline ([[ShardWrite.appendBatch]] — replays
     * skip, torn shards heal). Batches are doc-disjoint, so per-batch
     * distinct-doc counts ADD — the shard sum equals a whole-corpus
     * `countDistinct`, which is what makes the hot-line decision at
@@ -144,12 +144,13 @@ object Dedup {
     * the shard already existed (replay). */
   def lineStatsAppend(batch: DataFrame, id: String, text: String,
                       dir: String, batchId: Long): Boolean =
-    ShardWrite.claimBatch(batch.sparkSession, dir, batchId) match {
-      case None => false
-      case Some(shard) =>
-        lineStatRows(batch, id, text).write.parquet(shard)
-        true
-    }
+    lineStats(dir, None).append(batchId, lineStatRows(batch, id, text))
+
+  /** The line-statistics channel at `dir`; its retire table is
+    * `retireDir`, by default `$dir/retire`. */
+  private def lineStats(dir: String, retireDir: Option[String]) =
+    ShardWrite.CountChannel(dir, retireDir.getOrElse(s"$dir/retire"),
+      "_lk STRING, nd BIGINT", Seq("_lk"))
 
   /** The per-batch line-statistics mine BOTH channels write — one
     * definition so ingest and retire counts can never drift (the
@@ -171,21 +172,19 @@ object Dedup {
     * channel is NOT folded into the count shards (the unigram/DSIR/NB/
     * CMS rationale: count re-subtraction is not idempotent, and the
     * subtraction input is line-vocabulary-bounded after its own
-    * [[compactLineStats]]-style compaction, not takedown-history-
-    * bounded). Returns false iff the shard already existed (replay). */
+    * compaction, not takedown-history-bounded). A retire table is
+    * itself a line-statistics table, so its batches append to the
+    * channel rooted at `retireDir`. Returns false iff the shard
+    * already existed (replay). */
   def lineStatsRetire(batch: DataFrame, id: String, text: String,
                       retireDir: String, batchId: Long): Boolean =
-    ShardWrite.claimBatch(batch.sparkSession, retireDir, batchId) match {
-      case None => false
-      case Some(shard) =>
-        lineStatRows(batch, id, text).write.parquet(shard)
-        true
-    }
+    lineStats(retireDir, None).append(batchId, lineStatRows(batch, id, text))
 
   // ---- incremental boilerplate: the shingle doc-frequency table as a
   // ---- maintained channel ---------------------------------------------
 
-  private val ShingleDfSchema = "shingle STRING, df BIGINT"
+  private def shingleDf(dir: String) = ShardWrite.CountChannel(
+    dir, s"$dir/retire", "shingle STRING, df BIGINT", Seq("shingle"))
 
   /** Per-batch maintenance of the BOILERPLATE miner's shingle
     * doc-frequency counts — the online twin of
@@ -199,12 +198,7 @@ object Dedup {
     * Returns false iff the shard already existed (replay). */
   def shingleDfAppend(batch: DataFrame, id: String, text: String,
                       dir: String, batchId: Long, n: Int = 5): Boolean =
-    ShardWrite.claimBatch(batch.sparkSession, dir, batchId) match {
-      case None => false
-      case Some(shard) =>
-        shingleDfRows(batch, id, text, n).write.parquet(shard)
-        true
-    }
+    shingleDf(dir).append(batchId, shingleDfRows(batch, id, text, n))
 
   /** The per-batch shingle doc-frequency mine BOTH channels write —
     * one definition so ingest and retire counts can never drift. */
@@ -220,13 +214,7 @@ object Dedup {
     * already existed (replay). */
   def shingleDfRetire(batch: DataFrame, id: String, text: String,
                       dir: String, batchId: Long, n: Int = 5): Boolean =
-    ShardWrite.claimBatch(batch.sparkSession, s"$dir/retire",
-        batchId) match {
-      case None => false
-      case Some(shard) =>
-        shingleDfRows(batch, id, text, n).write.parquet(shard)
-        true
-    }
+    shingleDf(dir).retire(batchId, shingleDfRows(batch, id, text, n))
 
   /** The boilerplate drop list served from the maintained counts:
     * ingest − retire nets to the retained corpus's exact doc
@@ -236,40 +224,29 @@ object Dedup {
   def boilerplateFromShards(spark: org.apache.spark.sql.SparkSession,
                             dir: String, minDf: Int,
                             topK: Int): DataFrame =
-    ShardWrite.readShards(spark, dir, ShingleDfSchema)
-      .unionByName(ShardWrite.readShards(spark, s"$dir/retire",
-          ShingleDfSchema)
-        .select(col("shingle"), (-col("df")).as("df")))
-      .groupBy("shingle").agg(sum(col("df")).as("doc_freq"))
+    shingleDf(dir).netted(spark).withColumnRenamed("df", "doc_freq")
       .where(col("doc_freq") >= minDf)
       .orderBy(col("doc_freq").desc, col("shingle").asc)
       .limit(topK)
 
-  /** Fold the shingle-count shards into one merged m-shard — counts
-    * re-aggregate by sum ([[ShardWrite.compactShards]] discipline). */
+  /** Fold the shingle-count channels into one merged m-shard each —
+    * counts re-aggregate by sum ([[ShardWrite.CountChannel]]). Returns
+    * the ingest table's (shards in, shards out). */
   def compactShingleDf(spark: org.apache.spark.sql.SparkSession,
                        dir: String): (Int, Int) =
-    ShardWrite.compactShards(spark, dir, ShingleDfSchema)(
-      _.groupBy("shingle").agg(sum(col("df")).as("df")))
+    shingleDf(dir).compact(spark)._1
 
   /** The hot-line key set derived from the accumulated shards: line
     * keys whose summed distinct-doc count crosses `minDocs`. Reads
-    * through the compaction watermark rule; a retire channel
-    * ([[lineStatsRetire]]) subtracts — a line key netted to zero
-    * vanished with its documents and must not gate anything. */
+    * through the compaction watermark rule; the retire table
+    * ([[lineStatsRetire]] at `retirePath`, by default `$dir/retire`)
+    * subtracts — a line key netted to zero vanished with its documents
+    * and must not gate anything. */
   def hotLinesFromShards(spark: org.apache.spark.sql.SparkSession,
                          dir: String, minDocs: Int,
                          retirePath: Option[String] = None): DataFrame = {
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
-    val live = ShardWrite.readShards(spark, dir, "_lk STRING, nd BIGINT")
-    val netted = retirePath match {
-      case None => live
-      case Some(rp) =>
-        live.unionByName(
-          ShardWrite.readShards(spark, rp, "_lk STRING, nd BIGINT")
-            .select(col("_lk"), (-col("nd")).as("nd")))
-    }
-    netted.groupBy("_lk").agg(sum(col("nd")).as("nd"))
+    lineStats(dir, retirePath).netted(spark)
       .where(col("nd") >= minDocs)
       .select("_lk")
   }
@@ -287,11 +264,11 @@ object Dedup {
       hotLinesFromShards(df.sparkSession, dir, minDocs, retirePath))
 
   /** Fold the line-stat shards into one merged m-shard — counts
-    * re-aggregate by sum ([[ShardWrite.compactShards]] discipline). */
+    * re-aggregate by sum ([[ShardWrite.CountChannel]]). Returns the
+    * ingest table's (shards in, shards out). */
   def compactLineStats(spark: org.apache.spark.sql.SparkSession,
                        dir: String): (Int, Int) =
-    ShardWrite.compactShards(spark, dir, "_lk STRING, nd BIGINT")(
-      _.groupBy("_lk").agg(sum(col("nd")).as("nd")))
+    lineStats(dir, None).compact(spark)._1
 
   /** Unlock parallelism for tiny single-file inputs — the key-ed form of
     * [[Parallelism.ensureParallel]]: callers pass the expression their
@@ -490,12 +467,8 @@ object Dedup {
     val spark = batch.sparkSession
     verifyParamsMarker(spark, s"$dir/_NW", s"$n,$w",
       "shingle/window widths (fingerprints are (n,w)-bound)")
-    ShardWrite.claimBatch(spark, dir, batchId) match {
-      case None => false
-      case Some(shard) =>
-        winnowFingerprints(batch, id, text, n, w).write.parquet(shard)
-        true
-    }
+    ShardWrite.appendBatch(dir, batchId,
+      winnowFingerprints(batch, id, text, n, w))
   }
 
   /** [[winnowPairs]] SERVED from the maintained fingerprint table:
@@ -624,7 +597,7 @@ object Dedup {
     * the r14 verdict's "largest recurring recompute": each fresh-docs
     * batch tokenizes and hashes ONCE, appending its (doc_id, i, h)
     * rows to `$dir/batch=<id>` under the `_SUCCESS` claim discipline
-    * ([[ShardWrite.claimBatch]]). Rows are doc-disjoint across
+    * ([[ShardWrite.appendBatch]]). Rows are doc-disjoint across
     * fresh-doc batches, so the shard union IS the whole-corpus window
     * table and the span derivation at read is EXACT — duplicate
     * windows across documents land in different shards and still meet
@@ -638,12 +611,7 @@ object Dedup {
     require(L >= 2, s"substring window must be >= 2 tokens, got $L")
     val spark = batch.sparkSession
     verifyLMarker(spark, dir, L)
-    ShardWrite.claimBatch(spark, dir, batchId) match {
-      case None => false
-      case Some(shard) =>
-        substrWindows(batch, id, text, L).write.parquet(shard)
-        true
-    }
+    ShardWrite.appendBatch(dir, batchId, substrWindows(batch, id, text, L))
   }
 
   /** [[exactSubstrSpans]] SERVED from the maintained window table:
@@ -689,12 +657,8 @@ object Dedup {
     * existed (replay). */
   def windowRetireAppend(docIds: DataFrame, idCol: String,
                          retirePath: String, batchId: Long): Boolean =
-    ShardWrite.claimBatch(docIds.sparkSession, retirePath, batchId) match {
-      case None => false
-      case Some(shard) =>
-        docIds.select(col(idCol).as("doc_id")).distinct().write.parquet(shard)
-        true
-    }
+    ShardWrite.appendIds(docIds, col(idCol).as("doc_id"), retirePath,
+      batchId)
 
   /** Fold the window-table shards into one merged m-shard — rows are
     * doc-disjoint so the merge is the identity union
@@ -706,47 +670,21 @@ object Dedup {
   /** PHYSICAL tombstone fold for the window table — the maintenance
     * completion of [[windowRetireAppend]], same shape as the edge
     * list's ([[GraphRank.foldRetiredPairs]]): the retired docs' rows
-    * drop from the BYTES as a compaction variant (anti-join merge, so
-    * the loss-proof commit order and the strictly-increasing watermark
-    * come from [[ShardWrite.compactShards]] for free), then the channel
-    * is consumed. Window rows are doc-keyed SETS, so channel deletion
-    * is replay-safe (a re-appended tombstone anti-joins rows that no
-    * longer exist). With fewer than two live shards there is nothing to
-    * compact and the fold WAITS (returns false, channel kept — read-
-    * time subtraction stays correct) for the next ingest cadence.
-    * Returns true iff the fold consumed the channel. */
+    * drop from the BYTES as a compaction variant
+    * ([[ShardWrite.foldRetired]] with the doc-keyed anti-join as the
+    * merge), then the channel is consumed. Returns true iff the fold
+    * consumed the channel. */
   def foldRetiredWindows(spark: org.apache.spark.sql.SparkSession,
                          dir: String, retirePath: String): Boolean =
     foldRetiredDocKeyed(spark, dir, retirePath, SubstrWindowSchema)
 
-  /** The shared fold kernel for doc-keyed SET tables with a doc-id
-    * tombstone channel ([[foldRetiredWindows]],
-    * [[foldRetiredWinnowFps]]): anti-join compaction merge (loss-proof
-    * commit order and the strictly-increasing watermark come from
-    * [[ShardWrite.compactShards]]), channel consumed after. The
-    * consume deletes only the COMPLETE shards the fold's read covered
-    * ([[ShardWrite.consumeCompleteShards]]) — a concurrently in-flight
-    * tombstone append (claimed, no `_SUCCESS` yet) survives for the
-    * next fold; replays of consumed batches are safe by set semantics
-    * (a re-appended tombstone anti-joins rows that no longer exist). */
+  /** [[ShardWrite.foldRetired]] for the doc-keyed SET tables
+    * ([[foldRetiredWindows]], [[foldRetiredWinnowFps]]). */
   private def foldRetiredDocKeyed(spark: org.apache.spark.sql.SparkSession,
                                   dir: String, retirePath: String,
-                                  schema: String): Boolean = {
-    val retP = new org.apache.hadoop.fs.Path(retirePath)
-    val fs = retP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(retP)) return false
-    val gone = ShardWrite.readShards(spark, retirePath, "doc_id LONG").persist()
-    try {
-      if (gone.head(1).isEmpty) {
-        ShardWrite.consumeCompleteShards(spark, retirePath); return false
-      }
-      val (in, _) = ShardWrite.compactShards(spark, dir, schema)(
-        _.join(gone, Seq("doc_id"), "left_anti"))
-      if (in <= 1) return false // nothing to compact — wait for ingest
-      ShardWrite.consumeCompleteShards(spark, retirePath)
-      true
-    } finally gone.unpersist()
-  }
+                                  schema: String): Boolean =
+    ShardWrite.foldRetired(spark, dir, schema, retirePath)(
+      _.join(_, Seq("doc_id"), "left_anti"))
 
   private def verifyLMarker(spark: org.apache.spark.sql.SparkSession,
                             dir: String, l: Int): Unit =

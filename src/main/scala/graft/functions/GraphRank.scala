@@ -118,13 +118,8 @@ object GraphRank {
     * already existed (replay). */
   def pairsAppend(pairs: DataFrame, aCol: String, bCol: String,
                   dir: String, batchId: Long): Boolean =
-    ShardWrite.claimBatch(pairs.sparkSession, s"$dir/pairs", batchId) match {
-      case None => false
-      case Some(shard) =>
-        pairs.select(col(aCol).as("doc_a"), col(bCol).as("doc_b"))
-          .write.parquet(shard)
-        true
-    }
+    ShardWrite.appendBatch(s"$dir/pairs", batchId,
+      pairs.select(col(aCol).as("doc_a"), col(bCol).as("doc_b")))
 
   /** MAINTENANCE for the graph channels — the count-shard compaction
     * discipline ([[ShardWrite.compactShards]]) on the edge list and the
@@ -177,12 +172,8 @@ object GraphRank {
     * (replay). */
   def retireAppend(docIds: DataFrame, idCol: String, dir: String,
                    batchId: Long): Boolean =
-    ShardWrite.claimBatch(docIds.sparkSession, s"$dir/retire", batchId) match {
-      case None => false
-      case Some(shard) =>
-        docIds.select(col(idCol).as("doc_id")).distinct().write.parquet(shard)
-        true
-    }
+    ShardWrite.appendIds(docIds, col(idCol).as("doc_id"), s"$dir/retire",
+      batchId)
 
   /** The accumulated tombstone set (empty when no retire shard was
     * ever written). */
@@ -193,41 +184,19 @@ object GraphRank {
   /** PHYSICAL tombstone fold for the edge list — the maintenance
     * completion of [[retireAppend]]: [[readRetainedPairs]] pays two
     * anti-joins against a tombstone set that grows with takedown
-    * history; the fold drops the tombstoned edges from the BYTES and
-    * consumes the channel. It rides [[ShardWrite.compactShards]] with
-    * the drop as the merge, which gives the loss-proof commit order
-    * for free AND the no-tie watermark guarantee: compaction only runs
-    * over ≥2 live shards, so the folded m-shard's watermark strictly
-    * exceeds the consumed one's — when the channel has tombstones but
-    * the pair table has nothing new to compact, the fold deliberately
-    * WAITS (returns false, channel kept; read-time subtraction remains
-    * correct) and piggybacks the next compaction cadence. The consume
-    * deletes only the COMPLETE tombstone shards the fold read
-    * ([[ShardWrite.consumeCompleteShards]] — an in-flight append
-    * survives); replays are safe by set semantics: a re-appended
-    * tombstone anti-joins edges that no longer exist.
-    * Returns true iff the fold consumed the channel. */
+    * history; the fold drops every edge touching a tombstoned doc from
+    * the BYTES and consumes the channel ([[ShardWrite.foldRetired]]:
+    * loss-proof commit order, and the fold WAITS while the pair table
+    * has fewer than two live shards). Returns true iff the fold
+    * consumed the channel. */
   def foldRetiredPairs(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): Boolean = {
-    val retP = new org.apache.hadoop.fs.Path(s"$dir/retire")
-    val fs = retP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(retP)) return false
-    val gone = retiredDocs(spark, dir).persist()
-    try {
-      if (gone.head(1).isEmpty) {
-        ShardWrite.consumeCompleteShards(spark, s"$dir/retire"); return false
-      }
-      val (in, _) = ShardWrite.compactShards(spark, s"$dir/pairs",
-          "doc_a LONG, doc_b LONG")(p =>
-        p.join(gone.withColumnRenamed("doc_id", "doc_a"),
-            Seq("doc_a"), "left_anti")
-          .join(gone.withColumnRenamed("doc_id", "doc_b"),
-            Seq("doc_b"), "left_anti"))
-      if (in <= 1) return false // nothing to compact — wait for ingest
-      ShardWrite.consumeCompleteShards(spark, s"$dir/retire")
-      true
-    } finally gone.unpersist()
-  }
+                       dir: String): Boolean =
+    ShardWrite.foldRetired(spark, s"$dir/pairs", "doc_a LONG, doc_b LONG",
+        s"$dir/retire")((p, gone) =>
+      p.join(gone.withColumnRenamed("doc_id", "doc_a"),
+          Seq("doc_a"), "left_anti")
+        .join(gone.withColumnRenamed("doc_id", "doc_b"),
+          Seq("doc_b"), "left_anti"))
 
   /** [[readPairShards]] minus every edge touching a tombstoned doc —
     * the retained-set edge view both graph serves (PageRank, CC) read.

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, sum}
 
-/** Torn-shard-safe replay detection for the additive count-shard
-  * appenders ([[TextAnalysis.dsirCountsAppend]], [[Sketches.cmsAppend]]).
+/** Torn-shard-safe replay detection for the batch-shard appenders
+  * ([[CountChannel]], [[appendIds]]).
   *
   * A bare `fs.exists(shardDir)` replay check has a CRASH HOLE: a writer
   * killed mid-`write.parquet` leaves the directory present but
@@ -53,8 +54,9 @@ object ShardWrite {
 
   // ---- compaction for the additive batch-shard channels -------------
   //
-  // The count-shard families (unigram LM, DSIR, CMS — ingest AND
-  // retire channels) accumulate one `batch=<id>` dir per append; at a
+  // The batch-shard channels ([[CountChannel]] ingest AND retire
+  // tables, pair shards, tombstone sets) accumulate one `batch=<id>`
+  // dir per append; at a
   // batch per hour that is thousands of dirs a year, each a listing +
   // footer read at serve time. [[compactShards]] folds them into one
   // merged dir named `batch=m<stamp>u<maxBatch>` — the postings-index
@@ -130,8 +132,8 @@ object ShardWrite {
     * complete (plain replay) or its id at/below the merged watermark
     * (replay of a compaction-consumed batch) — else the shard path to
     * write. */
-  def claimBatch(spark: SparkSession, table: String,
-                 batchId: Long): Option[String] = {
+  private def claimBatch(spark: SparkSession, table: String,
+                         batchId: Long): Option[String] = {
     if (watermark(spark, table).exists(batchId <= _)) return None
     val shard = s"$table/batch=$batchId"
     if (claim(spark, shard)) Some(shard) else None
@@ -230,5 +232,99 @@ object ShardWrite {
       s"compaction rename failed: $staging -> $target")
     complete.foreach(st => fs.delete(st.getPath, true))
     (complete.length, shardDirs(spark, table).length)
+  }
+
+  /** Write `rows` as `table/batch=<batchId>` under [[claimBatch]].
+    * Returns false, writing nothing, when the batch is a replay. */
+  def appendBatch(table: String, batchId: Long, rows: DataFrame): Boolean =
+    claimBatch(rows.sparkSession, table, batchId) match {
+      case None => false
+      case Some(shard) => rows.write.parquet(shard); true
+    }
+
+  /** One batch of a doc-id tombstone channel: the distinct values of
+    * `id` appended to `table` ([[appendBatch]]). Tombstone channels
+    * have SET semantics, so their compaction merge is `distinct`. */
+  def appendIds(ids: DataFrame, id: Column, table: String,
+                batchId: Long): Boolean =
+    appendBatch(table, batchId, ids.select(id).distinct())
+
+  /** PHYSICAL tombstone fold for a table whose rows are dropped by a
+    * doc-id tombstone channel (`doc_id LONG` shards at `retirePath`):
+    * `table` compacts with `drop(rows, retiredIds)` as the merge, so the
+    * loss-proof commit order and the strictly-increasing watermark come
+    * from [[compactShards]], then the channel is consumed. With fewer
+    * than two live shards there is nothing to compact and the fold
+    * WAITS (returns false, channel kept — read-time subtraction stays
+    * correct) for the next ingest cadence. The consume deletes only the
+    * COMPLETE shards the fold's read covered ([[consumeCompleteShards]]):
+    * a concurrently in-flight tombstone append survives for the next
+    * fold, and replays of consumed batches are safe by set semantics (a
+    * re-appended tombstone drops rows that no longer exist). Returns
+    * true iff the fold consumed the channel. */
+  def foldRetired(spark: SparkSession, table: String, schema: String,
+                  retirePath: String)(
+      drop: (DataFrame, DataFrame) => DataFrame): Boolean = {
+    val (fs, retP) = fsOf(spark, retirePath)
+    if (!fs.exists(retP)) return false
+    val gone = readShards(spark, retirePath, "doc_id LONG").persist()
+    try {
+      if (gone.head(1).isEmpty) {
+        consumeCompleteShards(spark, retirePath); return false
+      }
+      val (in, _) = compactShards(spark, table, schema)(drop(_, gone))
+      if (in <= 1) return false // nothing to compact — wait for ingest
+      consumeCompleteShards(spark, retirePath)
+      true
+    } finally gone.unpersist()
+  }
+
+  /** An ADDITIVE COUNT CHANNEL: per-batch count shards at `ingestTable`
+    * and tombstone counts at `retireTable`, both `schema` (DDL), keyed
+    * by `keys`; every other column is a count measure. A family supplies
+    * its per-batch `(keys, measures)` rows and reads [[netted]]; the
+    * storage policy lives here:
+    *  - [[append]]/[[retire]] write one `_SUCCESS`-claimed shard per
+    *    batch ([[appendBatch]]): replays skip, torn shards heal, and a
+    *    batch whose claim never completed is invisible to every read.
+    *    All of a batch's rows land in ONE shard, so a family needing
+    *    several count tables per batch tags its rows with a kind key
+    *    and gets all-or-nothing batches for free.
+    *  - [[netted]] reads both tables through the watermark rule
+    *    ([[readShards]]) and sums ingest − retire per key. Counts are
+    *    exact integers, so the netted table equals a recount over the
+    *    retained corpus.
+    *  - [[compact]] folds each table to one m-shard, measures re-summed
+    *    per key ([[compactShards]]); netted reads are bit-stable across
+    *    it. Retire batch ids are their own namespace. */
+  final case class CountChannel(ingestTable: String, retireTable: String,
+                                schema: String, keys: Seq[String]) {
+    private val measures = org.apache.spark.sql.types.StructType
+      .fromDDL(schema).fieldNames.toSeq.filterNot(keys.contains)
+
+    def append(batchId: Long, rows: DataFrame): Boolean =
+      appendBatch(ingestTable, batchId, rows)
+
+    def retire(batchId: Long, rows: DataFrame): Boolean =
+      appendBatch(retireTable, batchId, rows)
+
+    /** ingest − retire summed per key; a row with no positive measure
+      * left (netted to zero: its documents were all retired) drops. */
+    def netted(spark: SparkSession): DataFrame =
+      resum(readShards(spark, ingestTable, schema)
+          .unionByName(readShards(spark, retireTable, schema)
+            .select(keys.map(col) ++ measures.map(m => (-col(m)).as(m)): _*)))
+        .where(measures.map(m => col(m) > 0).reduce(_ || _))
+
+    /** Fold each table to one merged m-shard: (ingest, retire) pairs of
+      * (shards in, shards out). */
+    def compact(spark: SparkSession): ((Int, Int), (Int, Int)) =
+      (compactShards(spark, ingestTable, schema)(resum),
+        compactShards(spark, retireTable, schema)(resum))
+
+    private def resum(df: DataFrame): DataFrame = {
+      val sums = measures.map(m => sum(col(m)).as(m))
+      df.groupBy(keys.map(col): _*).agg(sums.head, sums.tail: _*)
+    }
   }
 }

@@ -1142,12 +1142,8 @@ object Similarity {
     * already existed (replay). */
   def retireFromDir(vecIds: DataFrame, idCol: String, dir: String,
                     batchId: Long): Boolean =
-    ShardWrite.claimBatch(vecIds.sparkSession, s"$dir/retire", batchId) match {
-      case None => false
-      case Some(shard) =>
-        vecIds.select(col(idCol).as("vid")).distinct().write.parquet(shard)
-        true
-    }
+    ShardWrite.appendIds(vecIds, col(idCol).as("vid"), s"$dir/retire",
+      batchId)
 
   /** Fold the vector tombstone channel into one distinct m-shard —
     * the [[ShardWrite.compactShards]] discipline. */

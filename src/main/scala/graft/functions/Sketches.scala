@@ -161,7 +161,7 @@ object Sketches {
   def cmsAppend(items: org.apache.spark.sql.DataFrame, value: String,
                 dir: String, batchId: Long, d: Int = 4,
                 w: Int = 1024): Boolean =
-    cmsWrite(items, value, s"$dir/cms", batchId, d, w)
+    cmsChannel(dir).append(batchId, cmsCells(items, value, d, w))
 
   /** TOMBSTONES for the CMS shards — CMS is LINEAR, so retiring a
     * stream slice is exact: the retired items' cell table lands in
@@ -172,43 +172,25 @@ object Sketches {
   def cmsRetire(items: org.apache.spark.sql.DataFrame, value: String,
                 dir: String, batchId: Long, d: Int = 4,
                 w: Int = 1024): Boolean =
-    cmsWrite(items, value, s"$dir/retire", batchId, d, w)
+    cmsChannel(dir).retire(batchId, cmsCells(items, value, d, w))
 
-  private def cmsWrite(items: org.apache.spark.sql.DataFrame, value: String,
-                       table: String, batchId: Long, d: Int,
-                       w: Int): Boolean =
-    ShardWrite.claimBatch(items.sparkSession, table, batchId) match {
-      case None => false
-      case Some(shard) =>
-        cmsCells(items, value, d, w).write.parquet(shard)
-        true
-    }
+  private def cmsChannel(dir: String) = ShardWrite.CountChannel(
+    s"$dir/cms", s"$dir/retire", "r INT, c BIGINT, n BIGINT", Seq("r", "c"))
 
   /** The whole-stream cell table from the accumulated shards — feeds
     * [[cmsEstimate]] unchanged. Subtracts the retire channel (exact:
-    * CMS linearity); both channels read through the compaction
-    * watermark rule. */
+    * CMS linearity); cells netted to zero drop, which [[cmsEstimate]]
+    * reads as the zero they are. */
   def cmsFromShards(spark: org.apache.spark.sql.SparkSession,
-                    dir: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, sum}
-    ShardWrite.readShards(spark, s"$dir/cms", "r INT, c BIGINT, n BIGINT")
-      .unionByName(ShardWrite
-        .readShards(spark, s"$dir/retire", "r INT, c BIGINT, n BIGINT")
-        .select(col("r"), col("c"), (-col("n")).as("n")))
-      .groupBy("r", "c").agg(sum(col("n")).as("n"))
-  }
+                    dir: String): org.apache.spark.sql.DataFrame =
+    cmsChannel(dir).netted(spark)
 
   /** [[graft.functions.TextAnalysis.compactUnigramCounts]] on the CMS
     * channels: cells re-sum per (r, c), both channels, same watermark
     * discipline — CMS linearity makes the folded table bit-identical. */
   def compactCmsShards(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): ((Int, Int), (Int, Int)) = {
-    import org.apache.spark.sql.functions.{col, sum}
-    def fold(table: String) =
-      ShardWrite.compactShards(spark, table, "r INT, c BIGINT, n BIGINT")(
-        _.groupBy("r", "c").agg(sum(col("n")).as("n")))
-    (fold(s"$dir/cms"), fold(s"$dir/retire"))
-  }
+                       dir: String): ((Int, Int), (Int, Int)) =
+    cmsChannel(dir).compact(spark)
 
   /** φ-HEAVY HITTERS via the CMS prefilter — the two-pass pattern the
     * sketch exists for at corpus scale: pass 1 builds the bounded d·w

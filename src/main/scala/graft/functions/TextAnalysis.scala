@@ -446,7 +446,7 @@ object TextAnalysis {
   def unigramCountsAppend(docs: org.apache.spark.sql.DataFrame, id: String,
                           text: String, dir: String,
                           batchId: Long): Boolean =
-    unigramCountsWrite(docs, id, text, s"$dir/counts", batchId)
+    unigramChannel(dir).append(batchId, unigramCountRows(docs, id, text))
 
   /** TOMBSTONES for the unigram-LM count shards — the retire channel:
     * documents leaving the corpus (takedowns, dedup retro-drops,
@@ -461,20 +461,16 @@ object TextAnalysis {
   def unigramCountsRetire(docs: org.apache.spark.sql.DataFrame, id: String,
                           text: String, dir: String,
                           batchId: Long): Boolean =
-    unigramCountsWrite(docs, id, text, s"$dir/retire", batchId)
+    unigramChannel(dir).retire(batchId, unigramCountRows(docs, id, text))
 
-  private def unigramCountsWrite(docs: org.apache.spark.sql.DataFrame,
-                                 id: String, text: String,
-                                 table: String, batchId: Long): Boolean =
-    ShardWrite.claimBatch(docs.sparkSession, table, batchId) match {
-      case None => false
-      case Some(shard) =>
-        import org.apache.spark.sql.functions.{col, count}
-        explodedTerms(docs, id, text)
-          .groupBy("term").agg(count(lit(1)).as("tc"))
-          .write.parquet(shard)
-        true
-    }
+  private def unigramChannel(dir: String) = ShardWrite.CountChannel(
+    s"$dir/counts", s"$dir/retire", "term STRING, tc BIGINT", Seq("term"))
+
+  private def unigramCountRows(docs: org.apache.spark.sql.DataFrame,
+                               id: String, text: String)
+      : org.apache.spark.sql.DataFrame =
+    explodedTerms(docs, id, text)
+      .groupBy("term").agg(count(lit(1)).as("tc"))
 
   /** MAINTENANCE for the unigram count channels — the postings m-shard
     * watermark discipline on the additive tables: both channels fold to
@@ -484,13 +480,8 @@ object TextAnalysis {
     * the reader's above-watermark rule ([[ShardWrite.compactShards]]).
     * Scores are bit-stable across the rewrite (integer sums). */
   def compactUnigramCounts(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): ((Int, Int), (Int, Int)) = {
-    import org.apache.spark.sql.functions.{col, sum}
-    def fold(table: String) =
-      ShardWrite.compactShards(spark, table, "term STRING, tc BIGINT")(
-        _.groupBy("term").agg(sum(col("tc")).as("tc")))
-    (fold(s"$dir/counts"), fold(s"$dir/retire"))
-  }
+                           dir: String): ((Int, Int), (Int, Int)) =
+    unigramChannel(dir).compact(spark)
 
   /** Score documents against the ACCUMULATED count shards: freq sums
     * per term, and the corpus total is Σ tc over the summed table —
@@ -501,21 +492,9 @@ object TextAnalysis {
                             id: String, text: String,
                             dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, sum}
-    val spark = docs.sparkSession
-    // explicit schema: an all-empty shard set (quiet-day batches) must
-    // score zero docs, not fail schema inference. The retire channel
-    // ([[unigramCountsRetire]]) subtracts — vanished terms net to tc=0
-    // and are dropped (a zero-count term must not reach the log).
-    // Both channels read through the watermark rule (m-shards + plain
-    // shards above them), so a mid-compaction crash never double-counts
-    val freq = ShardWrite
-      .readShards(spark, s"$dir/counts", "term STRING, tc BIGINT")
-      .select(col("term"), col("tc"))
-      .unionByName(ShardWrite
-        .readShards(spark, s"$dir/retire", "term STRING, tc BIGINT")
-        .select(col("term"), (-col("tc")).as("tc")))
-      .groupBy("term").agg(sum(col("tc")).as("tc"))
-      .where(col("tc") > 0)
+    // the netted read drops vanished terms (a zero-count term must not
+    // reach the log)
+    val freq = unigramChannel(dir).netted(docs.sparkSession)
     val total = freq.agg(sum(col("tc")).as("total"))
     xentScore(explodedTerms(docs, id, text), freq, total)
   }
@@ -580,18 +559,13 @@ object TextAnalysis {
     * of [[bigramXent]]'s counting half. The model needs THREE count
     * tables (bigram, context, distinct-vocab) and a half-committed
     * subset would score WRONG (not just stale), so all three kinds
-    * land in ONE kind-tagged shard under ONE `_SUCCESS` claim — the
-    * atomic-batch alternative to the NB family's split-write pairing
-    * markers. Counts ADD across doc-disjoint batches. Returns false
-    * iff the shard already existed (replay). */
+    * land in ONE kind-tagged shard under ONE `_SUCCESS` claim
+    * ([[ShardWrite.CountChannel]]). Counts ADD across doc-disjoint
+    * batches. Returns false iff the shard already existed (replay). */
   def bigramCountsAppend(batch: org.apache.spark.sql.DataFrame,
                          id: String, text: String,
                          dir: String, batchId: Long): Boolean =
-    ShardWrite.claimBatch(batch.sparkSession, dir, batchId) match {
-      case None => false
-      case Some(shard) => bigramCountRows(batch, id, text)
-          .write.parquet(shard); true
-    }
+    bigramChannel(dir).append(batchId, bigramCountRows(batch, id, text))
 
   /** TOMBSTONES for the bigram LM — the count-channel retire shape:
     * the retired docs' bigram/context/term counts append POSITIVE to
@@ -602,12 +576,10 @@ object TextAnalysis {
   def bigramCountsRetire(batch: org.apache.spark.sql.DataFrame,
                          id: String, text: String,
                          dir: String, batchId: Long): Boolean =
-    ShardWrite.claimBatch(batch.sparkSession, s"$dir/retire",
-        batchId) match {
-      case None => false
-      case Some(shard) => bigramCountRows(batch, id, text)
-          .write.parquet(shard); true
-    }
+    bigramChannel(dir).retire(batchId, bigramCountRows(batch, id, text))
+
+  private def bigramChannel(dir: String) = ShardWrite.CountChannel(
+    dir, s"$dir/retire", "kind STRING, k STRING, c BIGINT", Seq("kind", "k"))
 
   private def bigramCountRows(batch: org.apache.spark.sql.DataFrame,
                               id: String, text: String)
@@ -634,14 +606,8 @@ object TextAnalysis {
   def bigramXentFromCounts(docs: org.apache.spark.sql.DataFrame,
                            id: String, text: String, dir: String)
       : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, count, sum}
-    val spark = docs.sparkSession
-    val schema = "kind STRING, k STRING, c BIGINT"
-    val netted = ShardWrite.readShards(spark, dir, schema)
-      .unionByName(ShardWrite.readShards(spark, s"$dir/retire", schema)
-        .select(col("kind"), col("k"), (-col("c")).as("c")))
-      .groupBy("kind", "k").agg(sum(col("c")).as("c"))
-      .where(col("c") > 0)
+    import org.apache.spark.sql.functions.{col, count}
+    val netted = bigramChannel(dir).netted(docs.sparkSession)
     val t = docs.select(col(id).as("doc_id"), tokens(col(text)).as("tk"))
     bigramScore(bigramStream(t),
       netted.where(col("kind") === "b")
@@ -753,8 +719,8 @@ object TextAnalysis {
   def dsirCountsAppend(docs: org.apache.spark.sql.DataFrame, id: String,
                        text: String, isTarget: Column, dir: String,
                        batchId: Long, buckets: Int = 1024): Boolean =
-    dsirCountsWrite(docs, id, text, isTarget,
-      s"$dir/counts", batchId, buckets)
+    dsirChannel(dir).append(batchId,
+      dsirCountRows(docs, id, text, isTarget, buckets))
 
   /** TOMBSTONES for the DSIR count shards — the
     * [[unigramCountsRetire]] retire channel on the importance-weight
@@ -765,36 +731,27 @@ object TextAnalysis {
   def dsirCountsRetire(docs: org.apache.spark.sql.DataFrame, id: String,
                        text: String, isTarget: Column, dir: String,
                        batchId: Long, buckets: Int = 1024): Boolean =
-    dsirCountsWrite(docs, id, text, isTarget,
-      s"$dir/retire", batchId, buckets)
+    dsirChannel(dir).retire(batchId,
+      dsirCountRows(docs, id, text, isTarget, buckets))
 
-  private def dsirCountsWrite(docs: org.apache.spark.sql.DataFrame,
-                              id: String, text: String, isTarget: Column,
-                              table: String, batchId: Long,
-                              buckets: Int): Boolean =
-    ShardWrite.claimBatch(docs.sparkSession, table, batchId) match {
-      case None => false
-      case Some(shard) =>
-        import org.apache.spark.sql.functions.{col, count}
-        dsirFeatures(docs.withColumn("__is_t", isTarget), id, text, buckets,
-            carry = Seq("__is_t"))
-          .groupBy("b")
-          .agg(count(when(col("__is_t"), lit(1))).as("ct"),
-            count(when(!col("__is_t"), lit(1))).as("cs"))
-          .write.parquet(shard)
-        true
-    }
+  private def dsirChannel(dir: String) = ShardWrite.CountChannel(
+    s"$dir/counts", s"$dir/retire", "b BIGINT, ct BIGINT, cs BIGINT",
+    Seq("b"))
+
+  private def dsirCountRows(docs: org.apache.spark.sql.DataFrame, id: String,
+                            text: String, isTarget: Column,
+                            buckets: Int): org.apache.spark.sql.DataFrame =
+    dsirFeatures(docs.withColumn("__is_t", isTarget), id, text, buckets,
+        carry = Seq("__is_t"))
+      .groupBy("b")
+      .agg(count(when(col("__is_t"), lit(1))).as("ct"),
+        count(when(!col("__is_t"), lit(1))).as("cs"))
 
   /** [[compactUnigramCounts]] on the DSIR channels: (b, ct, cs) rows
     * re-sum per bucket, both channels, same watermark discipline. */
   def compactDsirCounts(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): ((Int, Int), (Int, Int)) = {
-    import org.apache.spark.sql.functions.{col, sum}
-    def fold(table: String) =
-      ShardWrite.compactShards(spark, table, "b BIGINT, ct BIGINT, cs BIGINT")(
-        _.groupBy("b").agg(sum(col("ct")).as("ct"), sum(col("cs")).as("cs")))
-    (fold(s"$dir/counts"), fold(s"$dir/retire"))
-  }
+                        dir: String): ((Int, Int), (Int, Int)) =
+    dsirChannel(dir).compact(spark)
 
   /** Derive the complete-residue log-ratio model from the accumulated
     * count shards — the SAME arithmetic as [[dsirModel]] over the same
@@ -805,12 +762,7 @@ object TextAnalysis {
                           dir: String, buckets: Int = 1024,
                           alpha: Double = 1.0): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, sum}
-    val c = ShardWrite
-      .readShards(spark, s"$dir/counts", "b BIGINT, ct BIGINT, cs BIGINT")
-      .unionByName(ShardWrite
-        .readShards(spark, s"$dir/retire", "b BIGINT, ct BIGINT, cs BIGINT")
-        .select(col("b"), (-col("ct")).as("ct"), (-col("cs")).as("cs")))
-      .groupBy("b").agg(sum(col("ct")).as("ct"), sum(col("cs")).as("cs"))
+    val c = dsirChannel(dir).netted(spark)
     val tot = c.agg(sum(col("ct")).as("tt"), sum(col("cs")).as("ts"))
     spark.range(buckets).toDF("b")
       .join(c, Seq("b"), "left")
@@ -929,85 +881,56 @@ object TextAnalysis {
 
   /** INCREMENTAL NB maintenance — the count-shard discipline on the
     * classifier gate: each batch appends its per-class feature-bucket
-    * counts AND its per-class doc counts (priors add too) as
-    * independently `_SUCCESS`-claimed shards — a crash between the two
-    * writes replays with only the missing one re-written, the
-    * tf/dl split-write contract. An empty PAIRING MARKER
-    * `$dir/_pairs/batch=<id>` commits ONLY after both shards are
-    * complete, and [[nbModelFromCounts]] reads only marker-named
-    * batches — so a crash between the two shard commits can never
-    * surface a model whose likelihoods include a batch whose priors
-    * don't (the tf/dl `_pairs` atomic-by-ordering contract, applied to
-    * the feat/docs split). Returns false iff BOTH shards already
-    * existed (true replay). */
+    * counts AND its per-class doc counts (priors add too) as ONE
+    * kind-tagged shard under ONE `_SUCCESS` claim — the
+    * [[bigramCountsAppend]] all-or-nothing batch. A crash mid-write
+    * leaves a claim that never completed, which [[nbModelFromCounts]]
+    * cannot see until the replay rewrites it, so no model ever includes
+    * a batch's likelihoods without its priors. Returns false iff the
+    * shard already existed (replay). */
   def nbCountsAppend(docs: org.apache.spark.sql.DataFrame, id: String,
                      text: String, label: String, dir: String,
                      batchId: Long, buckets: Int = 1024): Boolean =
-    nbCountsWrite(docs, id, text, label, dir, batchId, buckets,
-      featTable = "feat", docsTable = "docs", marker = "batch")
+    nbChannel(dir).append(batchId,
+      nbCountRows(docs, id, text, label, buckets))
 
   /** TOMBSTONES for the classifier's count shards — the retire channel
-    * with the SAME split-write safety as ingest: the retired docs'
-    * feature counts land in `feat_retire`, their doc counts (prior
-    * mass) in `docs_retire`, each `_SUCCESS`-claimed, and the
-    * `_pairs/retire=<id>` marker commits only after BOTH — so a crash
-    * can never surface a model where likelihoods forgot a batch but
-    * priors didn't. [[nbModelFromCounts]] subtracts marker-named
-    * retire batches: ingest − retire ≡ retrain over the retained
-    * corpus, bit-exactly (integer counts through the one
-    * [[nbAssemble]] arithmetic). */
+    * with the SAME single-shard batch as ingest: the retired docs'
+    * feature counts and doc counts (prior mass) land in one
+    * `$dir/retire/batch=<id>` shard. [[nbModelFromCounts]] subtracts:
+    * ingest − retire ≡ retrain over the retained corpus, bit-exactly
+    * (integer counts through the one [[nbAssemble]] arithmetic). */
   def nbCountsRetire(docs: org.apache.spark.sql.DataFrame, id: String,
                      text: String, label: String, dir: String,
                      batchId: Long, buckets: Int = 1024): Boolean =
-    nbCountsWrite(docs, id, text, label, dir, batchId, buckets,
-      featTable = "feat_retire", docsTable = "docs_retire",
-      marker = "retire")
+    nbChannel(dir).retire(batchId,
+      nbCountRows(docs, id, text, label, buckets))
 
-  private def nbCountsWrite(docs: org.apache.spark.sql.DataFrame,
-                            id: String, text: String, label: String,
-                            dir: String, batchId: Long, buckets: Int,
-                            featTable: String, docsTable: String,
-                            marker: String): Boolean = {
-    import org.apache.spark.sql.functions.{col, count}
-    val spark = docs.sparkSession
-    val featShard = s"$dir/$featTable/batch=$batchId"
-    val docShard = s"$dir/$docsTable/batch=$batchId"
-    var wrote = false
-    if (ShardWrite.claim(spark, featShard)) {
-      dsirFeatures(docs.withColumn("__c", col(label)), id, text, buckets,
-          carry = Seq("__c"))
-        .groupBy("__c", "b").agg(count(lit(1)).as("cnt"))
-        .write.parquet(featShard)
-      wrote = true
-    }
-    if (ShardWrite.claim(spark, docShard)) {
-      docs.groupBy(col(label).as("__c")).agg(count(lit(1)).as("ndocs"))
-        .write.parquet(docShard)
-      wrote = true
-    }
-    // pairing marker LAST: both halves are now complete. Idempotent —
-    // an empty-file create over an existing marker is a no-op replay.
-    val mk = new org.apache.hadoop.fs.Path(s"$dir/_pairs/$marker=$batchId")
-    val fs = mk.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(mk)) {
-      fs.mkdirs(mk.getParent)
-      fs.create(mk, true).close()
-    }
-    wrote
-  }
+  private def nbChannel(dir: String) = ShardWrite.CountChannel(
+    s"$dir/counts", s"$dir/retire",
+    "kind STRING, c STRING, b BIGINT, n BIGINT", Seq("kind", "c", "b"))
 
-  /** Batch ids whose feat AND docs shards both committed (per channel:
-    * `batch=` markers for ingest, `retire=` for tombstones) — the only
-    * batches [[nbModelFromCounts]] may assemble from. */
-  private def nbPairedBatches(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, marker: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_pairs")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(s"$marker="))
-      .map(_.stripPrefix(s"$marker=").toLong)
-  }
+  /** One batch's NB counts, kind-tagged: `f` rows are per-(class,
+    * bucket) feature counts, `d` rows per-class doc counts (null b). */
+  private def nbCountRows(docs: org.apache.spark.sql.DataFrame, id: String,
+                          text: String, label: String, buckets: Int)
+      : org.apache.spark.sql.DataFrame =
+    dsirFeatures(docs.withColumn("__c", col(label)), id, text, buckets,
+        carry = Seq("__c"))
+      .groupBy("__c", "b").agg(count(lit(1)).as("n"))
+      .select(lit("f").as("kind"), col("__c").cast("string").as("c"),
+        col("b"), col("n"))
+      .unionByName(docs.groupBy(col(label).cast("string").as("c"))
+        .agg(count(lit(1)).as("n"))
+        .select(lit("d").as("kind"), col("c"),
+          lit(null).cast("bigint").as("b"), col("n")))
+
+  /** [[compactUnigramCounts]] on the NB channels: kind-tagged rows
+    * re-sum per (kind, class, bucket), both channels; the assembled
+    * model is bit-stable across the fold. */
+  def compactNbCounts(spark: org.apache.spark.sql.SparkSession,
+                      dir: String): ((Int, Int), (Int, Int)) =
+    nbChannel(dir).compact(spark)
 
   /** Assemble the NB model from the accumulated count shards — the same
     * integer counts, the same [[nbAssemble]] arithmetic, so the
@@ -1015,44 +938,17 @@ object TextAnalysis {
     * over the union ([[graft.TextRulesSpec]] pins it; `q_nb_incr`
     * shares `q_nb_classify`'s oracle). Feature totals need no sidecar:
     * every feature lands in exactly one (class, bucket) cell, so
-    * tot(c) = Σ_b cnt. Explicit schemas — an all-empty shard set reads
-    * as zero counts, never a schema-inference throw. Only batches the
-    * `_pairs` markers name are read (partition-pruned on `batch`), so a
-    * half-committed append — feat landed, docs didn't — is invisible
-    * here until its replay completes both halves. */
+    * tot(c) = Σ_b cnt. A fully-retired class nets to no doc row, so it
+    * carries no prior mass and leaves the grid. */
   def nbModelFromCounts(spark: org.apache.spark.sql.SparkSession,
                         dir: String, buckets: Int = 1024,
                         alpha: Double = 1.0): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, sum}
-    val paired = nbPairedBatches(spark, dir, "batch")
-    val retired = nbPairedBatches(spark, dir, "retire")
-    // marker-named batches only, per channel; a channel whose dir is
-    // missing (or whose marker set is empty) contributes zero rows.
-    // The `batch` partition column only exists when the dir does, so
-    // the filter is applied inside the non-empty branch.
-    def channel(table: String, schema: String, keep: Seq[Long],
-                sign: Int, cols: Seq[String]) = {
-      val base = ShardWrite.readOrEmpty(spark, s"$dir/$table", schema)
-      val filtered =
-        if (keep.isEmpty || !base.columns.contains("batch"))
-          base.where(lit(keep.nonEmpty))
-        else base.where(col("batch").isin(keep: _*))
-      filtered.select(cols.init.map(col) :+
-        (col(cols.last) * sign).as(cols.last): _*)
-    }
-    val featSchema = "__c STRING, b BIGINT, cnt BIGINT"
-    val docsSchema = "__c STRING, ndocs BIGINT"
-    val cnt = channel("feat", featSchema, paired, 1, Seq("__c", "b", "cnt"))
-      .unionByName(
-        channel("feat_retire", featSchema, retired, -1, Seq("__c", "b", "cnt")))
-      .groupBy("__c", "b").agg(sum(col("cnt")).as("cnt"))
+    val netted = nbChannel(dir).netted(spark)
+    val cnt = netted.where(col("kind") === "f")
+      .select(col("c").as("__c"), col("b"), col("n").as("cnt"))
     val tot = cnt.groupBy("__c").agg(sum(col("cnt")).as("tot"))
-    val prior = channel("docs", docsSchema, paired, 1, Seq("__c", "ndocs"))
-      .unionByName(
-        channel("docs_retire", docsSchema, retired, -1, Seq("__c", "ndocs")))
-      .groupBy("__c").agg(sum(col("ndocs")).as("ndocs"))
-      // a fully-retired class carries no prior mass and leaves the grid
-      .where(col("ndocs") > 0)
+    val prior = netted.where(col("kind") === "d")
+      .select(col("c").as("__c"), col("n").as("ndocs"))
     nbAssemble(spark, cnt, tot, prior, buckets, alpha)
   }
 
@@ -1165,13 +1061,11 @@ object TextAnalysis {
                            id: String, text: String, group: String,
                            dir: String, batchId: Long,
                            buckets: Int = 1024): Boolean =
-    ShardWrite.claimBatch(batch.sparkSession, dir, batchId) match {
-      case None => false
-      case Some(shard) =>
-        sourceKlCountRows(batch, id, text, group, buckets)
-          .write.parquet(shard)
-        true
-    }
+    sourceKlChannel(dir).append(batchId,
+      sourceKlCountRows(batch, id, text, group, buckets))
+
+  private def sourceKlChannel(dir: String) = ShardWrite.CountChannel(
+    dir, s"$dir/retire", "g STRING, b BIGINT, cg BIGINT", Seq("g", "b"))
 
   /** The per-batch (group, bucket) counts BOTH drift channels write —
     * one definition so ingest and retire can never drift (the
@@ -1195,33 +1089,22 @@ object TextAnalysis {
                            id: String, text: String, group: String,
                            dir: String, batchId: Long,
                            buckets: Int = 1024): Boolean =
-    ShardWrite.claimBatch(batch.sparkSession, s"$dir/retire",
-        batchId) match {
-      case None => false
-      case Some(shard) =>
-        sourceKlCountRows(batch, id, text, group, buckets)
-          .write.parquet(shard)
-        true
-    }
+    sourceKlChannel(dir).retire(batchId,
+      sourceKlCountRows(batch, id, text, group, buckets))
 
-  /** Fold the drift monitor's count shards (ingest channel) into one
-    * merged m-shard — counts re-aggregate by sum
-    * ([[ShardWrite.compactShards]] discipline). */
+  /** Fold the drift monitor's count channels into one merged m-shard
+    * each — counts re-aggregate by sum ([[ShardWrite.CountChannel]]).
+    * Returns the ingest table's (shards in, shards out). */
   def compactSourceKlCounts(spark: org.apache.spark.sql.SparkSession,
-                            dir: String): (Int, Int) = {
-    import org.apache.spark.sql.functions.{col, sum}
-    ShardWrite.compactShards(spark, dir, "g STRING, b BIGINT, cg BIGINT")(
-      _.groupBy("g", "b").agg(sum(col("cg")).as("cg")))
-  }
+                            dir: String): (Int, Int) =
+    sourceKlChannel(dir).compact(spark)._1
 
-  /** Fold the bigram LM's kind-tagged count shards into one merged
-    * m-shard — counts re-aggregate by sum per (kind, key). */
+  /** Fold the bigram LM's kind-tagged count channels into one merged
+    * m-shard each — counts re-aggregate by sum per (kind, key).
+    * Returns the ingest table's (shards in, shards out). */
   def compactBigramCounts(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): (Int, Int) = {
-    import org.apache.spark.sql.functions.{col, sum}
-    ShardWrite.compactShards(spark, dir, "kind STRING, k STRING, c BIGINT")(
-      _.groupBy("kind", "k").agg(sum(col("c")).as("c")))
-  }
+                          dir: String): (Int, Int) =
+    bigramChannel(dir).compact(spark)._1
 
   /** [[sourceKl]] SERVED from the maintained counts: ingest − retire
     * nets to the retained corpus's exact (group, bucket) counts (rows
@@ -1233,14 +1116,8 @@ object TextAnalysis {
                          dir: String, group: String,
                          buckets: Int = 1024, alpha: Double = 1.0)
       : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, sum}
-    val schema = "g STRING, b BIGINT, cg BIGINT"
-    val netted = ShardWrite.readShards(spark, dir, schema)
-      .unionByName(ShardWrite.readShards(spark, s"$dir/retire", schema)
-        .select(col("g"), col("b"), (-col("cg")).as("cg")))
-      .groupBy("g", "b").agg(sum(col("cg")).as("cg"))
-      .where(col("cg") > 0)
-    sourceKlFromGroupCounts(netted.withColumnRenamed("g", group),
+    sourceKlFromGroupCounts(
+      sourceKlChannel(dir).netted(spark).withColumnRenamed("g", group),
       group, buckets, alpha)
   }
 

@@ -412,10 +412,8 @@ object PipelineQueries {
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"uniincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        TA.unigramCountsAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", dir, b)
+      appendSplit(docs, "doc_id")(
+        TA.unigramCountsAppend(_, "doc_id", "text", dir, _))
     }
     TA.unigramXentFromCounts(par(documents(s, d)), "doc_id", "text", dir)
   }
@@ -686,10 +684,7 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"bpeincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        Bpe.wordCountsAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "text", dir, b)
+      appendSplit(docs, "doc_id")(Bpe.wordCountsAppend(_, "text", dir, _))
     }
     Bpe.mergesDf(s,
       Bpe.trainMerges(Bpe.wordCountsFromShards(s, dir), Bpe.DefaultMerges))
@@ -705,10 +700,7 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"bperet:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        Bpe.wordCountsAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "text", dir, b)
+      appendSplit(docs, "doc_id")(Bpe.wordCountsAppend(_, "text", dir, _))
       Bpe.wordCountsRetire(docs.where(RetiredPred), "text", dir, 0L)
     }
     Bpe.mergesDf(s,
@@ -934,10 +926,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"boilincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        Dedup.shingleDfAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", dir, b)
+      appendSplit(docs, "doc_id")(
+        Dedup.shingleDfAppend(_, "doc_id", "text", dir, _))
     }
     Dedup.boilerplateFromShards(s, dir, BoilerMinDf, BoilerTopK)
   }
@@ -958,10 +948,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"boilret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        Dedup.shingleDfAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", dir, b)
+      appendSplit(docs, "doc_id")(
+        Dedup.shingleDfAppend(_, "doc_id", "text", dir, _))
       Dedup.shingleDfRetire(docs.where(RetiredPred), "doc_id", "text",
         dir, 0L)
     }
@@ -991,10 +979,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"winnowincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        Dedup.winnowFpAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", dir, b)
+      appendSplit(docs, "doc_id")(
+        Dedup.winnowFpAppend(_, "doc_id", "text", dir, _))
     }
     Dedup.winnowPairsFromShards(s, dir)
   }
@@ -1007,10 +993,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"winnowret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        Dedup.winnowFpAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", s"$dir/fps", b)
+      appendSplit(docs, "doc_id")(
+        Dedup.winnowFpAppend(_, "doc_id", "text", s"$dir/fps", _))
       Dedup.windowRetireAppend(docs.where(RetiredPred), "doc_id",
         s"$dir/ret", 0L)
     }
@@ -1026,10 +1010,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"winnowfold:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        Dedup.winnowFpAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", s"$dir/fps", b)
+      appendSplit(docs, "doc_id")(
+        Dedup.winnowFpAppend(_, "doc_id", "text", s"$dir/fps", _))
       Dedup.windowRetireAppend(docs.where(RetiredPred), "doc_id",
         s"$dir/ret", 0L)
       require(Dedup.foldRetiredWinnowFps(s, s"$dir/fps", s"$dir/ret"),
@@ -1091,10 +1073,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
         s"princr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
       val pairs = Dedup.minhashPairs(documents(s, d), "doc_id", "text")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try for (b <- 0L until 3L)
-        graft.functions.GraphRank.pairsAppend(
-          pairs.where(TA.hashBucket(col("doc_a"), 3) === b),
-          "doc_a", "doc_b", dir, b)
+      try appendSplit(pairs, "doc_a")(
+        graft.functions.GraphRank.pairsAppend(_, "doc_a", "doc_b", dir, _))
       finally pairs.unpersist()
     }
 
@@ -1345,10 +1325,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"substrincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        Dedup.substrWindowsAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", dir, b, L = 8)
+      appendSplit(docs, "doc_id")(
+        Dedup.substrWindowsAppend(_, "doc_id", "text", dir, _, L = 8))
     }
     Dedup.exactSubstrSpansFromShards(s, dir)
   }
@@ -1365,10 +1343,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"substrret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        Dedup.substrWindowsAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", s"$dir/win", b, L = 8)
+      appendSplit(docs, "doc_id")(
+        Dedup.substrWindowsAppend(_, "doc_id", "text", s"$dir/win", _, L = 8))
       Dedup.windowRetireAppend(docs.where(RetiredPred), "doc_id",
         s"$dir/ret", 0L)
     }
@@ -1386,10 +1362,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"substrfold:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        Dedup.substrWindowsAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", s"$dir/win", b, L = 8)
+      appendSplit(docs, "doc_id")(
+        Dedup.substrWindowsAppend(_, "doc_id", "text", s"$dir/win", _, L = 8))
       Dedup.windowRetireAppend(docs.where(RetiredPred), "doc_id",
         s"$dir/ret", 0L)
       // require: the serve below runs with NO retirePath, so a fold
@@ -1412,10 +1386,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val dirty = lineDedupFixture(s, d)
     val dir = cachedArtifacts(
         s"lineincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        Dedup.lineStatsAppend(
-          dirty.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", dir, b)
+      appendSplit(dirty, "doc_id")(
+        Dedup.lineStatsAppend(_, "doc_id", "text", dir, _))
     }
     Dedup.lineDedupFromShards(dirty, "doc_id", "text", dir, minDocs = 5)
   }
@@ -1433,10 +1405,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val dirty = lineDedupFixture(s, d)
     val dir = cachedArtifacts(
         s"lineret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        Dedup.lineStatsAppend(
-          dirty.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", s"$dir/cnt", b)
+      appendSplit(dirty, "doc_id")(
+        Dedup.lineStatsAppend(_, "doc_id", "text", s"$dir/cnt", _))
       Dedup.lineStatsRetire(dirty.where(RetiredPred), "doc_id", "text",
         s"$dir/ret", 0L)
     }
@@ -1460,10 +1430,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"biincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        TA.bigramCountsAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", dir, b)
+      appendSplit(docs, "doc_id")(
+        TA.bigramCountsAppend(_, "doc_id", "text", dir, _))
     }
     TA.bigramXentFromCounts(docs, "doc_id", "text", dir)
   }
@@ -1478,10 +1446,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"biret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        TA.bigramCountsAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", dir, b)
+      appendSplit(docs, "doc_id")(
+        TA.bigramCountsAppend(_, "doc_id", "text", dir, _))
       TA.bigramCountsRetire(docs.where(RetiredPred), "doc_id", "text",
         dir, 0L)
     }
@@ -1541,7 +1507,7 @@ tempplan AS (SELECT source, n_docs, n_tokens,
   }
 
   /** The INCREMENTALLY-MAINTAINED classifier: three hash-split batches
-    * append per-class feature AND doc-count shards
+    * each append one shard of per-class feature AND doc counts
     * ([[TA.nbCountsAppend]]); the model assembles from the accumulated
     * counts ([[TA.nbModelFromCounts]]) — counts (and priors) are
     * additive, so online maintenance ≡ batch retrain, pinned to
@@ -1552,10 +1518,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"nbincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        TA.nbCountsAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", "lang", dir, b)
+      appendSplit(docs, "doc_id")(
+        TA.nbCountsAppend(_, "doc_id", "text", "lang", dir, _))
     }
     TA.nbClassify(par(documents(s, d)), "doc_id", "text",
       TA.nbModelFromCounts(s, dir))
@@ -1572,10 +1536,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"dsirincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        TA.dsirCountsAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", col("lang") === "en", dir, b)
+      appendSplit(docs, "doc_id")(TA.dsirCountsAppend(
+        _, "doc_id", "text", col("lang") === "en", dir, _))
     }
     TA.dsirScoreWith(par(documents(s, d)), "doc_id", "text",
       TA.dsirModelFromCounts(s, dir))
@@ -1626,10 +1588,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"uniret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        TA.unigramCountsAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", dir, b)
+      appendSplit(docs, "doc_id")(
+        TA.unigramCountsAppend(_, "doc_id", "text", dir, _))
       TA.unigramCountsRetire(docs.where(RetiredPred), "doc_id", "text",
         dir, 0L)
     }
@@ -1637,18 +1597,16 @@ tempplan AS (SELECT source, n_docs, n_tokens,
   }
 
   /** q_nb_retire: the classifier's count shards with tombstones — the
-    * retire channel subtracts likelihood AND prior mass under the
-    * split-write pairing markers ([[TA.nbCountsRetire]]); the model
+    * retire channel subtracts likelihood AND prior mass, both in one
+    * shard per batch ([[TA.nbCountsRetire]]); the model
     * assembled over the retained counts classifies the retained docs.
     * Oracle = `q_nb_classify`'s SQL over the retained corpus. */
   def nbRetireQ(s: SparkSession, d: String): DataFrame = {
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"nbret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        TA.nbCountsAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", "lang", dir, b)
+      appendSplit(docs, "doc_id")(
+        TA.nbCountsAppend(_, "doc_id", "text", "lang", dir, _))
       TA.nbCountsRetire(docs.where(RetiredPred), "doc_id", "text", "lang",
         dir, 0L)
     }
@@ -1664,10 +1622,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"dsirret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        TA.dsirCountsAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", col("lang") === "en", dir, b)
+      appendSplit(docs, "doc_id")(TA.dsirCountsAppend(
+        _, "doc_id", "text", col("lang") === "en", dir, _))
       TA.dsirCountsRetire(docs.where(RetiredPred), "doc_id", "text",
         col("lang") === "en", dir, 0L)
     }
@@ -1685,9 +1641,7 @@ tempplan AS (SELECT source, n_docs, n_tokens,
       .select(col("doc_id"), explode(TA.tokens(col("text"))).as("v"))
     val dir = cachedArtifacts(
         s"cmsret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        Sketches.cmsAppend(
-          items.where(TA.hashBucket(col("doc_id"), 3) === b), "v", dir, b)
+      appendSplit(items, "doc_id")(Sketches.cmsAppend(_, "v", dir, _))
       Sketches.cmsRetire(items.where(RetiredPred), "v", dir, 0L)
     }
     Sketches.cmsEstimate(Sketches.cmsFromShards(s, dir), CmsProbeTerms)
@@ -1834,8 +1788,7 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val dir = cachedArtifacts(
         s"wandfold:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
       val docs = par(documents(s, d))
-      for (b <- 0L until 3L) {
-        val slice = docs.where(TA.hashBucket(col("doc_id"), 3) === b)
+      appendSplit(docs, "doc_id") { (slice, b) =>
         graft.streaming.PostingsIndex.tfIndexBatch(
           slice, b, s"$dir/tf", s"$dir/dl")
         graft.streaming.PostingsIndex.wandIndexBatch(
@@ -2221,10 +2174,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"klincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        TA.sourceKlCountsAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", "source", dir, b)
+      appendSplit(docs, "doc_id")(
+        TA.sourceKlCountsAppend(_, "doc_id", "text", "source", dir, _))
     }
     TA.sourceKlFromCounts(s, dir, "source")
   }
@@ -2239,10 +2190,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     val docs = par(documents(s, d))
     val dir = cachedArtifacts(
         s"klret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        TA.sourceKlCountsAppend(
-          docs.where(TA.hashBucket(col("doc_id"), 3) === b),
-          "doc_id", "text", "source", dir, b)
+      appendSplit(docs, "doc_id")(
+        TA.sourceKlCountsAppend(_, "doc_id", "text", "source", dir, _))
       TA.sourceKlCountsRetire(docs.where(RetiredPred),
         "doc_id", "text", "source", dir, 0L)
     }
@@ -2362,9 +2311,7 @@ tempplan AS (SELECT source, n_docs, n_tokens,
       .select(col("doc_id"), explode(TA.tokens(col("text"))).as("v"))
     val dir = cachedArtifacts(
         s"cmsincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      for (b <- 0L until 3L)
-        Sketches.cmsAppend(
-          items.where(TA.hashBucket(col("doc_id"), 3) === b), "v", dir, b)
+      appendSplit(items, "doc_id")(Sketches.cmsAppend(_, "v", dir, _))
     }
     Sketches.cmsEstimate(Sketches.cmsFromShards(s, dir), CmsProbeTerms)
   }
@@ -2661,12 +2608,36 @@ tempplan AS (SELECT source, n_docs, n_tokens,
         f.getLen * 17L + f.getModificationTime).sum)
     }
   }
-  private[queries] def cachedArtifacts(key: String)(build: String => Unit): String =
+  private[graft] def cachedArtifacts(key: String)(build: String => Unit): String =
     artifactCache.computeIfAbsent(key, { _ =>
       val dir = java.nio.file.Files.createTempDirectory("graft-ann-art").toString
       build(dir)
       dir
     })
+
+  // the cached artifacts are scratch: they must not outlive the JVM
+  sys.addShutdownHook(deleteCachedArtifacts())
+
+  /** Delete every cached artifact directory and forget its key (a later
+    * [[cachedArtifacts]] call rebuilds). Runs at JVM exit. */
+  private[graft] def deleteCachedArtifacts(): Unit =
+    artifactCache.keySet.forEach { key =>
+      Option(artifactCache.remove(key)).foreach { dir =>
+        val root = java.nio.file.Paths.get(dir)
+        if (java.nio.file.Files.exists(root)) {
+          val walk = java.nio.file.Files.walk(root)
+          try walk.sorted(java.util.Comparator.reverseOrder())
+            .forEach(p => java.nio.file.Files.deleteIfExists(p))
+          finally walk.close()
+        }
+      }
+    }
+
+  /** Append `df` as three batches 0..2, hash-split on `key` — the ingest
+    * shape of the incrementally-maintained fixtures. */
+  private def appendSplit(df: DataFrame, key: String)(
+      append: (DataFrame, Long) => Unit): Unit =
+    for (b <- 0L until 3L) append(df.where(TA.hashBucket(col(key), 3) === b), b)
 
   /** The persisted-PQ probe — [[Similarity.pqWriteArtifacts]] →
     * [[Similarity.pqProbeFromDir]] through a REAL parquet artifact

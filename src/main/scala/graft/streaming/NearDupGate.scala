@@ -299,7 +299,7 @@ object NearDupGate {
   /** TOMBSTONES for the gate's memory: docs leaving the corpus
     * (takedowns, license pulls) append their ids to
     * `$statePath/retire/batch=<id>` under the standard `_SUCCESS`
-    * claim discipline ([[graft.functions.ShardWrite.claimBatch]] —
+    * claim discipline ([[graft.functions.ShardWrite.appendBatch]] —
     * replays skip, torn shards heal). Effect is IMMEDIATE at probe
     * time: [[curateBatch]] anti-joins the channel out of every seen
     * band/fingerprint row before the admit decision, so a retired
@@ -325,13 +325,8 @@ object NearDupGate {
     * design. Returns false iff the shard already existed. */
   def retireAppend(docIds: DataFrame, statePath: String,
                    batchId: Long): Boolean =
-    graft.functions.ShardWrite
-      .claimBatch(docIds.sparkSession, retireDir(statePath), batchId) match {
-      case None => false
-      case Some(shard) =>
-        docIds.select(col("doc_id")).distinct().write.parquet(shard)
-        true
-    }
+    graft.functions.ShardWrite.appendIds(docIds, col("doc_id"),
+      retireDir(statePath), batchId)
 
   /** The accumulated tombstone set, or None when the channel was never
     * written (the common case costs one existence check and adds zero

@@ -670,13 +670,8 @@ object PostingsIndex {
     * false iff the shard already existed (replay). */
   def retireAppend(docIds: DataFrame, retirePath: String,
                    batchId: Long): Boolean =
-    graft.functions.ShardWrite
-      .claimBatch(docIds.sparkSession, retirePath, batchId) match {
-      case None => false
-      case Some(shard) =>
-        docIds.select(col("doc_id")).distinct().write.parquet(shard)
-        true
-    }
+    graft.functions.ShardWrite.appendIds(docIds, col("doc_id"),
+      retirePath, batchId)
 
   /** The accumulated tombstone set (zero rows when the channel was
     * never written); reads through the compaction watermark rule. */

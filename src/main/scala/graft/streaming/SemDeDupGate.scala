@@ -135,13 +135,8 @@ object SemDeDupGate {
     * false iff the shard already existed (replay). */
   def retireAppend(vecIds: DataFrame, statePath: String,
                    batchId: Long): Boolean =
-    graft.functions.ShardWrite
-      .claimBatch(vecIds.sparkSession, retireDir(statePath), batchId) match {
-      case None => false
-      case Some(shard) =>
-        vecIds.select(col("vid")).distinct().write.parquet(shard)
-        true
-    }
+    graft.functions.ShardWrite.appendIds(vecIds, col("vid"),
+      retireDir(statePath), batchId)
 
   private def retiredVids(spark: SparkSession,
                           statePath: String): Option[DataFrame] = {

@@ -7,8 +7,7 @@ import graft.functions.{ShardWrite, Sketches, TextAnalysis => TA}
   * discipline ([[ShardWrite.compactShards]]): folding is bit-stable,
   * replays of consumed batches skip, and the crash window between the
   * merged commit and the consumed-dir deletes never double-counts at
-  * read (the above-watermark rule). The NB family is deliberately NOT
-  * compactable — its `_pairs` markers carry per-batch identity.
+  * read (the above-watermark rule).
   */
 class CountShardCompactionSpec extends SparkSpec {
   import spark.implicits._
@@ -205,5 +204,30 @@ class CountShardCompactionSpec extends SparkSpec {
     val (sIn, sOut) = Dedup.compactShingleDf(spark, sdir)
     assert(sIn == 3 && sOut == 1)
     assert(hot == hBefore, "drop list drifted across the compaction")
+  }
+
+  test("nb channels fold bit-stable, consumed replay skips") {
+    val labeled = docs.withColumn("lang",
+      when($"doc_id" % 2 === 0, "a").otherwise("b"))
+    val dir = tmp("nb-compact")
+    for (b <- 0L until 3L)
+      assert(TA.nbCountsAppend(labeled.where($"doc_id" % 3 === b),
+        "doc_id", "text", "lang", dir, b))
+    assert(TA.nbCountsRetire(labeled.where($"doc_id" === 7L),
+      "doc_id", "text", "lang", dir, 0L))
+    def model = TA.nbModelFromCounts(spark, dir).collect().map(r =>
+      (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSet
+    val before = model
+    assert(before == TA.nbModel(labeled.where($"doc_id" =!= 7L),
+        "doc_id", "text", "lang").collect().map(r =>
+      (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSet)
+    val ((cIn, cOut), (rIn, rOut)) = TA.compactNbCounts(spark, dir)
+    assert(cIn == 3 && cOut == 1, s"counts $cIn->$cOut")
+    assert(rIn <= 1 && rOut <= 1) // one retire shard: no-op
+    assert(model == before, "NB model drifted across the compaction")
+    // a replay of a consumed batch skips at the watermark
+    assert(!TA.nbCountsAppend(labeled.where($"doc_id" % 3 === 1L),
+      "doc_id", "text", "lang", dir, 1L))
+    assert(model == before)
   }
 }

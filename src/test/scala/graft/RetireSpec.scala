@@ -68,8 +68,8 @@ class RetireSpec extends SparkSpec {
     def rows(m: org.apache.spark.sql.DataFrame) = m.collect().map(r =>
       (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSet
     val full = rows(TA.nbModelFromCounts(spark, dir))
-    // crash window: feat_retire lands, docs_retire + marker never do —
-    // simulate by retiring then rewinding the docs half and the marker
+    // crash window: the retire shard lands but its claim never
+    // completes — simulate by retiring then rewinding its _SUCCESS
     assert(TA.nbCountsRetire(ret, "doc_id", "text", "lang", dir, 0L))
     val retiredModel = rows(TA.nbModelFromCounts(spark, dir))
     assert(retiredModel == rows(
@@ -78,12 +78,10 @@ class RetireSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.delete(
-      new org.apache.hadoop.fs.Path(s"$dir/docs_retire/batch=0"), true))
-    assert(fs.delete(
-      new org.apache.hadoop.fs.Path(s"$dir/_pairs/retire=0"), false))
+      new org.apache.hadoop.fs.Path(s"$dir/retire/batch=0/_SUCCESS"), false))
     assert(rows(TA.nbModelFromCounts(spark, dir)) == full,
       "half-committed retire batch leaked into the assembled model")
-    // the replayed retire completes the docs half + marker → applied
+    // the replayed retire completes the claim → applied
     assert(TA.nbCountsRetire(ret, "doc_id", "text", "lang", dir, 0L))
     assert(rows(TA.nbModelFromCounts(spark, dir)) == retiredModel)
   }

@@ -400,33 +400,31 @@ class TextRulesSpec extends SparkSpec {
     val incr = modelRows(TA.nbModelFromCounts(spark, dir))
     assert(incr == modelRows(TA.nbModel(train, "doc_id", "text", "lang")),
       "count-assembled model diverged from the batch retrain")
-    // full replay: both shards complete → skipped, model unchanged
+    // full replay: the shard is complete → skipped, model unchanged
     assert(!TA.nbCountsAppend(train.where($"doc_id" >= 4), "doc_id", "text",
       "lang", dir, 1L))
     assert(modelRows(TA.nbModelFromCounts(spark, dir)) == incr)
-    // split-write crash: the doc-count shard of batch 1 is torn — the
-    // replay rewrites ONLY it (feat shard skips), and the model heals
+    // torn shard: batch 1's claim lost its _SUCCESS — the replay
+    // rewrites it, and the model heals
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.delete(
-      new org.apache.hadoop.fs.Path(s"$dir/docs/batch=1/_SUCCESS"), false))
+      new org.apache.hadoop.fs.Path(s"$dir/counts/batch=1/_SUCCESS"), false))
     assert(TA.nbCountsAppend(train.where($"doc_id" >= 4), "doc_id", "text",
-      "lang", dir, 1L), "torn doc-count shard was skipped as a replay")
+      "lang", dir, 1L), "torn count shard was skipped as a replay")
     assert(modelRows(TA.nbModelFromCounts(spark, dir)) == incr)
-    // crash WINDOW between the two shard commits: batch 2's feat shard
-    // lands but its docs shard (and pairing marker) never do — the
-    // reader must NOT assemble a model whose likelihoods include batch
-    // 2 but whose priors don't; the unpaired batch is invisible
+    // crash WINDOW: batch 2's shard is written but its claim never
+    // completes — the reader must NOT assemble a model from any part of
+    // it (likelihoods without priors); the unclaimed batch is invisible
     val extra = Seq((8L, "b", "epsilon zeta shared")).toDF(
       "doc_id", "lang", "text")
     assert(TA.nbCountsAppend(extra, "doc_id", "text", "lang", dir, 2L))
-    // rewind to the crash point: docs shard + marker gone, feat kept
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$dir/docs/batch=2"), true))
+    // rewind to the crash point: the shard's _SUCCESS gone, rows kept
     assert(fs.delete(
-      new org.apache.hadoop.fs.Path(s"$dir/_pairs/batch=2"), false))
+      new org.apache.hadoop.fs.Path(s"$dir/counts/batch=2/_SUCCESS"), false))
     assert(modelRows(TA.nbModelFromCounts(spark, dir)) == incr,
       "half-committed batch leaked into the assembled model")
-    // the replayed append completes the docs half + marker → now counted
+    // the replayed append completes the claim → now counted
     assert(TA.nbCountsAppend(extra, "doc_id", "text", "lang", dir, 2L))
     assert(modelRows(TA.nbModelFromCounts(spark, dir)) ==
       modelRows(TA.nbModel(train.union(extra), "doc_id", "text", "lang")))
