@@ -2,7 +2,7 @@ package graft
 
 import java.util.Locale
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Per-round benchmark main (driver contract): runs every registry query
   * at SPARK_GRAFT_SF_DIR, prints ONE JSON line.
@@ -50,22 +50,13 @@ object Bench {
 
   /** Full-output materialization: every column of every row is computed
     * and handed to the (discarding) noop sink. The shared timing action
-    * for Bench and [[BenchProbe]]. */
+    * for Bench and [[ProfileProbe]]. */
   def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionTuning.tuned(SparkSession.builder())
-      .withExtensions(new GraftExtensions())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session()
 
     val warmDir = {
       val w = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
@@ -256,48 +247,6 @@ object Bench {
       .getOrElse(lineOf("{}", extraOf(byTime)))
     println(if (fullLine.length <= MaxLine) lineOf(fullQs, minExtra)
       else headline)
-    spark.stop()
-  }
-}
-
-/** Cold-vs-warm honesty probe for the persisted-index queries
-  * (`q_sim_pq_probe` / `q_sim_ivfpq_probe` / `q_ann_join_pq`): the bench's
-  * min-of-3 measures the WARM zero-training probe (artifact dirs cached
-  * per corpus per JVM — the index-once/probe-many serving split), so this
-  * main records what the first (cold) touch pays: run 1 trains and writes
-  * the index artifacts, runs 2-3 only probe the stored codes. Codegen/JIT
-  * is pre-warmed at the sf0.001 sibling (a DIFFERENT artifact cache key —
-  * the bench-SF artifacts stay cold for run 1). The ivfpq artifacts are
-  * SHARED by `q_sim_ivfpq_probe` and `q_ann_join_pq`; pass a single query
-  * name to measure its cold number in its own JVM.
-  * `sbt "runMain graft.ColdWarmProbe [names…]"`. */
-object ColdWarmProbe {
-  def main(args: Array[String]): Unit = {
-    val names: Seq[String] = if (args.nonEmpty) args.toSeq
-      else Seq("q_sim_pq_probe", "q_sim_ivfpq_probe", "q_ann_join_pq",
-        "q_sim_ivfpq_rerank_probe")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SessionTuning.tuned(SparkSession.builder())
-      .withExtensions(new GraftExtensions())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    for (n <- names)
-      try Bench.materialize(SparkEntry.queries(n)(spark, "/root/testdata/sf0.001"))
-      catch { case e: Throwable =>
-        System.err.println(s"[coldwarm] warmup $n failed: ${e.getMessage}") }
-    for (n <- names; r <- 1 to 3) {
-      val t0 = System.nanoTime()
-      Bench.materialize(SparkEntry.queries(n)(spark, sfDir))
-      val secs = (System.nanoTime() - t0) / 1e9
-      println(f"[coldwarm] $n run$r ($sfDir): $secs%.2f s" +
-        (if (r == 1) " (cold: trains + writes artifacts)" else " (warm probe)"))
-    }
     spark.stop()
   }
 }

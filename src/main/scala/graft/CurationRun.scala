@@ -287,16 +287,7 @@ object CurationRun {
 
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: CurationRun <sfDir> <outDir>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionTuning.tuned(SparkSession.builder())
-      .withExtensions(new GraftExtensions())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session()
     val ran = run(spark, args(0), args(1))
     val skipped = Stages.filterNot(ran.contains)
     println(s"[curation] ran: ${ran.mkString(", ")}" +

@@ -1,29 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `explain("formatted")` of registry queries to files — the
   * optimization rounds' before/after plan evidence
   * (`plans/r{N}/<query>_<suffix>.txt`).
   *
   * Usage: `runMain graft.PlanDump <outDir> <suffix> name1 [name2 ...]`
-  * Session shape mirrors [[Bench]] (tuned, local[$SPARK_GRAFT_CPUS],
-  * shuffle partitions = cpus, AQE on) so the dumped plans are the
-  * bench's initial plans. */
+  * Runs on [[SessionTuning.session]], the session [[Bench]] uses, so
+  * the dumped plans are the bench's initial plans. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <outDir> <suffix> names...")
     val (outDir, suffix, names) = (args(0), args(1), args.drop(2).toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning.tuned(SparkSession.builder())
-      .withExtensions(new GraftExtensions())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionTuning.session()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     for (n <- names) {

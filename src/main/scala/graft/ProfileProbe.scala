@@ -16,8 +16,9 @@ import org.apache.spark.sql.SparkSession
   * actions; mostly `exec` with few tasks needs parallelism; mostly
   * `exec` with many stages needs fewer shuffles.
   *
-  * Usage: `runMain graft.ProfileProbe [--cpus=N] [--runs=K] [q_name...]`
-  * (no names = the whole registry). Warms at the sf0.001 sibling like
+  * Usage: `runMain graft.ProfileProbe [--runs=K] [q_name...]` (no names
+  * = the whole registry), on [[SessionTuning.session]] like Bench, so
+  * `SPARK_GRAFT_CPUS` sets the width. Warms at the sf0.001 sibling like
   * Bench so codegen/JIT is out of the numbers.
   */
 object ProfileProbe {
@@ -37,26 +38,15 @@ object ProfileProbe {
 
   def main(args: Array[String]): Unit = {
     val (flags, names0) = args.partition(_.startsWith("--"))
-    val cpus = flags.collectFirst { case f if f.startsWith("--cpus=") =>
-      f.stripPrefix("--cpus=") }.getOrElse("32")
+    require(flags.forall(_.startsWith("--runs=")),
+      s"unknown flag(s) ${flags.mkString(" ")}: the only flag is --runs=K " +
+        "(the width comes from SPARK_GRAFT_CPUS)")
     val runs = flags.collectFirst { case f if f.startsWith("--runs=") =>
       f.stripPrefix("--runs=").toInt }.getOrElse(2)
-    val aqe = flags.collectFirst { case f if f.startsWith("--aqe=") =>
-      f.stripPrefix("--aqe=") }.getOrElse("true")
-    val shuffleParts = flags.collectFirst { case f if f.startsWith("--shuffle=") =>
-      f.stripPrefix("--shuffle=") }.getOrElse(cpus)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = if (names0.nonEmpty) names0.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SessionTuning.tuned(SparkSession.builder())
-      .withExtensions(new GraftExtensions())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session()
 
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)

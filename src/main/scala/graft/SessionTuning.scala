@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shuffle-I/O session tuning shared by the driver-contract mains
-  * (Bench / Verify / the probes) — r17 optimization round, guide §2.1/§6.
+/** The one session the mains run on ([[session]]) and the shuffle-I/O
+  * tuning under it ([[tuned]]) — r17 optimization round, guide §2.1/§6.
   *
   * Measured root cause (thread-dump sampled, `OPTIMIZATION_r17.md`):
   * with `spark.sql.shuffle.partitions = cpus` (32) every exchange has
@@ -29,9 +29,26 @@ import org.apache.spark.sql.SparkSession
   */
 object SessionTuning {
 
+  /** The session of every registry-running main (Bench, Verify,
+    * CurationRun, ProfileProbe, PlanDump): [[tuned]] plus the graft
+    * extensions, `local[$SPARK_GRAFT_CPUS]` (default 4) with as many
+    * shuffle partitions, UTC, AQE on, no UI, WARN logging. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = tuned(SparkSession.builder())
+      .withExtensions(new GraftExtensions())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def tuned(b: SparkSession.Builder): SparkSession.Builder = {
-    b.config("spark.shuffle.sort.bypassMergeThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
+    b.config("spark.shuffle.sort.bypassMergeThreshold", "1")
     // let AQE coalesce the output partitioning of CACHED plans too
     // (r18, guide §2.2 "partitioning scale-adaptive, not constant"):
     // the iterative families persist small working sets (PageRank's

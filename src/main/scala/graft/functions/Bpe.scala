@@ -242,10 +242,11 @@ object Bpe {
     * BPE token count under the merges — the numbers `q_token_budget`/
     * `q_pack` should be denominated in. One explode + one doc-keyed
     * aggregation; the encode itself never shuffles. Encodes every word
-    * OCCURRENCE — and stays the measured default even on a repeat-heavy
-    * corpus (`BpeProbe`: the native encode undercuts the shuffles the
-    * distinct-word shape adds); [[docTokenStatsDistinct]] is the
-    * heavy-encode-regime alternative. */
+    * OCCURRENCE: at 8M occurrences with mean word frequency 160 this
+    * ran 2.3 s against 7.0 s for encoding each distinct word once and
+    * joining the counts back (docs/SCALE.md `BPE vocabulary floor`
+    * row) — the native [[BpeEncode]] costs ~0.26 µs/word, under the
+    * two extra shuffles the distinct-word shape adds per row. */
   def docTokenStats(docs: DataFrame, id: String, text: String,
                     merges: Seq[Merge]): DataFrame =
     docs.select(col(id), explode(TextAnalysis.tokens(col(text))).as("word"))
@@ -253,32 +254,6 @@ object Bpe {
       .groupBy(id).agg(
         count(lit(1)).as("n_words"),
         sum(col("nt")).as("n_bpe_tokens"))
-
-  /** [[docTokenStats]] with the encode run ONCE PER DISTINCT WORD and
-    * the per-(doc, word) occurrence counts joined back — a
-    * vocabulary-sized shuffle bought back by corpus_occurrences/|vocab|
-    * fewer encode calls. MEASURED verdict (`BpeProbe` @8M occurrences,
-    * mean word frequency 160): the per-occurrence [[docTokenStats]]
-    * WINS (2.3 vs 7.0 s) — the native [[BpeEncode]] costs ~0.26 µs/word,
-    * cheaper than what this shape's two extra shuffles cost per row, so
-    * the Zipf-folklore "encode the vocabulary once" default comes from
-    * regex/interpreter-cost encoders, not this one. Reach for this
-    * variant only when per-word encode dominates the shuffle — very
-    * long words, 10⁴-merge tables with dense presence-set hits, or an
-    * encode that leaves codegen. [[graft.BpeSpec]] pins the two shapes
-    * equal row-for-row. */
-  def docTokenStatsDistinct(docs: DataFrame, id: String, text: String,
-                            merges: Seq[Merge]): DataFrame = {
-    val occ = docs
-      .select(col(id), explode(TextAnalysis.tokens(col(text))).as("word"))
-      .groupBy(col(id), col("word")).agg(count(lit(1)).as("occ"))
-    val dict = occ.select("word").distinct()
-      .select(col("word"), tokenCountExpr(col("word"), merges).as("nt"))
-    occ.join(dict, Seq("word"))
-      .groupBy(id).agg(
-        sum(col("occ")).as("n_words"),
-        sum(col("occ") * col("nt")).as("n_bpe_tokens"))
-  }
 
   /** The token-id vocabulary under the merges — the artifact a trainer
     * actually loads: every surviving symbol with its corpus occurrence
@@ -387,7 +362,7 @@ t AS (SELECT doc_id, CAST(sum(len(string_split(trim(ds), '  '))) AS INTEGER)
   // are IDENTICAL (same counts → same argmax sequence). The channel is
   // value-keyed (vocabulary-bounded, not history-bounded), so it keeps
   // subtract-at-read like the other count families; compaction folds
-  // history (CountChannelGrowthProbe measured the curve).
+  // history (docs/SCALE.md `count-channel growth` row measured the curve).
 
   private def countChannel(dir: String) = ShardWrite.CountChannel(
     s"$dir/counts", s"$dir/retire", "word STRING, wc BIGINT", Seq("word"))

@@ -496,13 +496,6 @@ object Dedup {
       .where(col("shared_fps") >= minShared)
   }
 
-  /** Fold the fingerprint shards into one merged m-shard — rows are
-    * doc-disjoint so the merge is the identity union
-    * ([[ShardWrite.compactShards]] discipline). */
-  def compactWinnowShards(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): (Int, Int) =
-    ShardWrite.compactShards(spark, dir, WinnowFpSchema)(identity)
-
   /** PHYSICAL tombstone fold for the fingerprint table — identical
     * contract to [[foldRetiredWindows]] (doc-keyed SET rows, doc-id
     * channel): retired docs' fingerprints drop from the bytes as an

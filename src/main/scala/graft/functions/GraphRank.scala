@@ -28,34 +28,32 @@ import org.apache.spark.storage.StorageLevel
   * row per directed edge) plus a co-partitioned join, and
   * `localCheckpoint` truncates the accumulated lineage. Ranks are
   * |V|-scale rows, edges |E|-scale; nothing corpus-scale ever sits on
-  * the driver. `PageRankProbe` (docs/SCALE.md) measures cost linear in
+  * the driver. docs/SCALE.md's `pagerank` row measured cost linear in
   * the iteration count and shuffle ∝ |E| at millions of edges.
   */
 object GraphRank {
 
+  /** Iterations between [[pageRank]]'s lineage truncations (the final
+    * iteration always truncates). The nested iteration plan grows
+    * LINEARLY (each level adds one join + one aggregation over the same
+    * cached edge scan), so cadence is a planning-time/fault-recovery
+    * choice, not a data-path one. Measured r18 under the minimal
+    * iteration body, interleaved min-of-3 at sf0.1 (docs/SCALE.md,
+    * `pagerank` row): every-2 won in every round (2.20 s / 36 jobs vs
+    * every-1 2.96 s / 39, every-4 2.88 s, every-8 3.14 s, final-only
+    * 3.10 s) — one materialization buys two iterations' lineage, while
+    * deeper chains pay more re-optimization than they save. Ranks were
+    * bit-identical across all five cadences: truncation changes where
+    * the plan is cut, not any arithmetic. */
+  private val CheckpointEvery = 2
+
   /** PageRank over an undirected pair list (`aCol`, `bCol`) — returns
     * (node, rank). `pairs` must be deduplicated (one row per unordered
     * pair), which [[Dedup.minhashPairs]]'s `doc_a < doc_b` output is by
-    * construction.
-    *
-    * `checkpointEvery`: iterations between lineage truncations (0 =
-    * only after the final iteration). The nested iteration plan grows
-    * LINEARLY (each level adds one join + one aggregation over the same
-    * cached edge scan), so cadence is a planning-time/fault-recovery
-    * knob, not a data-path one. Re-measured r18 under the minimal
-    * iteration body (the r17 A/B predated the Change-2 shape —
-    * verdict item 3), interleaved min-of-3 at sf0.1 via
-    * [[graft.PageRankCadenceProbe]]: every-2 wins in every round
-    * (2.20 s / 36 jobs vs every-1 2.96 s / 39, every-4 2.88 s,
-    * every-8 3.14 s, final-only 3.10 s) — one materialization buys two
-    * iterations' lineage, while deeper chains pay more re-optimization
-    * than they save. Every-2 is the default; checkpoint values are
-    * bit-identical for ANY cadence (the probe asserts rank bit-equality
-    * across 1/2/4/8/0): truncation changes where the plan is cut, not
-    * any arithmetic. */
+    * construction. Lineage is truncated every [[CheckpointEvery]]
+    * iterations. */
   def pageRank(pairs: DataFrame, aCol: String, bCol: String,
-               iters: Int = 8, damping: Double = 0.85,
-               checkpointEvery: Int = 2): DataFrame = {
+               iters: Int = 8, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, "pageRank needs at least one iteration")
     // persist the PAIR list before mirroring: the union's two branches
     // would otherwise each recompute the caller's pair pipeline (for
@@ -95,7 +93,7 @@ object GraphRank {
       // the FINAL iteration always materializes: the returned frame is
       // a checkpoint scan, so unpersisting the edge cache below cannot
       // push a minhash recompute into the caller's action
-      if (i == iters || (checkpointEvery > 0 && i % checkpointEvery == 0))
+      if (i == iters || i % CheckpointEvery == 0)
         ranks = ranks.localCheckpoint(true) // truncate accumulated lineage
     }
     prs.unpersist(); withDeg.unpersist()
@@ -146,10 +144,8 @@ object GraphRank {
     * graph — with a read of what previous batches already mined. */
   def pageRankFromPairs(spark: org.apache.spark.sql.SparkSession,
                         dir: String, iters: Int = 8,
-                        damping: Double = 0.85,
-                        checkpointEvery: Int = 2): DataFrame =
-    pageRank(readPairShards(spark, dir), "doc_a", "doc_b",
-      iters, damping, checkpointEvery)
+                        damping: Double = 0.85): DataFrame =
+    pageRank(readPairShards(spark, dir), "doc_a", "doc_b", iters, damping)
 
   /** The accumulated pair-shard union. Schema is EXPLICIT: a shard
     * written from an empty batch (quiet day / empty partition replay)
@@ -218,10 +214,8 @@ object GraphRank {
     * batch path (so the row pins to the retained-corpus oracle). */
   def pageRankFromPairsRetained(spark: org.apache.spark.sql.SparkSession,
                                 dir: String, iters: Int = 8,
-                                damping: Double = 0.85,
-                                checkpointEvery: Int = 2): DataFrame =
-    pageRank(readRetainedPairs(spark, dir), "doc_a", "doc_b",
-      iters, damping, checkpointEvery)
+                                damping: Double = 0.85): DataFrame =
+    pageRank(readRetainedPairs(spark, dir), "doc_a", "doc_b", iters, damping)
 
   // ---- STORED-RANK serving artifact --------------------------------
   //

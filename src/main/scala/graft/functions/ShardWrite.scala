@@ -32,20 +32,6 @@ object ShardWrite {
     true
   }
 
-  /** Read a shard table that may not exist yet — the OPTIONAL-CHANNEL
-    * read every tombstone-aware reader needs: a maintained table whose
-    * retire channel was never written must read as "nothing retired"
-    * (zero rows of the declared schema), never a missing-path throw.
-    * Explicit schema for the same reason the shard readers all carry
-    * one: an existing-but-all-empty channel must not fail inference. */
-  def readOrEmpty(spark: SparkSession, path: String,
-                  schema: String): org.apache.spark.sql.DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-    else empty(spark, schema)
-  }
-
   private def empty(spark: SparkSession,
                     schema: String): org.apache.spark.sql.DataFrame =
     spark.createDataFrame(

@@ -23,12 +23,12 @@ object Similarity {
     * must guard the input with [[requireWidth]]. */
   val OracleDim: Int = 64
 
-  /** PRODUCTION PQ defaults — the dense codebook `AnnRecallProbe`
-    * measured (SCALE.md `ann_recall` row, r12): 12-bit codes (m=4,
-    * ks=8) score recall@10 at 0.16–0.21 on the probe fixture and FALL
-    * as nprobe grows (ADC ordering is mostly quantization noise), while
-    * m=8/ks=16 (32-bit codes) holds 0.25–0.27 ADC and 0.82–0.86 after
-    * a 200-candidate re-rank. Every production entry point
+  /** PRODUCTION PQ defaults — the dense codebook measured in SCALE.md's
+    * `ann_recall` row (r12): 12-bit codes (m=4, ks=8) score recall@10
+    * at 0.16–0.21 on the probe fixture and FALL as nprobe grows (ADC
+    * ordering is mostly quantization noise), while m=8/ks=16 (32-bit
+    * codes) holds 0.25–0.27 ADC and 0.82–0.86 after a 200-candidate
+    * re-rank. Every production entry point
     * ([[pqTopK]]/[[ivfPqTopK]]/[[ivfPqRerankTopK]] and the artifact
     * builders) defaults here; the registry's 12-bit rows pin m=4/ks=8
     * EXPLICITLY as fixture-scale oracle pins, never as a
@@ -60,7 +60,7 @@ object Similarity {
       1L << 20).toInt
   }
 
-  /** The re-rank shortlist rule `AnnRecallProbe` measured (SCALE.md):
+  /** The re-rank shortlist rule measured in SCALE.md's `ann_recall` row:
     * a FIXED shortlist dilutes as nprobe admits more candidates
     * (rerank@50 fell 0.55 → 0.38 as nprobe grew 1 → 8 with 12-bit
     * codes), so the shortlist must scale WITH the candidate count
@@ -226,17 +226,6 @@ object Similarity {
         .sortBy(_._1)
     }
     cents
-  }
-
-  /** [[kmeansLocalCentroids]] surfaced as a DataFrame
-    * (centroid_id, centroid array<double>) for registry/spec use. */
-  def kmeansCentroids(emb: DataFrame, id: String, vec: String,
-                      k: Int, iters: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    kmeansLocalCentroids(emb, id, vec, k, iters)
-      .map { case (cid, c) => (cid, c.toSeq) }.toSeq
-      .toDF("centroid_id", "centroid")
   }
 
   /** Deterministic-fold Lloyd iterations: identical
@@ -512,13 +501,14 @@ object Similarity {
   /** Unit-normalize the `v` column of a (vid, v) frame — FAISS's
     * cosine-via-inner-product discipline: after normalization, a dot
     * product IS the cosine, so ADC ranking stops preferring large-norm
-    * vectors over direction-aligned ones (the defect `AnnRecallProbe`
-    * measures on raw vectors: adc recall FALLS as nprobe admits more
-    * large-norm false positives). Zero vectors pass through unscaled
-    * (the cosine guard's sibling). The whole normalization is ONE
-    * codegen'd expression ([[VectorExpressions.unitNorm]], r18): the
-    * previous `_nrm` column + `transform` lambda re-evaluated the norm
-    * dot per ELEMENT once predicate pushdown inlined it into a
+    * vectors over direction-aligned ones (the defect SCALE.md's
+    * `ann_recall` row measured on raw vectors: adc recall FALLS as
+    * nprobe admits more large-norm false positives). Zero vectors pass
+    * through unscaled (the cosine guard's sibling). The whole
+    * normalization is ONE codegen'd expression
+    * ([[VectorExpressions.unitNorm]], r18): the previous `_nrm` column
+    * + `transform` lambda re-evaluated the norm dot per ELEMENT once
+    * predicate pushdown inlined it into a
     * consumer (measured: one 1.48 s scan task on q_sim_ivfpq_cos). The
     * fold order (left-to-right x·x, sqrt, per-element divide, zero
     * passthrough) is unchanged, so normalized values stay bit-identical
@@ -1145,12 +1135,6 @@ object Similarity {
     ShardWrite.appendIds(vecIds, col(idCol).as("vid"), s"$dir/retire",
       batchId)
 
-  /** Fold the vector tombstone channel into one distinct m-shard —
-    * the [[ShardWrite.compactShards]] discipline. */
-  def compactRetiredVecs(spark: org.apache.spark.sql.SparkSession,
-                         dir: String): (Int, Int) =
-    ShardWrite.compactShards(spark, s"$dir/retire", "vid LONG")(_.distinct())
-
   /** PHYSICAL tombstone fold — the maintenance-window completion of
     * [[retireFromDir]], FAISS `remove_ids` made byte-real: rewrite the
     * stored codes table WITHOUT the tombstoned rows, then CONSUME the
@@ -1451,7 +1435,7 @@ object Similarity {
                       nprobe: Int = 4, m: Int = DefaultM, ks: Int = DefaultKs,
                       iters: Int = 2, dim: Int = OracleDim): DataFrame = {
     // AutoShortlist: scale with the candidate count ([[rerankShortlist]]
-    // — the AnnRecallProbe tuning rule). The corpus count here is one
+    // — the `ann_recall` tuning rule). The corpus count here is one
     // metadata-only parquet job next to the training scans this fused
     // path already pays; the stored-artifact twins derive it from the
     // codes table instead.
@@ -2634,7 +2618,7 @@ object Similarity {
   }
 
   /** The (mean relevance, mean pairwise cosine) of [[mmrTopK]]'s picks
-    * — the measurement kernel behind [[graft.MmrDefaultsProbe]] and the
+    * — the measurement kernel behind SCALE.md's `MMR defaults` row and the
     * default-contract floor in [[graft.MmrSpec]]: relevance is the mean
     * query cosine of the selected k, diversity is the mean pairwise
     * cosine AMONG them (lower = more diverse; λ=1.0 degenerates to

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The corpus-scale routing happens at WRITE time — and it is not even
   * a shuffle: each write task fans its rows out into per-bucket files
-  * locally (measured 0 shuffle bytes in `BucketedJoinProbe`), and the
+  * locally (0 shuffle bytes, SCALE.md `bucket_join` row), and the
   * bucket spec is recorded in the session catalog. Every LATER
   * equi-join between two tables bucketed `buckets`-ways on their join
   * keys — and every aggregation whose grouping keys start with the

@@ -1211,18 +1211,13 @@ object CurationQueries {
     * whose embedding SemDeDup marks as a semantic duplicate, then the
     * standard quality gate + token stats. Only (vec_id) drop keys cross
     * from the embedding side — an anti-join key set, never vectors. */
-  def pipelineSemantic(s: SparkSession, d: String): DataFrame =
-    pipelineSemanticOf(documents(s, d), embChecked(s, d))
-
-  /** Frame-level form ([[graft.ScaleProbe]] feeds replicated corpora):
-    * `nlist` scales with the corpus (SemDeDup's bounded-cluster knob). */
-  def pipelineSemanticOf(docs: DataFrame, emb: DataFrame,
-                         nlist: Int = 16): DataFrame = {
+  def pipelineSemantic(s: SparkSession, d: String): DataFrame = {
     // just the drop-key set: skips semDedup's per-vector marking join —
     // only anti-join keys cross the modality boundary
-    val dropped = Similarity.semDedupDropped(emb, "vec_id", "embedding", nlist)
+    val dropped = Similarity
+      .semDedupDropped(embChecked(s, d), "vec_id", "embedding")
       .select(col("vec_id").as("doc_id"))
-    docs.join(dropped, Seq("doc_id"), "left_anti")
+    documents(s, d).join(dropped, Seq("doc_id"), "left_anti")
       .select(col("doc_id"),
         TA.qualityScore(col("text"), Stopwords).as("quality"),
         TA.tokenCount(col("text")).as("n_tokens"))

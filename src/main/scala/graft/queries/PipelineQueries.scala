@@ -223,7 +223,7 @@ object PipelineQueries {
     * ([[graft.operators.ZOrderLayout]]): both predicates reach the
     * parquet scan (PushedFilters, plan-pinned) and BOTH get row-group
     * min/max skipping because the Morton curve clusters the two
-    * dimensions jointly — `ZOrderProbe` prices the bytes-read
+    * dimensions jointly — SCALE.md's `zorder` row prices the bytes-read
     * difference against a single-column-sorted copy. The result is
     * layout-independent: the oracle recomputes from the PLAIN table, so
     * the row proves the rewrite changes IO, never answers. */
@@ -571,11 +571,11 @@ object PipelineQueries {
     * that BOTH engines apply the cut to the vocabulary before pair
     * counting — the semantics is threshold-position-independent; the
     * realistic tail-eviction shape (and its 19.8× loop saving) is
-    * `BpeProbe`'s crawl-shaped measurement. */
+    * SCALE.md's crawl-shaped `BPE vocabulary floor` measurement. */
   private val BpeFloorMinWc = 900L
 
   /** q_bpe_train_floor: the `minWc` vocabulary floor HASH-PROVEN — the
-    * web-scale training knob (`BpeProbe`: 19.8× on a crawl-shaped
+    * web-scale training knob (SCALE.md: 19.8× on a crawl-shaped
     * tail) under its own unrolled oracle, which applies the identical
     * `wc >= minWc` cut to the vocabulary CTE before delimiting. The
     * floor is a semantic knob (tail mass feeds pair counts), so the
@@ -2414,7 +2414,7 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     * down to the codebook doubles. */
   def simPq(s: SparkSession, d: String): DataFrame =
     // m=4/ks=8: the 12-bit FIXTURE-SCALE oracle pin, not the production
-    // default (Similarity.DefaultM/DefaultKs = 8/16 per AnnRecallProbe)
+    // default (Similarity.DefaultM/DefaultKs = 8/16 per SCALE.md `ann_recall`)
     Similarity.pqTopK(embChecked(s, d), "vec_id", "embedding", 0L, 10,
       m = 4, ks = 8)
 
@@ -2666,7 +2666,7 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     * `normalize = true`) — FAISS's cosine-via-inner-product
     * discipline: the quantizer trains on, and ADC scores against,
     * unit vectors, so `adc_dot` approximates cosine instead of the
-    * raw dot (whose large-norm bias `AnnRecallProbe` measures). The
+    * raw dot (whose large-norm bias SCALE.md `ann_recall` measured). The
     * oracle runs the identical machinery over a unit-normalized SQL
     * twin of the table — hash-exact. */
   def simIvfPqCos(s: SparkSession, d: String): DataFrame =

@@ -208,8 +208,9 @@ object LakeMaintenance {
   /** DENSITY-THRESHOLDED eviction — the r15 verdict's #3: uniform
     * sparse takedowns touch every leaf, so an unconditional
     * [[evictFromDir]] pass rewrites O(state) for an O(takedown)
-    * footprint (GateRetireProbe: 10% uniform retires → 192/192 leaves,
-    * 114 s at 100k docs). This variant rewrites a directory only when
+    * footprint (SCALE.md `gate takedowns at scale`: 10% uniform
+    * retires → 192/192 leaves, 114 s at 100k docs). This variant
+    * rewrites a directory only when
     * its tombstoned-row FRACTION reaches `minDensity`; a dir that
     * intersects the channel but stays under the bound is CARRIED —
     * left byte-untouched, still exact through the caller's probe-time

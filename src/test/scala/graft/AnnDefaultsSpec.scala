@@ -4,7 +4,7 @@ import graft.functions.Similarity
 
 /** Pins the r13 production-default contract for the ANN serving layer:
   * the defaults a user gets WITHOUT reading SCALE.md must be the
-  * configuration `AnnRecallProbe` measured as good (dense m=8/ks=16
+  * configuration SCALE.md's `ann_recall` row measured as good (dense m=8/ks=16
   * codebook + candidate-proportional re-rank shortlist), not the
   * 12-bit fixture pin the oracle rows use. The recall floor asserted
   * here (mean recall@10 ≥ 0.5 on the probe fixture) is the measured

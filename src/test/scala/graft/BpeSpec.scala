@@ -269,13 +269,4 @@ class BpeSpec extends SparkSpec {
     assert(got.getAs[Long]("n_words") == 3L)
     assert(got.getAs[Long]("n_bpe_tokens") == 5L)
   }
-
-  test("distinct-encode-and-join stats ≡ per-occurrence stats") {
-    val merges = Bpe.trainMerges(Bpe.wordCounts(docs, "text"), 6)
-    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) ->
-        (r.getAs[Long]("n_words"), r.getAs[Long]("n_bpe_tokens"))).toMap
-    assert(toMap(Bpe.docTokenStatsDistinct(docs, "doc_id", "text", merges)) ==
-      toMap(Bpe.docTokenStats(docs, "doc_id", "text", merges)))
-  }
 }

@@ -189,7 +189,7 @@ class DedupSpec extends SparkSpec {
       s"organic near-dups lost to the cap: $capped")
     // uncapped on the SAME corpus: the flood expands (the fixture is
     // small enough to afford the n² here; at 10k copies it is not —
-    // ScaleProbe measures that shape)
+    // SCALE.md's `flood` row prices that shape)
     val raw = Dedup.minhashPairs(noisy, "doc_id", "text", threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(raw.count { case (a, b) => a >= 1000L && b >= 1000L } ==

@@ -369,7 +369,7 @@ object EngineProps extends Properties("engine") {
 
   // the candidate-proportional rerank shortlist: monotone in corpus,
   // nprobe, and k; never below 4k; exactly candidates/4 once past the
-  // floor — the AnnRecallProbe tuning rule as an algebraic property
+  // floor — the SCALE.md `ann_recall` tuning rule as an algebraic property
   property("rerankShortlist is monotone with a 4k floor") =
     forAll(Gen.chooseNum(0L, 10000000L), Gen.chooseNum(1, 64),
       Gen.chooseNum(1, 64), Gen.chooseNum(1, 100)) { (n, nlist, nprobe, k) =>

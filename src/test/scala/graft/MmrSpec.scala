@@ -54,7 +54,7 @@ class MmrSpec extends SparkSpec {
   }
 
   test("default contract holds the measured trade floor on the probe fixture") {
-    // MmrDefaultsProbe (r17, SCALE.md `mmr_defaults` row) swept λ and
+    // SCALE.md's `MMR defaults` row (r17) swept λ and
     // the shortlist N on sf0.1: at the registry defaults (λ=0.7,
     // N=2.5k) the picks' mean pairwise cosine improved 19-51% over the
     // pure-relevance baseline at ≤3.6% mean-relevance give-up across

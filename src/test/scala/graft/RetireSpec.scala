@@ -605,12 +605,6 @@ class RetireSpec extends SparkSpec {
     assert(!fs.exists(fsP))
   }
 
-  test("readOrEmpty: a never-written channel reads as zero rows of the declared schema") {
-    val df = ShardWrite.readOrEmpty(spark, "/tmp/graft-no-such-dir-xyz",
-      "doc_id LONG")
-    assert(df.columns.toSeq == Seq("doc_id") && df.count() == 0)
-  }
-
   test("window-table retire + fold: anti-join exact, waits on one shard, byte-real drop") {
     import graft.functions.Dedup
     val dir = tmp("win-ret")

@@ -741,7 +741,7 @@ class SimilaritySpec extends SparkSpec {
     // and the rerank selects the shortlist's exact-cosine best — so any
     // true-top-k member inside the shortlist is KEPT by the rerank,
     // making recall@k(rerank) >= recall@k(adc) per query, at every
-    // nprobe. (AnnRecallProbe measures the absolute curve at sf0.1;
+    // nprobe. (SCALE.md's `ann_recall` row has the absolute curve at sf0.1;
     // this pins the ordering on the fixture.)
     val emb = Tables.embeddings(spark, sf0001).cache()
     val dir = java.nio.file.Files.createTempDirectory("ann-recall-floor").toString

@@ -7,7 +7,7 @@ import graft.operators.ZOrderLayout
   * z-values against a Scala twin, single-dim monotonicity, layout
   * independence of results, and the joint-locality property the whole
   * rewrite exists for. The registry row `q_zorder_scan` is
-  * DuckDB-oracled against the PLAIN table; `ZOrderProbe` prices the
+  * DuckDB-oracled against the PLAIN table; SCALE.md's `zorder` row prices the
   * bytes-read pruning. */
 class ZOrderLayoutSpec extends SparkSpec {
 
