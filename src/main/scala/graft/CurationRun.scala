@@ -106,7 +106,7 @@ object CurationRun {
     val embs = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     def stage(name: String): DataFrame =
-      spark.read.parquet(s"$outDir/$name")
+      Tables.parquet(spark, s"$outDir/$name")
     // the embedding rows of a (doc_id)-keyed survivor stage — the one
     // place ids cross INTO the embedding modality (a key-only semi-join)
     def embOf(survivors: DataFrame): DataFrame =
@@ -293,7 +293,7 @@ object CurationRun {
     println(s"[curation] ran: ${ran.mkString(", ")}" +
       (if (skipped.nonEmpty) s"; resumed past: ${skipped.mkString(", ")}"
        else ""))
-    val report = spark.read.parquet(s"${args(1)}/report")
+    val report = Tables.parquet(spark, s"${args(1)}/report")
       .orderBy("source", "status").collect()
     report.foreach(r => println(
       s"[curation] ${r.getString(0)} ${r.getString(1)}: ${r.getLong(2)}"))

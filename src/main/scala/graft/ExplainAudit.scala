@@ -7,11 +7,9 @@ package graft
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the contract session (GraftExtensions included), so the audited
+    // plans are the ones Bench and Verify run
+    val spark = SessionTuning.session()
     spark.sparkContext.setLogLevel("ERROR")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val picks = Seq(

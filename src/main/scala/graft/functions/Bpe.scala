@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Byte-pair-encoding tokenizer training and application — the
   * subword step a training-data pipeline runs between curation and
@@ -344,7 +345,7 @@ t AS (SELECT doc_id, CAST(sum(len(string_split(trim(ds), '  '))) AS INTEGER)
   /** Read the stored merge list back in rank order — a bounded
     * driver-side artifact (merge-count rows). */
   def readMerges(spark: SparkSession, dir: String): Seq[Merge] =
-    mergesFrom(spark.read.parquet(s"$dir/bpe_merges"))
+    mergesFrom(Tables.parquet(spark, s"$dir/bpe_merges"))
 
   /** A merge-table FRAME back to the driver-side rank-ordered list —
     * the consumer half of [[mergesDf]] (any stage/registry parquet of

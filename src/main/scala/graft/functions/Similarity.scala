@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Similarity search over embedding columns (`array<float>`): brute-force
   * cosine top-k as the exact baseline, and random-hyperplane LSH bucketing
@@ -1112,7 +1113,7 @@ object Similarity {
                            path: String): DataFrame =
     (if (graft.streaming.Snapshot.enabled(spark, path))
        graft.streaming.Snapshot.readVersion(spark, path)
-     else None).getOrElse(spark.read.parquet(path))
+     else None).getOrElse(Tables.parquet(spark, path))
 
   // ---- vector tombstones (the retire channel on the ANN family) ----
 
@@ -1173,8 +1174,8 @@ object Similarity {
       val (metaFs, metaP) = canonicalMeta(spark, dir)
       if (metaFs.exists(metaP)) {
         import spark.implicits._
-        val rows = spark.read.parquet(s"$dir/codes").count()
-        val kept = spark.read.parquet(metaP.toString)
+        val rows = Tables.parquet(spark, s"$dir/codes").count()
+        val kept = Tables.parquet(spark, metaP.toString)
           .collect().map(r => (r.getString(0), r.getString(1)))
           .filterNot(_._1 == "corpus_rows")
         (kept.toSeq :+ (("corpus_rows", rows.toString)))
@@ -1246,7 +1247,7 @@ object Similarity {
     if (cached != null && cached._1 == stamp) cached._2
     else {
       val flag = stamp >= 0 &&
-        spark.read.parquet(p.toString)
+        Tables.parquet(spark, p.toString)
           .where(col("key") === "normalized" && col("value") === "true")
           .head(1).nonEmpty
       normalizedMetaCache.put(p.toString, (stamp, flag))
@@ -1319,7 +1320,7 @@ object Similarity {
     if (metaFs.exists(metaP)) {
       import spark.implicits._
       val appended = v.count()
-      val kept = spark.read.parquet(metaP.toString)
+      val kept = Tables.parquet(spark, metaP.toString)
         .collect().map(r => (r.getString(0), r.getString(1)))
       val updated = kept.map {
         case ("corpus_rows", n) => ("corpus_rows", (n.toLong + appended).toString)
@@ -1509,7 +1510,7 @@ object Similarity {
     val cached = corpusRowsCache.get(p.toString)
     if (cached != null && cached._1 == stamp) cached._2
     else {
-      val rows = spark.read.parquet(p.toString)
+      val rows = Tables.parquet(spark, p.toString)
         .where(col("key") === "corpus_rows")
         .head(1).headOption.map(_.getString(1).toLong)
       corpusRowsCache.put(p.toString, (stamp, rows))
@@ -2433,7 +2434,7 @@ object Similarity {
     * shares its oracle. */
   def decontaminateSemFromDir(train: DataFrame, id: String, vec: String,
                               dir: String, minCos: Double): DataFrame = {
-    val rows = train.sparkSession.read.parquet(s"$dir/bench_vecs")
+    val rows = Tables.parquet(train.sparkSession, s"$dir/bench_vecs")
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)

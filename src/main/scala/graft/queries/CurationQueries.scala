@@ -688,7 +688,7 @@ object CurationQueries {
                            n: Int = 5): DataFrame =
     contaminated(
       Dedup.shingles(train, "doc_id", "text", n),
-      train.sparkSession.read.parquet(s"$dir/bench_shingles"))
+      parquet(train.sparkSession, s"$dir/bench_shingles"))
 
   /** The stored-artifact registry row: bench shingles write once per
     * (corpus fingerprint, JVM); every later call probes the stored

@@ -229,7 +229,7 @@ object PipelineQueries {
     * the row proves the rewrite changes IO, never answers. */
   def zorderScanQ(s: SparkSession, d: String): DataFrame = {
     val dir = zorderArtifacts(s, d)
-    s.read.parquet(s"$dir/li")
+    parquet(s, s"$dir/li")
       .where(col("l_quantity").between(ZQtyLo, ZQtyHi) &&
         col("l_extendedprice").between(ZPriceLo, ZPriceHi))
       .groupBy(col("l_returnflag").as("flag"))
@@ -1474,7 +1474,7 @@ tempplan AS (SELECT source, n_docs, n_tokens,
         .write.mode("overwrite").parquet(s"$dir/lr")
     }
     TA.dsirScoreWith(par(documents(s, d)), "doc_id", "text",
-      s.read.parquet(s"$dir/lr"))
+      parquet(s, s"$dir/lr"))
   }
 
   /** Multiclass Naive Bayes classification ([[TA.nbModel]] →
@@ -1503,7 +1503,7 @@ tempplan AS (SELECT source, n_docs, n_tokens,
         .write.mode("overwrite").parquet(s"$dir/model")
     }
     TA.nbClassify(par(documents(s, d)), "doc_id", "text",
-      s.read.parquet(s"$dir/model"))
+      parquet(s, s"$dir/model"))
   }
 
   /** The INCREMENTALLY-MAINTAINED classifier: three hash-split batches

@@ -64,7 +64,7 @@ object Serving {
                 partitionCols: Seq[String] = Seq("symbol")): DataFrame =
     (if (graft.streaming.Snapshot.enabled(spark, path))
        graft.streaming.Snapshot.readVersion(spark, path, version, partitionCols)
-     else None).getOrElse(spark.read.parquet(path))
+     else None).getOrElse(parquet(spark, path))
 
   /** JSON at the API edge: the reference's endpoints return
     * `df.to_json()` frames (`API.py:36,48,61,75`). One JSON document per

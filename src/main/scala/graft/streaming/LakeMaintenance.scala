@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+import graft.Tables
 
 /** Lake maintenance for the micro-batch sink's small-files problem: a
   * 10-second append cadence ([[TickIngest.startLakeSink]]) accretes one
@@ -117,7 +118,7 @@ object LakeMaintenance {
     fs.delete(tmp, true) // stale temp: copies of still-present originals
     // rewrite EXACTLY the captured file list (see consistency contract);
     // any partition column lives in the dir name, which stays put
-    spark.read.parquet(files.map(_.getPath.toString): _*)
+    Tables.parquet(spark, files.map(_.getPath.toString): _*)
       .coalesce(n).write.mode("overwrite").parquet(tmp.toString)
     val compacted = fs.listStatus(tmp)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
@@ -197,7 +198,7 @@ object LakeMaintenance {
     val files = fs.listStatus(p)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     if (files.isEmpty) return false
-    val df = spark.read.parquet(files.map(_.getPath.toString): _*)
+    val df = Tables.parquet(spark, files.map(_.getPath.toString): _*)
     val hit = df.join(org.apache.spark.sql.functions.broadcast(ids),
       Seq(key), "left_semi").head(1).nonEmpty
     if (!hit) return false
@@ -235,7 +236,7 @@ object LakeMaintenance {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     if (files.isEmpty) return (false, false)
     import org.apache.spark.sql.functions.{broadcast, col, count, lit}
-    val df = spark.read.parquet(files.map(_.getPath.toString): _*)
+    val df = Tables.parquet(spark, files.map(_.getPath.toString): _*)
     val r = df.join(
         broadcast(ids.select(col(key)).withColumn("_ret", lit(1))),
         Seq(key), "left")

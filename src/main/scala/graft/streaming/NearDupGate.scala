@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.{ArrayEqCount, Dedup}
+import graft.Tables
 
 /** Streaming NEAR-duplicate gate — the MinHash+LSH counterpart of
   * [[EventStream.dedupDocStream]] (which is exact-fingerprint only): a
@@ -247,7 +248,7 @@ object NearDupGate {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(dir) && fs.listStatus(dir)
         .exists(s => s.isFile && s.getPath.getName.endsWith(".parquet")))
-      Some(spark.read.parquet(dir.toString))
+      Some(Tables.parquet(spark, dir.toString))
     else None
   }
 
@@ -278,7 +279,7 @@ object NearDupGate {
     if (files.length <= 1) return
     val tmp = new Path(dir, ".hotbands_tmp")
     fs.delete(tmp, true)
-    spark.read.parquet(files.map(_.getPath.toString): _*)
+    Tables.parquet(spark, files.map(_.getPath.toString): _*)
       .distinct().coalesce(1).write.parquet(tmp.toString)
     val stamp = java.util.UUID.randomUUID().toString
     fs.listStatus(tmp)
@@ -447,7 +448,7 @@ object NearDupGate {
       .filter(p => fs.exists(p) && fs.listStatus(p)
         .exists(s => s.isFile && s.getPath.getName.endsWith(".parquet")))
     if (dirs.isEmpty) None
-    else Some(spark.read.parquet(dirs.map(_.toString): _*))
+    else Some(Tables.parquet(spark, dirs.map(_.toString): _*))
   }
 
   /** ONE copy of the dynamic-write clustering (batch appends AND split/
@@ -939,7 +940,7 @@ object NearDupGate {
       fs.delete(tmp, true)
       val cn = childName(d)
       clusterBy(
-        spark.read.parquet(files.map(_.getPath.toString): _*)
+        Tables.parquet(spark, files.map(_.getPath.toString): _*)
           .withColumn(cn, childCol(layoutHash(layoutKey), gp.buckets, d)),
         Seq(cn), 4)
         .write.partitionBy(cn).parquet(tmp.toString)
@@ -1033,7 +1034,7 @@ object NearDupGate {
         val leaf = nodeDir(new Path(layoutDir(l, outPath, statePath)), p)
         val files = fs.listStatus(leaf)
           .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        val children = spark.read.parquet(files.map(_.getPath.toString): _*)
+        val children = Tables.parquet(spark, files.map(_.getPath.toString): _*)
           .select(childCol(layoutHash(l), gp.buckets, p.length).as("c"))
           .distinct().count()
         if (children > 1) true
@@ -1125,7 +1126,7 @@ object NearDupGate {
         val files = fs.listStatus(leaf)
           .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
         if (files.nonEmpty) {
-          val df = spark.read.parquet(files.map(_.getPath.toString): _*)
+          val df = Tables.parquet(spark, files.map(_.getPath.toString): _*)
           // bounded collect: at most leafRows / maxBandMembers keys
           val over = df.groupBy("band", "band_hash").count()
             .where(col("count") >= maxBandMembers).collect()

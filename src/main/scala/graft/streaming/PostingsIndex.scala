@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.{ShardWrite, Sketches, TextAnalysis}
+import graft.Tables
 
 /** Continuously-maintained inverted index over a document stream — the
   * streaming twin of [[graft.queries.PipelineQueries.postingsOf]]: each
@@ -96,7 +97,7 @@ object PostingsIndex {
     val shards =
       (if (Snapshot.enabled(spark, indexPath))
          Snapshot.readVersion(spark, indexPath, version, Seq("shard"))
-       else None).getOrElse(spark.read.parquet(indexPath))
+       else None).getOrElse(Tables.parquet(spark, indexPath))
     mergeShards(shards.drop("shard"), cap)
   }
 
@@ -265,7 +266,7 @@ object PostingsIndex {
     // rewrite — the fold's merge drops rows, it is not a pure union
     if (dirs.isEmpty || mergeInput.isEmpty || (!force && dirs.length <= 1))
       return (dirs.length, dirs.length)
-    val merged = merge(spark.read.parquet(mergeInput: _*))
+    val merged = merge(Tables.parquet(spark, mergeInput: _*))
     val stamp = java.lang.Long.toHexString(System.nanoTime())
     // the merged shard's name carries the replay watermark: the highest
     // batch id whose content it (transitively) contains — see mergedUpTo
@@ -626,11 +627,11 @@ object PostingsIndex {
   private def readRawMaybeMixed(spark: SparkSession,
                                 root: String): DataFrame = {
     val dirs = shardDirs(spark, root)
-    if (dirs.isEmpty) return spark.read.parquet(root)
+    if (dirs.isEmpty) return Tables.parquet(spark, root)
     val fs = new Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (bucketed, flat) = dirs.partition(hasTokenBucketDirs(fs, _))
-    if (bucketed.isEmpty || flat.isEmpty) spark.read.parquet(root)
+    if (bucketed.isEmpty || flat.isEmpty) Tables.parquet(spark, root)
     else {
       val bDf = spark.read.option("basePath", root)
         .parquet(bucketed.map(_.toString): _*)
@@ -1406,7 +1407,7 @@ object PostingsIndex {
                       version: Option[Long] = None): DataFrame =
     (if (Snapshot.enabled(spark, root))
        Snapshot.readVersion(spark, root, version, Seq("shard"))
-     else None).getOrElse(spark.read.parquet(root)).drop("shard")
+     else None).getOrElse(Tables.parquet(spark, root)).drop("shard")
 
   /** The streaming sink for the TF half: docs (doc_id, text) →
     * continuously-maintained BM25-servable index artifacts. */
@@ -1601,7 +1602,7 @@ object PostingsIndex {
     val dirs = shardDirs(spark, indexPath)
     require(dirs.length > 1, "crash-injection needs >1 live shard")
     val merged = mergeShards(
-      spark.read.parquet(dirs.map(_.toString): _*).drop("shard"), cap)
+      Tables.parquet(spark, dirs.map(_.toString): _*).drop("shard"), cap)
     val stamp = java.lang.Long.toHexString(System.nanoTime())
     // the orphan carries the watermark SUFFIX exactly as compactWith
     // names it before the commit — the hazard mergedUpTo must distrust

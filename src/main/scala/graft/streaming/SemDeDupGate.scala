@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.{NearestCentroid, Similarity, VectorExpressions}
+import graft.Tables
 
 /** Streaming SEMANTIC near-duplicate gate — the embedding-space
   * counterpart of [[NearDupGate]] (which gates on MinHash/text): a
@@ -108,7 +109,7 @@ object SemDeDupGate {
          // the plain partitioned read's inferred int
          Snapshot.readVersion(spark, outPath, partitionCols = Seq("list"))
            .map(_.withColumn("list", col("list").cast("int")))
-       else None).getOrElse(spark.read.parquet(outPath))
+       else None).getOrElse(Tables.parquet(spark, outPath))
     // with the gate's statePath given, pending tombstones subtract at
     // read — a taken-down vector is invisible to corpus readers from
     // the instant of retireAppend, not the next eviction window
@@ -273,7 +274,7 @@ object SemDeDupGate {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(dir) && fs.listStatus(dir)
         .exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))) {
-      spark.read.parquet(dir.toString).collect()
+      Tables.parquet(spark, dir.toString).collect()
         .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
     } else {
       import spark.implicits._
@@ -296,7 +297,7 @@ object SemDeDupGate {
     fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
       .filter(_.getName.startsWith("list=")).map { p =>
         val l = p.getName.stripPrefix("list=").toInt
-        l -> spark.read.parquet(p.toString).collect()
+        l -> Tables.parquet(spark, p.toString).collect()
           .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
       }.toMap
   }
@@ -402,7 +403,7 @@ object SemDeDupGate {
           // per-dir reads with the list id attached as a literal — the
           // partition column lives only in the dir name
           val seen0 = dirs.map { case (l, d) =>
-            spark.read.parquet(d).select(col("vid").as("seen_id"),
+            Tables.parquet(spark, d).select(col("vid").as("seen_id"),
               col("v").as("seen_v"), lit(l).as("list"))
           }.reduce(_ unionByName _)
           Some(hold(retired.fold(seen0)(r => seen0.join(
@@ -432,7 +433,7 @@ object SemDeDupGate {
         case Nil => gatedAssigned
         case dirs =>
           gatedAssigned.join(
-            spark.read.parquet(dirs.map(_._2): _*).select("vid"),
+            Tables.parquet(spark, dirs.map(_._2): _*).select("vid"),
             Seq("vid"), "left_anti")
       })
       val admitted = fresh.count()
@@ -567,7 +568,7 @@ object SemDeDupGate {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     if (flat.isEmpty) { clearFence(spark, statePath); return }
     writeFence(spark, statePath, s"splitting=$list:$nsub")
-    val rows = spark.read.parquet(flat.map(_.getPath.toString): _*)
+    val rows = Tables.parquet(spark, flat.map(_.getPath.toString): _*)
       .select(col("vid"), col("v"))
     // sub-quantizer: seeded from the list's own rows, persisted BESIDE
     // _centroids — same deterministic contract as the coarse quantizer.
@@ -577,7 +578,7 @@ object SemDeDupGate {
     val subs: Array[Array[Double]] =
       if (fs.exists(subDir) && fs.listStatus(subDir)
           .exists(s => s.isFile && s.getPath.getName.endsWith(".parquet")))
-        spark.read.parquet(subDir.toString).collect()
+        Tables.parquet(spark, subDir.toString).collect()
           .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
       else Similarity.seededCentroids(rows, nsub)
     // sub rows first (append; reruns anti-join against existing vids)
@@ -587,7 +588,7 @@ object SemDeDupGate {
     val freshRows = existingSubDirs match {
       case Nil => assigned
       case dirs => assigned.join(
-        spark.read.parquet(dirs: _*).select("vid"), Seq("vid"), "left_anti")
+        Tables.parquet(spark, dirs: _*).select("vid"), Seq("vid"), "left_anti")
     }
     freshRows.repartition(math.min(subs.length, 32), col("sub"))
       .write.partitionBy("sub").mode("append").parquet(lp.toString)
@@ -627,7 +628,7 @@ object SemDeDupGate {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     require(flat.nonEmpty, "crash-injection needs a non-empty flat list")
     writeFence(spark, statePath, s"splitting=$list:$nsub")
-    val rows = spark.read.parquet(flat.map(_.getPath.toString): _*)
+    val rows = Tables.parquet(spark, flat.map(_.getPath.toString): _*)
       .select(col("vid"), col("v"))
     val subs = Similarity.seededCentroids(rows, nsub)
     rows.withColumn("sub", NearestCentroid(col("v"), subs))

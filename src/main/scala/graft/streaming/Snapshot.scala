@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Tables
 
 /** Versioned SNAPSHOT MANIFESTS over a plain-parquet table directory —
   * the table-format-free answer to "concurrent external readers observe
@@ -262,7 +263,7 @@ object Snapshot {
     val (rels, resolved) =
       if (prunedPairs.nonEmpty) prunedPairs.unzip
       else (relsAll, resolvedAll) // see scaladoc: never an empty read
-    if (partitionCols.isEmpty) return Some(spark.read.parquet(resolved: _*))
+    if (partitionCols.isEmpty) return Some(Tables.parquet(spark, resolved: _*))
     def values(rel: String): Seq[Option[String]] = {
       val kv = rel.split("/").dropRight(1).flatMap { seg =>
         seg.split("=", 2) match {
@@ -277,7 +278,7 @@ object Snapshot {
     Some((rels zip resolved).groupBy { case (rel, _) => values(rel) }
       .map { case (vals, group) =>
         (partitionCols zip vals).foldLeft(
-          spark.read.parquet(group.map(_._2): _*)) { case (df, (c, ov)) =>
+          Tables.parquet(spark, group.map(_._2): _*)) { case (df, (c, ov)) =>
           df.withColumn(c, ov.map(lit(_)).getOrElse(lit(null)))
         }
       }.reduce(_ unionByName _))

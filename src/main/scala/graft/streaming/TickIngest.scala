@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.normalize.Normalize
+import graft.Tables
 
 /** T1/T2 — streaming tick ingest (SURVEY.md §2.8; reference
   * `pipeline/warehouse.py:113-165`, duplicated `test.py:8-59`):
@@ -90,15 +91,20 @@ object TickIngest {
     val spark = batch.sparkSession
     val b = batch.dropDuplicates("symbol", "time").persist()
     try {
-      if (b.isEmpty) return Nil
+      // one probe job: row count, distinct symbols (collect_set drops
+      // null, hence the flag) and the event-time bounds for the pruning
+      val probe = b.agg(count(lit(1)), collect_set(col("symbol")),
+        max(col("symbol").isNull), min(col("time")), max(col("time"))).head()
+      if (probe.getLong(0) == 0L) return Nil
       // partition dir names use Spark's OWN escaping (a raw "symbol=$s"
       // misses any symbol containing '=', '/', '%', … — fs.exists comes
       // back false and the idempotence anti-join silently disappears for
       // that symbol); null symbols land in Hive's default partition
       import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       val symType = b.schema("symbol").dataType
-      val syms: Array[Option[String]] = b.select("symbol").distinct().collect()
-        .map(r => if (r.isNullAt(0)) None else Some(String.valueOf(r.get(0))))
+      val syms: Seq[Option[String]] =
+        probe.getSeq[Any](1).map(v => Some(String.valueOf(v))) ++
+          (if (probe.getBoolean(2)) Seq(None) else Nil)
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val allDirs = syms.map { s =>
@@ -110,20 +116,19 @@ object TickIngest {
       val fresh =
         if (touched.isEmpty) b
         else {
-          val bounds = b.agg(min(col("time")), max(col("time"))).head()
           // an all-null-time batch still appends (and still dedups on
           // the null key) — min(time)=null must NOT read as "empty"
           val timePred =
-            if (bounds.isNullAt(0)) col("time").isNull
+            if (probe.isNullAt(3)) col("time").isNull
             else col("time").isNull ||
-              col("time").between(lit(bounds.get(0)), lit(bounds.get(1)))
+              col("time").between(lit(probe.get(3)), lit(probe.get(4)))
           // per-dir reads with the symbol attached as a LITERAL of the
           // batch column's type — NOT partition-column discovery, whose
           // type inference coerces numeric-looking partition values
           // ("005930" reads back as 5930, and the replay key silently
           // stops matching)
           val existingKeys = touched.map { case (s, dir) =>
-            spark.read.parquet(dir.toString)
+            Tables.parquet(spark, dir.toString)
               .where(timePred)
               .select(s.map(v => lit(v)).getOrElse(lit(null))
                 .cast(symType).as("_ek_symbol"),
@@ -135,7 +140,7 @@ object TickIngest {
             "left_anti")
         }
       fresh.write.mode("append").partitionBy("symbol").parquet(path)
-      allDirs.map(_._2.getName).toSeq
+      allDirs.map(_._2.getName)
     } finally b.unpersist()
   }
 

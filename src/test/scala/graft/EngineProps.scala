@@ -16,11 +16,15 @@ object EngineProps extends Properties("engine") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(8)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   import scala.jdk.CollectionConverters._
 

@@ -5,13 +5,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for suites — one lazy session per suite. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new graft.GraftExtensions())
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .withExtensions(new graft.GraftExtensions())
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   def sf0001 = "/root/testdata/sf0.001"
 }
