@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md), and
   * [[parquet]], the engine's one way to read parquet.
@@ -11,51 +12,76 @@ import org.apache.spark.sql.functions._
   * One parquet file per table under `sfDir`. All engine queries take the
   * sf directory as a parameter so the same plan runs at any scale factor.
   * Scans stay declarative (a `spark.read` DataFrame) so Catalyst pushes
-  * filters and prunes columns into the parquet reader; only the data
-  * schema is resolved up front, on the driver (see [[parquet]]).
+  * filters and prunes columns into the parquet reader; only the listing
+  * and the data schema are resolved up front, on the driver (see
+  * [[parquet]]).
   */
 object Tables {
-  /** `spark.read.parquet(paths: _*)` without the schema-inference job.
-    *
-    * Inference reads ONE footer (`spark.sql.parquet.mergeSchema` is off
-    * and Spark writes no summary files) but does it inside a Spark job,
-    * and that job's fixed cost dominates a small read. This reads the
-    * same footer on the driver, converts it with Spark's own code
-    * ([[FooterSchema]]) and passes the result as the reader schema, so
-    * building the DataFrame starts no job. The footer is the one Spark
-    * would open: the first non-hidden data file by sorted path (hidden =
-    * Spark's listing rule: a `_` name without `=`, a `.` name, a
-    * `._COPYING_` file). Partition discovery is unchanged: a `k=v`
-    * column is not in the data files, so Spark still infers it.
-    *
-    * With no data file to read — a missing or empty path (a glob is
-    * not expanded, so it counts as missing) — it is the plain
-    * `spark.read.parquet(paths: _*)`, so errors stay Spark's own. */
+  /** `spark.read.parquet(paths: _*)` with one listing and no Spark job. */
   def parquet(spark: SparkSession, paths: String*): DataFrame =
-    firstDataFile(spark, paths).flatMap(FooterSchema.of(spark, _)) match {
-      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
-      case None         => spark.read.parquet(paths: _*)
-    }
+    parquet(spark, paths, Map.empty[String, String])
 
-  private def firstDataFile(spark: SparkSession, paths: Seq[String]): Option[FileStatus] = {
+  /** `spark.read.options(options).parquet(paths: _*)`, listed once, on
+    * the driver, with no Spark job to build the DataFrame.
+    *
+    * Spark would list the paths (in a parallel-listing job above 32
+    * paths or 32 sibling dirs) and then infer the schema from ONE
+    * footer (`spark.sql.parquet.mergeSchema` is off and Spark writes no
+    * summary files) inside another job; a job's fixed cost dominates a
+    * small read. This walks the paths once, reads that same footer —
+    * the first data file by sorted path — with Spark's own code
+    * ([[FooterSchema.of]]), and hands the walk to Spark as the scan's
+    * file index ([[FooterSchema.scan]]), so the read neither lists
+    * storage twice nor starts a job. The walk applies Spark's
+    * hidden-name rule: a `_` name without `=`, a `.` name and a
+    * `._COPYING_` file are skipped. The index's `refresh()` lists
+    * storage again.
+    *
+    * Partition discovery, `basePath` and `recursiveFileLookup` behave as
+    * in `spark.read`. `partitionTypes` fixes the type of discovered
+    * `k=v` columns, as a user-schema field does in `spark.read` (a
+    * `symbol` typed string keeps "005930" a string, where inference
+    * reads 5930); a field that names no discovered column reads as a
+    * data column.
+    *
+    * With no data file to read — a missing or empty path (a glob is not
+    * expanded, so it counts as missing) — it is the plain
+    * `spark.read.options(options).parquet(paths: _*)`, so errors stay
+    * Spark's own. */
+  def parquet(spark: SparkSession, paths: Seq[String], options: Map[String, String],
+              partitionTypes: StructType = new StructType()): DataFrame = {
+    val resolver = spark.sessionState.conf.resolver
+    (for {
+      listing <- list(spark, paths)
+      first <- listing.flatMap(_._2).minByOption(_.getPath.toString)
+      schema <- FooterSchema.of(spark, first)
+    } yield {
+      val data = schema.filterNot(f => partitionTypes.exists(p => resolver(p.name, f.name)))
+      FooterSchema.scan(spark, listing, options, StructType(data ++ partitionTypes))
+    }).getOrElse(spark.read.options(options).parquet(paths: _*))
+  }
+
+  private def hidden(s: FileStatus): Boolean = {
+    val name = s.getPath.getName
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+  }
+
+  /** Each path, qualified, with the non-hidden files under it; None when
+    * a path is missing. */
+  private def list(spark: SparkSession,
+                   paths: Seq[String]): Option[Seq[(Path, Seq[FileStatus])]] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    def hidden(s: FileStatus): Boolean = {
-      val name = s.getPath.getName
-      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
-        name.endsWith("._COPYING_")
-    }
-    def leaves(p: String): Option[Seq[FileStatus]] = {
+    try Some(paths.map { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(conf)
       def walk(s: FileStatus): Seq[FileStatus] =
         if (s.isFile) Seq(s)
         else fs.listStatus(s.getPath).toSeq.filterNot(hidden).flatMap(walk)
-      try Some(walk(fs.getFileStatus(path)))
-      catch { case _: java.io.FileNotFoundException => None }
-    }
-    val found = paths.map(leaves)
-    if (found.contains(None)) None
-    else found.flatten.flatten.filterNot(hidden).minByOption(_.getPath.toString)
+      val root = fs.makeQualified(path)
+      root -> walk(fs.getFileStatus(root)).filterNot(hidden)
+    })
+    catch { case _: java.io.FileNotFoundException => None }
   }
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =

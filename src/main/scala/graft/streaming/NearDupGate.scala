@@ -764,7 +764,7 @@ object NearDupGate {
     val raw =
       (if (Snapshot.enabled(spark, outPath)) Snapshot.readVersion(spark, outPath)
        else None).getOrElse(
-        spark.read.option("recursiveFileLookup", "true").parquet(outPath))
+        Tables.parquet(spark, Seq(outPath), Map("recursiveFileLookup" -> "true")))
     // with the gate's statePath given, pending tombstones subtract at
     // read — a taken-down doc is invisible to corpus readers from the
     // instant of retireAppend, not the next eviction window
@@ -1338,7 +1338,7 @@ object NearDupGate {
       // recursive lookup reads every leaf of a split trie flat (the
       // partition cols live only in dir names, which are re-derived)
       clusterBy(
-        spark.read.option("recursiveFileLookup", "true").parquet(dir)
+        Tables.parquet(spark, Seq(dir), Map("recursiveFileLookup" -> "true"))
           .withColumn("bucket", keyBucket(hash, newBuckets)),
         Seq("bucket"), newBuckets)
         .write.partitionBy("bucket").parquet(tmp.toString)

@@ -633,10 +633,8 @@ object PostingsIndex {
     val (bucketed, flat) = dirs.partition(hasTokenBucketDirs(fs, _))
     if (bucketed.isEmpty || flat.isEmpty) Tables.parquet(spark, root)
     else {
-      val bDf = spark.read.option("basePath", root)
-        .parquet(bucketed.map(_.toString): _*)
-      val fDf = spark.read.option("basePath", root)
-        .parquet(flat.map(_.toString): _*)
+      val bDf = Tables.parquet(spark, bucketed.map(_.toString), Map("basePath" -> root))
+      val fDf = Tables.parquet(spark, flat.map(_.toString), Map("basePath" -> root))
         .withColumn("tbucket", lit(null).cast("int"))
       bDf.withColumn("tbucket", col("tbucket").cast("int"))
         .unionByName(fDf.select(bDf.columns.map(col): _*))

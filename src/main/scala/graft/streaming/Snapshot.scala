@@ -228,15 +228,22 @@ object Snapshot {
   /** Read snapshot `version` (default: latest). None when no snapshot
     * exists or the manifest is empty (schema unknowable without files).
     *
-    * `partitionCols`: explicit-file reads bypass Spark's partition
-    * discovery, so Hive-style dir columns (`symbol=…`) are absent from
-    * the data files; naming them here reconstructs each from the
-    * manifest's RELATIVE path (stable across live→stale moves, where a
-    * `basePath` option would mis-parse the `_stale/vN` segments) — one
-    * read per distinct partition-value tuple, unioned, values unescaped
-    * as strings (cast downstream if needed), Hive's default-partition
-    * name read back as null. */
-  /** `keepRel` is the manifest-path analog of partition PRUNING: it
+    * `partitionCols`: Hive-style dir columns (`symbol=…`) are absent
+    * from the data files; each named one is rebuilt from the manifest's
+    * RELATIVE path (stable across live→stale moves) as a string,
+    * unescaped, with Hive's default-partition name read back as null,
+    * and null for a file whose path has no such dir. The columns are
+    * the data columns, then `partitionCols` in order. The version is
+    * read as ONE [[Tables.parquet]] relation per layout group — a base
+    * tree (the live root or one `_stale/vN` tree) and the dir shape
+    * under it — with `basePath` at the tree and the named columns typed
+    * string, so Spark's partition discovery parses the dirs from the
+    * listing [[Tables.parquet]] already holds. The live root and each
+    * stale tree are separate groups: under one `basePath`, discovery
+    * stops at the `_stale/vN` segments and fails the read with
+    * CONFLICTING_DIRECTORY_STRUCTURES.
+    *
+    * `keepRel` is the manifest-path analog of partition PRUNING: it
     * filters the version's root-relative file paths BEFORE any read,
     * so a partition-dir predicate (e.g. `tbucket=K` membership) skips
     * the excluded files entirely — the same file-level pruning a plain
@@ -248,8 +255,8 @@ object Snapshot {
                   version: Option[Long] = None,
                   partitionCols: Seq[String] = Nil,
                   keepRel: String => Boolean = _ => true): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.lit
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val v = version.orElse(latestVersion(spark, root)).getOrElse(return None)
     val rootP = new Path(root)
     val fs = fsOf(spark, rootP)
@@ -260,28 +267,23 @@ object Snapshot {
     if (relsAll.isEmpty) return None
     val resolvedAll = filesAt(spark, root, v)
     val prunedPairs = (relsAll zip resolvedAll).filter(p => keepRel(p._1))
-    val (rels, resolved) =
-      if (prunedPairs.nonEmpty) prunedPairs.unzip
-      else (relsAll, resolvedAll) // see scaladoc: never an empty read
-    if (partitionCols.isEmpty) return Some(Tables.parquet(spark, resolved: _*))
-    def values(rel: String): Seq[Option[String]] = {
-      val kv = rel.split("/").dropRight(1).flatMap { seg =>
-        seg.split("=", 2) match {
-          case Array(k, raw) =>
-            Some(k -> (if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) None
-                       else Some(ExternalCatalogUtils.unescapePathName(raw))))
-          case _ => None
-        }
-      }.toMap
-      partitionCols.map(c => kv.getOrElse(c, None))
-    }
-    Some((rels zip resolved).groupBy { case (rel, _) => values(rel) }
-      .map { case (vals, group) =>
-        (partitionCols zip vals).foldLeft(
-          Tables.parquet(spark, group.map(_._2): _*)) { case (df, (c, ov)) =>
-          df.withColumn(c, ov.map(lit(_)).getOrElse(lit(null)))
-        }
-      }.reduce(_ unionByName _))
+    val pairs = if (prunedPairs.nonEmpty) prunedPairs
+                else relsAll zip resolvedAll // see scaladoc: never an empty read
+    if (partitionCols.isEmpty) return Some(Tables.parquet(spark, pairs.map(_._2): _*))
+    Some(pairs.groupBy { case (rel, file) =>
+      val shape = rel.split("/").toSeq.dropRight(1).map { seg =>
+        seg.split("=", 2) match { case Array(k, _) => k + "="; case _ => seg }
+      }
+      (file.stripSuffix(rel), shape)
+    }.map { case ((tree, shape), group) =>
+      val keys = shape.filter(_.endsWith("=")).map(_.dropRight(1))
+      val df = Tables.parquet(spark, group.map(_._2), Map("basePath" -> tree),
+        StructType(partitionCols.filter(keys.contains).map(StructField(_, StringType))))
+      df.select(df.columns.toSeq
+        .filterNot(c => keys.contains(c) || partitionCols.contains(c)).map(col) ++
+        partitionCols.map(c =>
+          if (keys.contains(c)) col(c) else lit(null).cast(StringType).as(c)): _*)
+    }.reduce(_ unionByName _))
   }
 
   /** Expire history: keep the newest `keepVersions` manifests readable,

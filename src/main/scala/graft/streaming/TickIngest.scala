@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{StructField, StructType}
 import graft.normalize.Normalize
 import graft.Tables
 
@@ -68,20 +69,28 @@ object TickIngest {
     * the checkpoint commit replays the batch; without the anti-join the
     * replay duplicates every row.
     *
-    * Scale shape: the existing-keys read LISTS ONLY the batch's symbol
-    * partition directories (O(batch symbols) discovery per batch — a
-    * whole-lake `read.parquet(root)` would re-list every file ever
-    * written each trigger, and a 10 s-cadence sink falls behind once the
-    * lake holds 10⁵+ files) and is further pruned to the batch's
-    * [min, max] event-time range (parquet row-group stats); only
-    * (symbol, time) key columns are read. A symbol directory that does
+    * Scale shape: the existing-keys read is ONE relation over the
+    * batch's symbol partition directories (O(batch symbols) discovery
+    * per batch — a whole-lake `read.parquet(root)` would re-list every
+    * file ever written each trigger, and a 10 s-cadence sink falls
+    * behind once the lake holds 10⁵+ files), listed once on the driver
+    * by [[Tables.parquet]] with `basePath` at the lake root and `symbol`
+    * typed as the batch's column, so the scan starts no listing or
+    * schema job, and the symbols' small files pack into a few scan
+    * tasks instead of one read (and at least one task) per symbol.
+    * Only (symbol, time) key columns are read, filtered to the batch's
+    * [min, max] event-time range. That filter does NOT prune files or
+    * row groups: the lake writes `time` as INT96 (Spark's default
+    * `outputTimestampType`), and Spark builds no parquet row-group
+    * filter on an INT96 column, so every existing row of the touched
+    * symbols is read and then filtered. A symbol directory that does
     * not exist yet (first batch for that symbol, or a brand-new lake)
     * contributes nothing; any OTHER filesystem/read error PROPAGATES —
     * swallowing it would silently disable idempotence for the batch.
     * Null keys still dedup: the anti-join is null-safe on both columns
-    * and null event times ride past the time-range pushdown, so a
-    * replayed null-keyed row cannot re-append forever. The batch is
-    * persisted across its consumers and unpersisted after the write.
+    * and null event times pass the time-range filter, so a replayed
+    * null-keyed row cannot re-append forever. The batch is persisted
+    * across its consumers and unpersisted after the write.
     *
     * Returns the batch's `symbol=` partition dir names (Spark-escaped,
     * root-relative) — the write's touched set, which the snapshot sink
@@ -92,7 +101,7 @@ object TickIngest {
     val b = batch.dropDuplicates("symbol", "time").persist()
     try {
       // one probe job: row count, distinct symbols (collect_set drops
-      // null, hence the flag) and the event-time bounds for the pruning
+      // null, hence the flag) and the event-time bounds of the key read
       val probe = b.agg(count(lit(1)), collect_set(col("symbol")),
         max(col("symbol").isNull), min(col("time")), max(col("time"))).head()
       if (probe.getLong(0) == 0L) return Nil
@@ -110,9 +119,9 @@ object TickIngest {
       val allDirs = syms.map { s =>
         val dirName = "symbol=" + s.map(ExternalCatalogUtils.escapePathName)
           .getOrElse(ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
-        (s, new org.apache.hadoop.fs.Path(root, dirName))
+        new org.apache.hadoop.fs.Path(root, dirName)
       }
-      val touched = allDirs.filter(t => fs.exists(t._2))
+      val touched = allDirs.filter(fs.exists)
       val fresh =
         if (touched.isEmpty) b
         else {
@@ -122,25 +131,21 @@ object TickIngest {
             if (probe.isNullAt(3)) col("time").isNull
             else col("time").isNull ||
               col("time").between(lit(probe.get(3)), lit(probe.get(4)))
-          // per-dir reads with the symbol attached as a LITERAL of the
-          // batch column's type — NOT partition-column discovery, whose
-          // type inference coerces numeric-looking partition values
-          // ("005930" reads back as 5930, and the replay key silently
-          // stops matching)
-          val existingKeys = touched.map { case (s, dir) =>
-            Tables.parquet(spark, dir.toString)
-              .where(timePred)
-              .select(s.map(v => lit(v)).getOrElse(lit(null))
-                .cast(symType).as("_ek_symbol"),
-                col("time").as("_ek_time"))
-          }.reduce(_ union _)
+          // `symbol` typed as the batch column: untyped partition
+          // discovery coerces numeric-looking values ("005930" reads
+          // back as 5930, and the replay key silently stops matching);
+          // the Hive default partition reads back as null
+          val existingKeys = Tables.parquet(spark, touched.map(_.toString),
+              Map("basePath" -> path), StructType(Seq(StructField("symbol", symType))))
+            .where(timePred)
+            .select(col("symbol").as("_ek_symbol"), col("time").as("_ek_time"))
           b.join(existingKeys,
             col("symbol") <=> col("_ek_symbol") &&
               col("time") <=> col("_ek_time"),
             "left_anti")
         }
       fresh.write.mode("append").partitionBy("symbol").parquet(path)
-      allDirs.map(_._2.getName)
+      allDirs.map(_.getName)
     } finally b.unpersist()
   }
 

@@ -1,17 +1,26 @@
 package org.apache.spark.sql.execution.datasources.parquet
 
-import org.apache.hadoop.fs.FileStatus
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.types.StructType
 
-/** Spark's own footer-to-schema conversion, run on the driver. Schema
-  * inference (`mergeSchemasInParallel`) applies the same conversion
-  * inside a one-task Spark job; the reader and converter it uses are
-  * `private[parquet]`, so this bridge lives in their package (the same
-  * pattern as `org.apache.spark.sql.graftext.ColumnBridge`). The
-  * binary-as-string, INT96, TIMESTAMP_NTZ-inference and `nanosAsLong`
-  * session confs and the Spark row-metadata key are honoured exactly as
-  * inference honours them.
+/** Spark's own footer-to-schema conversion and file-scan relation, run
+  * on the driver over a listing the caller already made.
+  *
+  * [[of]]: schema inference (`mergeSchemasInParallel`) applies the same
+  * conversion inside a one-task Spark job; the reader and converter it
+  * uses are `private[parquet]`, so this bridge lives in their package
+  * (the same pattern as `org.apache.spark.sql.graftext.ColumnBridge`).
+  * The binary-as-string, INT96, TIMESTAMP_NTZ-inference and
+  * `nanosAsLong` session confs and the Spark row-metadata key are
+  * honoured exactly as inference honours them.
+  *
+  * [[scan]]: the relation `spark.read.schema(s).options(o).parquet(...)`
+  * builds, with the caller's listing as the file index's cache, so the
+  * index lists nothing (and starts no parallel-listing job) when built.
   */
 object FooterSchema {
   def of(spark: SparkSession, file: FileStatus): Option[StructType] =
@@ -19,4 +28,32 @@ object FooterSchema {
       ParquetFileFormat.readParquetFootersInParallel(
         spark.sessionState.newHadoopConf(), Seq(file), ignoreCorruptFiles = false),
       spark)
+
+  /** `listing` pairs each qualified root path with the leaf files under
+    * it, as Spark's listing would return them. Partition discovery,
+    * `basePath`, `recursiveFileLookup` and the typing of partition
+    * columns by a `schema` field run in Spark's `InMemoryFileIndex` as
+    * in a `spark.read`; the relation's schemas are split the way
+    * `DataSource.resolveRelation` splits a user schema. */
+  def scan(spark: SparkSession, listing: Seq[(Path, Seq[FileStatus])],
+           options: Map[String, String], schema: StructType): DataFrame = {
+    val index = new InMemoryFileIndex(spark, listing.map(_._1), options, Some(schema),
+      new Listed(listing))
+    val partitionSchema = index.partitionSchema
+    val resolver = spark.sessionState.conf.resolver
+    val dataSchema = StructType(
+      schema.filterNot(f => partitionSchema.exists(p => resolver(p.name, f.name))))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
+      dataSchema.asNullable, None, new ParquetFileFormat, CaseInsensitiveMap(options))(spark))
+  }
+
+  /** A listing replayed as the index's cache. `invalidateAll` (what the
+    * index's `refresh()` calls) drops it, so a refresh lists storage. */
+  private final class Listed(listing: Seq[(Path, Seq[FileStatus])]) extends FileStatusCache {
+    private val leaves = new ConcurrentHashMap[Path, Array[FileStatus]]()
+    listing.foreach { case (root, files) => leaves.put(root, files.toArray) }
+    override def getLeafFiles(path: Path): Option[Array[FileStatus]] = Option(leaves.get(path))
+    override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = leaves.put(path, files)
+    override def invalidateAll(): Unit = leaves.clear()
+  }
 }

@@ -769,6 +769,31 @@ class PostingsIndexSpec extends SparkSpec {
       "bucket filter dropped flat-layout rows")
   }
 
+  test("a manifest read over a flat/bucketed shard mix keeps its columns") {
+    import graft.functions.TextAnalysis
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files.createTempDirectory("tf-mixed-snap").toString + "/tf"
+    val b0 = Seq((1L, "join alpha"), (2L, "beta")).toDF("doc_id", "text")
+    val b1 = Seq((3L, "join gamma")).toDF("doc_id", "text")
+    TextAnalysis.tfPostings(b0, "doc_id", "text")
+      .write.mode("overwrite").parquet(s"$root/shard=b0")
+    TextAnalysis.tfPostings(b1, "doc_id", "text")
+      .withColumn("tbucket", PostingsIndex.tokenBucket(col("token")))
+      .write.partitionBy("tbucket").mode("overwrite")
+      .parquet(s"$root/shard=b1")
+    Snapshot.init(spark, root)
+    Snapshot.commit(spark, root, Seq(""))
+    val dataCols = spark.read.parquet(s"$root/shard=b0").columns.toSeq
+    val bucketed = Snapshot.readVersion(spark, root, partitionCols = Seq("shard")).get
+    assert(bucketed.columns.toSeq == dataCols :+ "shard")
+    assert(bucketed.select("shard", "doc_id").distinct().collect()
+      .map(r => (r.getString(0), r.getLong(1))).sorted.toSeq ==
+      Seq(("b0", 1L), ("b0", 2L), ("b1", 3L)))
+    val both = Snapshot.readVersion(spark, root, partitionCols = Seq("shard", "tbucket")).get
+    assert(both.columns.toSeq == dataCols ++ Seq("shard", "tbucket"))
+    assert(both.where(col("tbucket").isNull).select("doc_id").distinct().count() == 2L)
+  }
+
   test("the live tf sink maintains BM25-servable artifacts") {
     import graft.functions.TextAnalysis
     implicit val sqlCtx = spark.sqlContext

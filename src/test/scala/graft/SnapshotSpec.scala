@@ -420,6 +420,38 @@ class SnapshotSpec extends SparkSpec {
     assert(rows(Serving.lakeTable(spark, plain)).size == 1)
   }
 
+  test("Serving.lakeTable: a version over live and _stale files, escaped and null symbols") {
+    import graft.queries.Serving
+    def t(s: String) = java.sql.Timestamp.valueOf(s)
+    val dir = java.nio.file.Files.createTempDirectory("snap-mixed-trees").toString
+    val path = s"$dir/data"
+    Snapshot.init(spark, path)
+    val batches = Seq(
+      Seq(("FPT", t("2023-02-07 09:30:00"), 80.0), ("ES=F", t("2023-02-07 09:30:00"), 4100.0),
+        (null, t("2023-02-07 09:30:00"), 1.0)),
+      Seq(("FPT", t("2023-02-07 09:31:00"), 81.0)),
+      Seq(("FPT", t("2023-02-07 09:32:00"), 82.0)))
+    batches.foreach { rows =>
+      Snapshot.commit(spark, path,
+        TickIngest.appendBatchIdempotent(rows.toDF("symbol", "time", "close"), path))
+    }
+    val v = Snapshot.latestVersion(spark, path).get
+    val want = batches.flatten.map { case (s, ts, c) => Seq(ts, c, s).mkString("[", ",", "]") }.sorted
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    assert(rows(Serving.lakeTable(spark, path, version = Some(v))) == want)
+    // only FPT holds more than one file: its files move to _stale, the
+    // other two partitions stay live, so version v spans both trees
+    val (parts, _, _) = LakeMaintenance.compactLake(spark, path, maxFiles = 1,
+      snapshotRoot = Some(path))
+    assert(parts == 1)
+    assert(Snapshot.filesAt(spark, path, v).count(_.contains("/_stale/")) == 3)
+    val pinned = Serving.lakeTable(spark, path, version = Some(v))
+    assert(pinned.columns.toSeq == Seq("time", "close", "symbol"))
+    assert(rows(pinned) == want)
+    assert(rows(Serving.lakeTable(spark, path)) == want)
+  }
+
   test("Serving.history on a pinned lake stays exact across a crashed compaction swap") {
     // the q_api_history endpoint shape (filter → orderBy desc → limit n)
     // served from Snapshot-pinned lake reads, asserted across BOTH

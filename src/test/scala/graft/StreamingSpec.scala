@@ -435,6 +435,27 @@ class StreamingSpec extends SparkSpec {
     assert(lake2.where(col("symbol") === "ES=F").count() == 1)
   }
 
+  test("T2: replays of numeric-looking and 40-symbol batches append nothing") {
+    // "005930" must stay a string on the existing-keys read (partition
+    // inference would read 5930 and the replay key would stop matching),
+    // and a batch over more than 32 symbol dirs must dedup the same way
+    val dir = java.nio.file.Files.createTempDirectory("lake-replay-wide").toString
+    val path = s"$dir/data"
+    val numeric = Seq(
+      ("005930", ts("2023-02-07 09:30:00"), 71.2),
+      ("000660", ts("2023-02-07 09:30:00"), 120.5))
+      .toDF("symbol", "time", "close")
+    TickIngest.appendBatchIdempotent(numeric, path)
+    TickIngest.appendBatchIdempotent(numeric, path)
+    assert(spark.read.parquet(path).count() == 2)
+    val wide = (0 until 40).map(i => (s"S$i", ts("2023-02-07 09:31:00"), i.toDouble))
+      .toDF("symbol", "time", "close")
+    assert(TickIngest.appendBatchIdempotent(wide, path).size == 40)
+    TickIngest.appendBatchIdempotent(wide, path)
+    TickIngest.appendBatchIdempotent(numeric.union(wide), path)
+    assert(spark.read.parquet(path).count() == 42)
+  }
+
   test("NearDupGate: cross-batch near-dups drop, replays idempotent") {
     import graft.streaming.NearDupGate
     val dir = java.nio.file.Files.createTempDirectory("neardup").toString

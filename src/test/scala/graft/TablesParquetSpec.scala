@@ -15,13 +15,34 @@ class TablesParquetSpec extends SparkSpec {
   private def tmp(name: String): String =
     Files.createTempDirectory(name).toString + "/t"
 
-  private def sameAsSpark(paths: String*): Unit = {
-    val ours = Tables.parquet(spark, paths: _*)
-    val theirs = spark.read.parquet(paths: _*)
+  private def sameAsSpark(paths: String*): Unit =
+    sameRows(Tables.parquet(spark, paths: _*), spark.read.parquet(paths: _*))
+
+  private def sameRows(ours: DataFrame, theirs: DataFrame): Unit = {
     assert(ours.schema == theirs.schema)
     assert(ours.collect().map(_.toString).sorted.toSeq ==
       theirs.collect().map(_.toString).sorted.toSeq)
   }
+
+  /** 40 part files in one directory, and their paths. */
+  private def fortyFiles(): (String, Seq[String]) = {
+    val dir = tmp("tables-forty")
+    spark.range(400).selectExpr("id", "id * 2.5 AS x").repartition(40).write.parquet(dir)
+    val files = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted.toSeq
+    assert(files.size == 40)
+    (dir, files)
+  }
+
+  /** A lake of 40 `symbol=` dirs whose symbols all look numeric. */
+  private def fortySymbolLake(): String = {
+    val root = tmp("tables-forty-syms")
+    (0 until 40).map(i => (f"$i%06d", i.toLong, i * 1.5)).toDF("symbol", "time", "price")
+      .write.partitionBy("symbol").parquet(root)
+    root
+  }
+
+  private val symbolString = StructType(Seq(StructField("symbol", StringType)))
 
   /** A `symbol=`-partitioned lake whose symbols all look numeric, so
     * Spark's partition inference types the column as a number. */
@@ -113,6 +134,12 @@ class TablesParquetSpec extends SparkSpec {
     val snapLake = numericSymbolLake()
     Snapshot.init(spark, snapLake)
     Snapshot.commit(spark, snapLake, Seq("symbol=005930", "symbol=000660"))
+    // a mixed-depth tree, which only a recursive lookup reads
+    val mixed = tmp("tables-mixed")
+    Seq((1L, "a")).toDF("id", "s").write.parquet(s"$mixed/bucket=0")
+    Seq((2L, "b")).toDF("id", "s").write.parquet(s"$mixed/bucket=1/sub=0")
+    val recursive = Map("recursiveFileLookup" -> "true")
+    val base = Map("basePath" -> lake)
     var dfs = Seq.empty[DataFrame]
     assert(jobsToBuild {
       dfs = Seq(
@@ -121,10 +148,15 @@ class TablesParquetSpec extends SparkSpec {
         Tables.lineitem(spark, sf0001),
         Serving.lakeTable(spark, lake),
         Serving.lakeTable(spark, snapLake),
-        Snapshot.readVersion(spark, snapLake, partitionCols = Seq("symbol")).get)
+        Snapshot.readVersion(spark, snapLake, partitionCols = Seq("symbol")).get,
+        Tables.parquet(spark, Seq(mixed), recursive),
+        Tables.parquet(spark, Seq(s"$lake/symbol=005930"), base))
     } == 0)
-    assert(dfs.map(_.schema.nonEmpty) == Seq.fill(6)(true))
+    assert(dfs.map(_.schema.nonEmpty) == Seq.fill(8)(true))
     assert(dfs(4).count() == 3L)
+    sameRows(dfs(6), spark.read.options(recursive).parquet(mixed))
+    sameRows(dfs(7), spark.read.options(base).parquet(s"$lake/symbol=005930"))
+    assert(dfs(7).columns.toSeq == Seq("time", "price", "symbol"))
     // the check sees inference jobs when there are any
     assert(jobsToBuild(spark.read.parquet(lake)) >= 1)
   }
@@ -137,5 +169,47 @@ class TablesParquetSpec extends SparkSpec {
     val missing = s"$dir/absent"
     assert(intercept[AnalysisException](Tables.parquet(spark, missing)).getCondition ==
       intercept[AnalysisException](spark.read.parquet(missing)).getCondition)
+  }
+
+  test("40 explicit files: zero jobs where Spark starts a parallel-listing job") {
+    val (_, files) = fortyFiles()
+    var ours: DataFrame = null
+    assert(jobsToBuild { ours = Tables.parquet(spark, files: _*) } == 0)
+    assert(jobsToBuild(spark.read.parquet(files: _*)) >= 1)
+    sameRows(ours, spark.read.parquet(files: _*))
+  }
+
+  test("40 symbol= dirs with a typed partition column: zero jobs, string symbols") {
+    val root = fortySymbolLake()
+    val dirs = (0 until 40).map(i => f"$root/symbol=$i%06d")
+    val base = Map("basePath" -> root)
+    var ours: DataFrame = null
+    assert(jobsToBuild {
+      ours = Tables.parquet(spark, dirs, base, symbolString)
+    } == 0)
+    val schema = StructType(Seq(StructField("time", LongType),
+      StructField("price", DoubleType), StructField("symbol", StringType)))
+    var theirs: DataFrame = null
+    assert(jobsToBuild {
+      theirs = spark.read.options(base).schema(schema).parquet(dirs: _*)
+    } >= 1)
+    sameRows(ours, theirs)
+    assert(ours.schema("symbol").dataType == StringType)
+    assert(ours.where($"symbol" === "000007").count() == 1L)
+  }
+
+  test("refresh() lists storage again instead of replaying the captured listing") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val (dir, _) = fortyFiles()
+    val df = Tables.parquet(spark, dir)
+    spark.range(400, 410).selectExpr("id", "id * 2.5 AS x").coalesce(1)
+      .write.mode("append").parquet(dir)
+    // the DataFrame holds its listing, as a `spark.read` DataFrame does
+    assert(df.count() == 400L && df.inputFiles.length == 40)
+    val index = df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
+    }.get
+    index.refresh()
+    assert(df.count() == 410L && df.inputFiles.length == 41)
   }
 }
