@@ -61,6 +61,33 @@ object Tables {
     }).getOrElse(spark.read.options(options).parquet(paths: _*))
   }
 
+  /** Partitioned leaves read as ONE [[parquet]] relation per layout.
+    * Each leaf is (tree, dir relative to the tree, path to read); the
+    * leaves that share a tree and a dir shape — the `k=` keys in order,
+    * any other segment literal — are one read with `basePath` at the
+    * tree, so partition discovery types each `k=v` column that
+    * `partitionCols` names. The columns are the data columns, then
+    * `partitionCols` in order: a named key the shape lacks reads as
+    * null, a key it does not name drops. Layouts are separate reads,
+    * unioned by name: under one `basePath`, dirs of different depths,
+    * or a non-`k=v` segment, fail discovery with
+    * CONFLICTING_DIRECTORY_STRUCTURES. */
+  def parquetByLayout(spark: SparkSession, leaves: Seq[(String, String, String)],
+                      partitionCols: StructType): DataFrame =
+    leaves.groupBy { case (tree, rel, _) =>
+      (tree, rel.split("/").toSeq.map { seg =>
+        seg.split("=", 2) match { case Array(k, _) => k + "="; case _ => seg }
+      })
+    }.map { case ((tree, shape), group) =>
+      val keys = shape.filter(_.endsWith("=")).map(_.dropRight(1))
+      val df = parquet(spark, group.map(_._3), Map("basePath" -> tree),
+        StructType(partitionCols.filter(f => keys.contains(f.name))))
+      df.select(df.columns.toSeq.filterNot(c =>
+          keys.contains(c) || partitionCols.fieldNames.contains(c)).map(col) ++
+        partitionCols.map(f => if (keys.contains(f.name)) col(f.name)
+          else lit(null).cast(f.dataType).as(f.name)): _*)
+    }.reduce(_ unionByName _)
+
   private def hidden(s: FileStatus): Boolean = {
     val name = s.getPath.getName
     (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||

@@ -382,7 +382,8 @@ t AS (SELECT doc_id, CAST(sum(len(string_split(trim(ds), '  '))) AS INTEGER)
 
   /** The vocabulary table from the accumulated shards: ingest − retire,
     * vanished words net to wc = 0 and drop (a zero-count word must not
-    * reach pair counting). Reads through the m-shard watermark rule. */
+    * reach pair counting). Reads through the m-shard watermark rule.
+    * A [[ShardWrite.CountChannel]] read. */
   def wordCountsFromShards(spark: SparkSession, dir: String): DataFrame =
     countChannel(dir).netted(spark)
 

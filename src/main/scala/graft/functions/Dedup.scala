@@ -220,7 +220,8 @@ object Dedup {
     * ingest − retire nets to the retained corpus's exact doc
     * frequencies (zero-netted shingles vanish), then the same
     * minDf cut + (doc_freq DESC, shingle ASC) top-k as the fused
-    * miner. Bit-identical by count additivity; shares its oracle. */
+    * miner. Bit-identical by count additivity; shares its oracle.
+    * A [[ShardWrite.CountChannel]] read. */
   def boilerplateFromShards(spark: org.apache.spark.sql.SparkSession,
                             dir: String, minDf: Int,
                             topK: Int): DataFrame =
@@ -241,7 +242,8 @@ object Dedup {
     * through the compaction watermark rule; the retire table
     * ([[lineStatsRetire]] at `retirePath`, by default `$dir/retire`)
     * subtracts — a line key netted to zero vanished with its documents
-    * and must not gate anything. */
+    * and must not gate anything.
+    * A [[ShardWrite.CountChannel]] read. */
   def hotLinesFromShards(spark: org.apache.spark.sql.SparkSession,
                          dir: String, minDocs: Int,
                          retirePath: Option[String] = None): DataFrame = {
@@ -447,7 +449,11 @@ object Dedup {
   // ---- incremental winnow: the fingerprint table as a maintained
   // ---- artifact ------------------------------------------------------
 
-  private val WinnowFpSchema = "doc_id BIGINT, fp BIGINT"
+  /** The fingerprint table at `dir` with its doc-id tombstones at
+    * `retirePath` ([[windowRetireAppend]]). */
+  private def winnowFps(dir: String, retirePath: String) =
+    ShardWrite.SetChannel(dir, retirePath, "doc_id BIGINT, fp BIGINT",
+      Seq("doc_id"))
 
   /** Per-batch maintenance of the winnow FINGERPRINT table — the
     * incremental twin of [[winnowPairs]]' mining half, the same shape
@@ -471,39 +477,33 @@ object Dedup {
       winnowFingerprints(batch, id, text, n, w))
   }
 
-  /** [[winnowPairs]] SERVED from the maintained fingerprint table:
-    * zero shingle/hash/window jobs at read — the mine ran once per
-    * batch at ingest; the pair bucketing is the only corpus-scale
-    * work. Bit-identical to the fused path over the same corpus (the
-    * shard union is the exact distinct fingerprint table); shares its
-    * oracle. With `retirePath` (the doc-id tombstone channel —
-    * [[windowRetireAppend]]'s shape), retired docs' fingerprints
-    * anti-join out BEFORE pair generation: pairs that existed only
-    * through a retired doc vanish, pairwise-exact. */
+  /** [[winnowPairs]] SERVED from the maintained fingerprint table, a
+    * [[ShardWrite.SetChannel]] read: zero shingle/hash/window jobs at
+    * read — the mine ran once per batch at ingest; the pair bucketing
+    * is the only corpus-scale work. Bit-identical to the fused path
+    * over the same corpus (the shard union is the exact distinct
+    * fingerprint table); shares its oracle. Fingerprints of docs
+    * tombstoned at `retirePath` ([[windowRetireAppend]]) anti-join out
+    * BEFORE pair generation: pairs that existed only through a retired
+    * doc vanish, pairwise-exact. An empty channel reads as the plain
+    * table. */
   def winnowPairsFromShards(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, minShared: Int = 2,
-                            retirePath: Option[String] = None): DataFrame = {
+                            dir: String, retirePath: String,
+                            minShared: Int = 2): DataFrame = {
     require(readParamsMarker(spark, s"$dir/_NW").isDefined,
       s"$dir has no _NW marker — not a maintained winnow fingerprint table")
-    val fps = ShardWrite.readShards(spark, dir, WinnowFpSchema)
-    val retained = retirePath match {
-      case None => fps
-      case Some(rp) =>
-        fps.join(ShardWrite.readShards(spark, rp, "doc_id LONG"),
-          Seq("doc_id"), "left_anti")
-    }
-    bucketPairCounts(retained, "fp", "shared_fps")
+    bucketPairCounts(winnowFps(dir, retirePath).retained(spark), "fp",
+        "shared_fps")
       .where(col("shared_fps") >= minShared)
   }
 
-  /** PHYSICAL tombstone fold for the fingerprint table — identical
-    * contract to [[foldRetiredWindows]] (doc-keyed SET rows, doc-id
-    * channel): retired docs' fingerprints drop from the bytes as an
-    * anti-join compaction merge, the channel is consumed after; with
-    * fewer than two live shards the fold WAITS. */
+  /** PHYSICAL tombstone fold for the fingerprint table
+    * ([[ShardWrite.SetChannel.fold]]): retired docs' fingerprints drop
+    * from the bytes, the channel is consumed after; with fewer than
+    * two live shards the fold WAITS. */
   def foldRetiredWinnowFps(spark: org.apache.spark.sql.SparkSession,
                            dir: String, retirePath: String): Boolean =
-    foldRetiredDocKeyed(spark, dir, retirePath, WinnowFpSchema)
+    winnowFps(dir, retirePath).fold(spark)
 
   /** ExactSubstr-style repeated-substring spans (Lee et al. 2022,
     * "Deduplicating Training Data Makes Language Models Better" — the
@@ -607,38 +607,28 @@ object Dedup {
     ShardWrite.appendBatch(dir, batchId, substrWindows(batch, id, text, L))
   }
 
-  /** [[exactSubstrSpans]] SERVED from the maintained window table:
-    * zero tokenize/hash jobs at read — the mine ran once per batch at
-    * ingest. `L` re-derives from the recorded marker, never a
-    * caller-remembered number. With `retirePath` (a doc-id tombstone
-    * channel — [[windowRetireAppend]]), the retired docs' window rows
+  /** The window table at `dir` with its doc-id tombstones at
+    * `retirePath` ([[windowRetireAppend]]). */
+  private def windows(dir: String, retirePath: String) =
+    ShardWrite.SetChannel(dir, retirePath, SubstrWindowSchema, Seq("doc_id"))
+
+  /** [[exactSubstrSpans]] SERVED from the maintained window table, a
+    * [[ShardWrite.SetChannel]] read: zero tokenize/hash jobs at read —
+    * the mine ran once per batch at ingest. `L` re-derives from the
+    * recorded marker, never a caller-remembered number. The window
+    * rows of docs tombstoned at `retirePath` ([[windowRetireAppend]])
     * anti-join out BEFORE the span derivation: the window table is
     * doc-keyed, so the retained rows are EXACTLY the retained corpus's
     * window table — a window repeated only because of a retired doc
     * correctly stops being marked, and the retired doc's own spans
     * vanish. Equality with a retained-corpus recompute is the oracle
-    * row's pin, not an approximation. */
+    * row's pin, not an approximation. An empty channel reads as the
+    * plain table, with zero extra plan nodes. */
   def exactSubstrSpansFromShards(spark: org.apache.spark.sql.SparkSession,
-                                 dir: String,
-                                 retirePath: Option[String] = None): DataFrame = {
+                                 dir: String, retirePath: String): DataFrame = {
     val l = readLMarker(spark, dir).getOrElse(throw new IllegalStateException(
       s"$dir has no _L marker — not a maintained ExactSubstr window table"))
-    spansFromWindows(readWindowsRetained(spark, dir, retirePath), l)
-  }
-
-  /** The accumulated window rows minus a tombstone channel — what the
-    * span derivation scans. No channel → the plain read, zero extra
-    * plan nodes. */
-  private def readWindowsRetained(spark: org.apache.spark.sql.SparkSession,
-                                  dir: String,
-                                  retirePath: Option[String]): DataFrame = {
-    val rows = ShardWrite.readShards(spark, dir, SubstrWindowSchema)
-    retirePath match {
-      case None => rows
-      case Some(rp) =>
-        rows.join(ShardWrite.readShards(spark, rp, "doc_id LONG"),
-          Seq("doc_id"), "left_anti")
-    }
+    spansFromWindows(windows(dir, retirePath).retained(spark), l)
   }
 
   /** TOMBSTONES for the window-mine families: doc ids leaving the
@@ -661,23 +651,13 @@ object Dedup {
     ShardWrite.compactShards(spark, dir, SubstrWindowSchema)(identity)
 
   /** PHYSICAL tombstone fold for the window table — the maintenance
-    * completion of [[windowRetireAppend]], same shape as the edge
-    * list's ([[GraphRank.foldRetiredPairs]]): the retired docs' rows
-    * drop from the BYTES as a compaction variant
-    * ([[ShardWrite.foldRetired]] with the doc-keyed anti-join as the
-    * merge), then the channel is consumed. Returns true iff the fold
-    * consumed the channel. */
+    * completion of [[windowRetireAppend]] ([[ShardWrite.SetChannel.fold]]):
+    * the retired docs' rows drop from the BYTES as a compaction, then
+    * the channel is consumed. Returns true iff the fold consumed the
+    * channel. */
   def foldRetiredWindows(spark: org.apache.spark.sql.SparkSession,
                          dir: String, retirePath: String): Boolean =
-    foldRetiredDocKeyed(spark, dir, retirePath, SubstrWindowSchema)
-
-  /** [[ShardWrite.foldRetired]] for the doc-keyed SET tables
-    * ([[foldRetiredWindows]], [[foldRetiredWinnowFps]]). */
-  private def foldRetiredDocKeyed(spark: org.apache.spark.sql.SparkSession,
-                                  dir: String, retirePath: String,
-                                  schema: String): Boolean =
-    ShardWrite.foldRetired(spark, dir, schema, retirePath)(
-      _.join(_, Seq("doc_id"), "left_anti"))
+    windows(dir, retirePath).fold(spark)
 
   private def verifyLMarker(spark: org.apache.spark.sql.SparkSession,
                             dir: String, l: Int): Unit =

@@ -1,6 +1,7 @@
 package graft.functions
 
-import java.util.concurrent.{Callable, ExecutorService, Executors}
+import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService,
+  ExecutorService, Executors, TimeUnit}
 
 import org.apache.spark.sql.SparkSession
 
@@ -23,31 +24,49 @@ import org.apache.spark.sql.SparkSession
   * fires on non-local sources.
   *
   * Threads run with the caller's SparkSession set active (SQLConf and
-  * session state resolution are thread-local). Failures propagate: the
-  * first thrown cause is rethrown on the caller thread after all tasks
-  * settle, so no thread leaks past the call. */
+  * session state resolution are thread-local), each in its own job
+  * group with `interruptOnCancel`. Failures propagate: at the first
+  * failure, in whatever order the thunks finish, the peers' job groups
+  * are cancelled, the pool is interrupted and awaited, and that first
+  * cause is rethrown on the caller thread — no thread, and no Spark job
+  * a thunk started, outlives the call. */
 object DriverParallel {
 
   def run[T](spark: SparkSession, thunks: Seq[() => T]): Seq[T] = {
     if (thunks.isEmpty) return Seq.empty
     if (thunks.size == 1) return Seq(thunks.head())
+    val sc = spark.sparkContext
+    val groups = thunks.indices.map(i =>
+      s"graft-driver-parallel-${java.util.UUID.randomUUID()}-$i")
     val pool: ExecutorService = Executors.newFixedThreadPool(thunks.size)
+    val done = new ExecutorCompletionService[T](pool)
+    var settled = false
     try {
-      val futures = thunks.map { t =>
-        pool.submit(new Callable[T] {
+      val futures = thunks.zip(groups).map { case (t, group) =>
+        done.submit(new Callable[T] {
           override def call(): T = {
             SparkSession.setActiveSession(spark)
+            sc.setJobGroup(group, "DriverParallel.run", interruptOnCancel = true)
             t()
           }
         })
       }
-      futures.map { f =>
-        try f.get()
+      thunks.foreach { _ =>
+        try done.take().get()
         catch {
-          case e: java.util.concurrent.ExecutionException =>
+          case e: ExecutionException =>
+            groups.foreach(sc.cancelJobGroup)
             throw Option(e.getCause).getOrElse(e)
         }
       }
-    } finally pool.shutdown()
+      val out = futures.map(_.get())
+      settled = true
+      out
+    } finally {
+      pool.shutdownNow()
+      while (!pool.awaitTermination(1, TimeUnit.SECONDS)) ()
+      // a job a peer submitted after the first cancel
+      if (!settled) groups.foreach(sc.cancelJobGroup)
+    }
   }
 }

@@ -116,36 +116,39 @@ object GraphRank {
     * already existed (replay). */
   def pairsAppend(pairs: DataFrame, aCol: String, bCol: String,
                   dir: String, batchId: Long): Boolean =
-    ShardWrite.appendBatch(s"$dir/pairs", batchId,
+    edges(dir).append(batchId,
       pairs.select(col(aCol).as("doc_a"), col(bCol).as("doc_b")))
 
-  /** MAINTENANCE for the graph channels — the count-shard compaction
-    * discipline ([[ShardWrite.compactShards]]) on the edge list and the
-    * tombstone set: pairs fold by plain union (the disjoint-pair caller
-    * contract; a DISTINCT would mask a contract violation, so it is
-    * deliberately not applied), tombstones by distinct (set semantics).
-    * Replays of consumed batches skip at the watermark; reads are
+  /** The maintained edge set: `$dir/pairs` rows, tombstoned at
+    * `$dir/retire`, where an edge belongs to both of its documents. */
+  private def edges(dir: String) = ShardWrite.SetChannel(s"$dir/pairs",
+    s"$dir/retire", "doc_a LONG, doc_b LONG", Seq("doc_a", "doc_b"))
+
+  /** MAINTENANCE for the graph channels ([[ShardWrite.SetChannel.compact]]):
+    * pairs fold by plain union — the disjoint-pair caller contract; a
+    * DISTINCT would mask a contract violation, so it is deliberately
+    * not applied — and tombstones by distinct (set semantics). Replays
+    * of consumed batches skip at the watermark; reads are
     * double-count-free across the crash window by the above-watermark
     * rule. */
   def compactPairShards(spark: org.apache.spark.sql.SparkSession,
                         dir: String): ((Int, Int), (Int, Int)) =
-    (ShardWrite.compactShards(spark, s"$dir/pairs",
-        "doc_a LONG, doc_b LONG")(identity),
-      ShardWrite.compactShards(spark, s"$dir/retire",
-        "doc_id LONG")(_.distinct()))
+    edges(dir).compact(spark)
 
   /** Rank derived at read over the accumulated pair shards — the
     * serving half of [[pairsAppend]]: one pruned scan of the fixed-width
-    * (doc_a, doc_b) shard union into the SAME [[pageRank]] iteration
-    * (so the incrementally-maintained result shares `q_pagerank`'s
-    * oracle SQL; [[graft.GraphRankSpec]] additionally pins it to a
-    * batch recompute over the union). The scan replaces the most
-    * expensive input in the bench family — re-mining the minhash pair
-    * graph — with a read of what previous batches already mined. */
+    * (doc_a, doc_b) shard union, minus the edges touching a tombstoned
+    * doc ([[readRetainedPairs]], a [[ShardWrite.SetChannel]] read),
+    * into the SAME [[pageRank]] iteration (so the incrementally-
+    * maintained result shares `q_pagerank`'s oracle SQL, and its
+    * retained-corpus form under tombstones; [[graft.GraphRankSpec]]
+    * additionally pins it to a batch recompute over the union). The scan replaces the most expensive input in the
+    * bench family — re-mining the minhash pair graph — with a read of
+    * what previous batches already mined. */
   def pageRankFromPairs(spark: org.apache.spark.sql.SparkSession,
                         dir: String, iters: Int = 8,
                         damping: Double = 0.85): DataFrame =
-    pageRank(readPairShards(spark, dir), "doc_a", "doc_b", iters, damping)
+    pageRank(readRetainedPairs(spark, dir), "doc_a", "doc_b", iters, damping)
 
   /** The accumulated pair-shard union. Schema is EXPLICIT: a shard
     * written from an empty batch (quiet day / empty partition replay)
@@ -168,54 +171,29 @@ object GraphRank {
     * (replay). */
   def retireAppend(docIds: DataFrame, idCol: String, dir: String,
                    batchId: Long): Boolean =
-    ShardWrite.appendIds(docIds, col(idCol).as("doc_id"), s"$dir/retire",
-      batchId)
-
-  /** The accumulated tombstone set (empty when no retire shard was
-    * ever written). */
-  def retiredDocs(spark: org.apache.spark.sql.SparkSession,
-                  dir: String): DataFrame =
-    ShardWrite.readShards(spark, s"$dir/retire", "doc_id LONG")
+    edges(dir).retire(batchId, docIds, col(idCol))
 
   /** PHYSICAL tombstone fold for the edge list — the maintenance
     * completion of [[retireAppend]]: [[readRetainedPairs]] pays two
     * anti-joins against a tombstone set that grows with takedown
     * history; the fold drops every edge touching a tombstoned doc from
-    * the BYTES and consumes the channel ([[ShardWrite.foldRetired]]:
+    * the BYTES and consumes the channel ([[ShardWrite.SetChannel.fold]]:
     * loss-proof commit order, and the fold WAITS while the pair table
     * has fewer than two live shards). Returns true iff the fold
     * consumed the channel. */
   def foldRetiredPairs(spark: org.apache.spark.sql.SparkSession,
                        dir: String): Boolean =
-    ShardWrite.foldRetired(spark, s"$dir/pairs", "doc_a LONG, doc_b LONG",
-        s"$dir/retire")((p, gone) =>
-      p.join(gone.withColumnRenamed("doc_id", "doc_a"),
-          Seq("doc_a"), "left_anti")
-        .join(gone.withColumnRenamed("doc_id", "doc_b"),
-          Seq("doc_b"), "left_anti"))
+    edges(dir).fold(spark)
 
-  /** [[readPairShards]] minus every edge touching a tombstoned doc —
-    * the retained-set edge view both graph serves (PageRank, CC) read.
-    * Two anti-joins on the (usually small) tombstone side; AQE
-    * broadcasts it below the threshold, hash-partitions past it. */
+  /** [[readPairShards]] minus every edge touching a tombstoned doc
+    * ([[ShardWrite.SetChannel.retained]]) — the retained-set edge view
+    * both graph serves (PageRank, CC) read. Two anti-joins on the
+    * (usually small) tombstone side; AQE broadcasts it below the
+    * threshold, hash-partitions past it. No tombstones → the plain
+    * read. */
   def readRetainedPairs(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): DataFrame = {
-    val gone = retiredDocs(spark, dir)
-    readPairShards(spark, dir)
-      .join(gone.withColumnRenamed("doc_id", "doc_a"),
-        Seq("doc_a"), "left_anti")
-      .join(gone.withColumnRenamed("doc_id", "doc_b"),
-        Seq("doc_b"), "left_anti")
-      .select(col("doc_a"), col("doc_b"))
-  }
-
-  /** [[pageRankFromPairs]] over the RETAINED edge set — rank over the
-    * corpus minus its tombstones, sharing the same iteration as the
-    * batch path (so the row pins to the retained-corpus oracle). */
-  def pageRankFromPairsRetained(spark: org.apache.spark.sql.SparkSession,
-                                dir: String, iters: Int = 8,
-                                damping: Double = 0.85): DataFrame =
-    pageRank(readRetainedPairs(spark, dir), "doc_a", "doc_b", iters, damping)
+                        dir: String): DataFrame =
+    edges(dir).retained(spark)
 
   // ---- STORED-RANK serving artifact --------------------------------
   //
@@ -329,8 +307,7 @@ object GraphRank {
                        dir: String, iters: Int = 8,
                        damping: Double = 0.85): Boolean =
     refreshStore(spark, dir, "ranks", () =>
-      pageRank(readRetainedPairs(spark, dir), "doc_a", "doc_b",
-        iters, damping))
+      pageRankFromPairs(spark, dir, iters, damping))
 
   /** One scan of the current rank artifact — (node, rank). */
   def rankStoreRead(spark: org.apache.spark.sql.SparkSession,

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, sum}
 
 /** Torn-shard-safe replay detection for the batch-shard appenders
-  * ([[CountChannel]], [[appendIds]]).
+  * ([[CountChannel]] for additive counts, [[SetChannel]] for doc-keyed
+  * row sets, [[appendIds]] for tombstone id sets).
   *
   * A bare `fs.exists(shardDir)` replay check has a CRASH HOLE: a writer
   * killed mid-`write.parquet` leaves the directory present but
@@ -137,7 +138,18 @@ object ShardWrite {
     *    double-count every row of the old one.
     * Missing table → zero rows of the schema. */
   def readShards(spark: SparkSession, table: String,
-                 schema: String): org.apache.spark.sql.DataFrame = {
+                 schema: String): org.apache.spark.sql.DataFrame =
+    readLive(spark, liveShards(spark, table), schema)
+
+  private def readLive(spark: SparkSession,
+                       live: Seq[org.apache.hadoop.fs.FileStatus],
+                       schema: String): DataFrame =
+    if (live.isEmpty) empty(spark, schema)
+    else spark.read.schema(schema).parquet(live.map(_.getPath.toString): _*)
+
+  /** The shards [[readShards]] reads, from one listing. */
+  private def liveShards(spark: SparkSession, table: String)
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
     val (fs, _) = fsOf(spark, table)
     val complete = shardDirs(spark, table).filter(st => fs.exists(
       new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
@@ -148,13 +160,10 @@ object ShardWrite {
       s"two complete m-shards share watermark ${wm.get} under $table — " +
       "ambiguous channel state (compaction never produces ties); " +
       "refusing to read")
-    val live = ids.collect {
+    ids.collect {
       case (st, Left(id)) if wm.forall(id > _) => st
       case (st, Right(w)) if wm.contains(w) => st
     }
-    if (live.isEmpty) empty(spark, schema)
-    else spark.read.schema(schema)
-      .parquet(live.map(_.getPath.toString): _*)
   }
 
   /** Consume a channel's COMPLETE shards only — the channel-deletion
@@ -235,36 +244,6 @@ object ShardWrite {
                 batchId: Long): Boolean =
     appendBatch(table, batchId, ids.select(id).distinct())
 
-  /** PHYSICAL tombstone fold for a table whose rows are dropped by a
-    * doc-id tombstone channel (`doc_id LONG` shards at `retirePath`):
-    * `table` compacts with `drop(rows, retiredIds)` as the merge, so the
-    * loss-proof commit order and the strictly-increasing watermark come
-    * from [[compactShards]], then the channel is consumed. With fewer
-    * than two live shards there is nothing to compact and the fold
-    * WAITS (returns false, channel kept — read-time subtraction stays
-    * correct) for the next ingest cadence. The consume deletes only the
-    * COMPLETE shards the fold's read covered ([[consumeCompleteShards]]):
-    * a concurrently in-flight tombstone append survives for the next
-    * fold, and replays of consumed batches are safe by set semantics (a
-    * re-appended tombstone drops rows that no longer exist). Returns
-    * true iff the fold consumed the channel. */
-  def foldRetired(spark: SparkSession, table: String, schema: String,
-                  retirePath: String)(
-      drop: (DataFrame, DataFrame) => DataFrame): Boolean = {
-    val (fs, retP) = fsOf(spark, retirePath)
-    if (!fs.exists(retP)) return false
-    val gone = readShards(spark, retirePath, "doc_id LONG").persist()
-    try {
-      if (gone.head(1).isEmpty) {
-        consumeCompleteShards(spark, retirePath); return false
-      }
-      val (in, _) = compactShards(spark, table, schema)(drop(_, gone))
-      if (in <= 1) return false // nothing to compact — wait for ingest
-      consumeCompleteShards(spark, retirePath)
-      true
-    } finally gone.unpersist()
-  }
-
   /** An ADDITIVE COUNT CHANNEL: per-batch count shards at `ingestTable`
     * and tombstone counts at `retireTable`, both `schema` (DDL), keyed
     * by `keys`; every other column is a count measure. A family supplies
@@ -311,6 +290,75 @@ object ShardWrite {
     private def resum(df: DataFrame): DataFrame = {
       val sums = measures.map(m => sum(col(m)).as(m))
       df.groupBy(keys.map(col): _*).agg(sums.head, sums.tail: _*)
+    }
+  }
+
+  /** A doc-keyed SET CHANNEL: row shards at `ingestTable` (`schema`,
+    * DDL) and a tombstone id set at `retireTable` (`doc_id LONG`). A
+    * row belongs to every document its `docKeys` columns name, and a
+    * tombstone on any of them drops it. A family supplies its
+    * per-batch rows and reads [[retained]]; the storage policy lives
+    * here:
+    *  - [[append]]/[[retire]] write one `_SUCCESS`-claimed shard per
+    *    batch ([[appendBatch]], [[appendIds]]): replays skip, torn
+    *    shards heal.
+    *  - [[retained]] is the live rows minus every row that names a
+    *    tombstoned document, one left-anti join per key. With no
+    *    complete retire shard, decided from the listing, it is the
+    *    plain [[readShards]] plan.
+    *  - [[compact]] folds each table to one m-shard: rows by identity
+    *    (the caller keeps batches row-disjoint; a DISTINCT would mask a
+    *    row appended twice), tombstones by `distinct` (set semantics).
+    *  - [[fold]] drops the tombstoned rows from the BYTES as a
+    *    compaction of the ingest table, then consumes the channel. With
+    *    fewer than two live ingest shards there is nothing to compact
+    *    and the fold WAITS (returns false, channel kept; [[retained]]
+    *    stays correct). The consume deletes only the COMPLETE retire
+    *    shards the fold read ([[consumeCompleteShards]]), so an
+    *    in-flight tombstone append survives for the next fold; a
+    *    replayed tombstone drops rows that no longer exist. Returns
+    *    true iff the fold consumed the channel. */
+  final case class SetChannel(ingestTable: String, retireTable: String,
+                              schema: String, docKeys: Seq[String]) {
+    def append(batchId: Long, rows: DataFrame): Boolean =
+      appendBatch(ingestTable, batchId, rows)
+
+    /** Tombstone the distinct values of `id` over `ids`. */
+    def retire(batchId: Long, ids: DataFrame, id: Column): Boolean =
+      appendIds(ids, id.as("doc_id"), retireTable, batchId)
+
+    def retained(spark: SparkSession): DataFrame = {
+      val rows = readShards(spark, ingestTable, schema)
+      val gone = liveShards(spark, retireTable)
+      if (gone.isEmpty) rows else drop(rows, readLive(spark, gone, "doc_id LONG"))
+    }
+
+    /** (ingest, retire) pairs of (shards in, shards out). */
+    def compact(spark: SparkSession): ((Int, Int), (Int, Int)) =
+      (compactShards(spark, ingestTable, schema)(identity),
+        compactShards(spark, retireTable, "doc_id LONG")(_.distinct()))
+
+    def fold(spark: SparkSession): Boolean = {
+      val (fs, retP) = fsOf(spark, retireTable)
+      if (!fs.exists(retP)) return false
+      val gone = readShards(spark, retireTable, "doc_id LONG").persist()
+      try {
+        if (gone.head(1).isEmpty) {
+          consumeCompleteShards(spark, retireTable); return false
+        }
+        val (in, _) = compactShards(spark, ingestTable, schema)(drop(_, gone))
+        if (in <= 1) return false // nothing to compact — wait for ingest
+        consumeCompleteShards(spark, retireTable)
+        true
+      } finally gone.unpersist()
+    }
+
+    private def drop(rows: DataFrame, gone: DataFrame): DataFrame = {
+      val kept = docKeys.foldLeft(rows)((acc, k) => acc.join(
+        if (k == "doc_id") gone else gone.withColumnRenamed("doc_id", k),
+        Seq(k), "left_anti"))
+      if (kept.columns.sameElements(rows.columns)) kept
+      else kept.select(rows.columns.toSeq.map(col): _*)
     }
   }
 }

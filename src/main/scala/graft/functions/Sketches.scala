@@ -180,7 +180,8 @@ object Sketches {
   /** The whole-stream cell table from the accumulated shards — feeds
     * [[cmsEstimate]] unchanged. Subtracts the retire channel (exact:
     * CMS linearity); cells netted to zero drop, which [[cmsEstimate]]
-    * reads as the zero they are. */
+    * reads as the zero they are.
+    * A [[ShardWrite.CountChannel]] read. */
   def cmsFromShards(spark: org.apache.spark.sql.SparkSession,
                     dir: String): org.apache.spark.sql.DataFrame =
     cmsChannel(dir).netted(spark)

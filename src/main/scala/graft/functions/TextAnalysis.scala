@@ -483,11 +483,11 @@ object TextAnalysis {
                            dir: String): ((Int, Int), (Int, Int)) =
     unigramChannel(dir).compact(spark)
 
-  /** Score documents against the ACCUMULATED count shards: freq sums
-    * per term, and the corpus total is Σ tc over the summed table —
-    * the same integer as the batch path's token-count sum (every token
-    * occurrence lands in exactly one count). Same scoring tail, so
-    * `q_unigram_incr` shares `q_unigram_ppl`'s exact oracle. */
+  /** Score documents against the ACCUMULATED count shards, a
+    * [[ShardWrite.CountChannel]] read: freq sums per term, and the
+    * corpus total is Σ tc over the summed table — the batch path's
+    * token-count sum (every token lands in exactly one count). Same
+    * scoring tail, so `q_unigram_incr` shares `q_unigram_ppl`'s oracle. */
   def unigramXentFromCounts(docs: org.apache.spark.sql.DataFrame,
                             id: String, text: String,
                             dir: String): org.apache.spark.sql.DataFrame = {
@@ -596,13 +596,13 @@ object TextAnalysis {
         .select(lit("t").as("kind"), col("term").as("k"), col("c")))
   }
 
-  /** [[bigramXent]] SERVED from the maintained counts: ingest − retire
-    * nets to the retained corpus's exact counts (zero-netted rows
-    * vanish — unseen bigrams drop from the joins, retired-only terms
-    * leave the vocabulary), then the SAME scoring tail as the fused
-    * path. Bit-identical by count additivity for any doc set whose
-    * bigrams the retained corpus contains (in particular the retained
-    * corpus itself); shares the fused oracle. */
+  /** [[bigramXent]] SERVED from the maintained counts, a
+    * [[ShardWrite.CountChannel]] read: ingest − retire nets to the
+    * retained corpus's exact counts (zero-netted rows vanish — unseen
+    * bigrams drop from the joins, retired-only terms leave the
+    * vocabulary), then the SAME scoring tail as the fused path.
+    * Bit-identical by count additivity for any doc set whose bigrams
+    * the retained corpus contains; shares the fused oracle. */
   def bigramXentFromCounts(docs: org.apache.spark.sql.DataFrame,
                            id: String, text: String, dir: String)
       : org.apache.spark.sql.DataFrame = {
@@ -754,10 +754,10 @@ object TextAnalysis {
     dsirChannel(dir).compact(spark)
 
   /** Derive the complete-residue log-ratio model from the accumulated
-    * count shards — the SAME arithmetic as [[dsirModel]] over the same
-    * integer counts (counts are exact and additive, so the
-    * incrementally-maintained model is BIT-IDENTICAL to a batch retrain
-    * over the union; [[graft.TextRulesSpec]] pins it). */
+    * count shards, a [[ShardWrite.CountChannel]] read — the SAME
+    * arithmetic as [[dsirModel]] over the same exact, additive integer
+    * counts, so the incrementally-maintained model is BIT-IDENTICAL to
+    * a batch retrain over the union ([[graft.TextRulesSpec]] pins it). */
   def dsirModelFromCounts(spark: org.apache.spark.sql.SparkSession,
                           dir: String, buckets: Int = 1024,
                           alpha: Double = 1.0): org.apache.spark.sql.DataFrame = {
@@ -932,10 +932,10 @@ object TextAnalysis {
                       dir: String): ((Int, Int), (Int, Int)) =
     nbChannel(dir).compact(spark)
 
-  /** Assemble the NB model from the accumulated count shards — the same
-    * integer counts, the same [[nbAssemble]] arithmetic, so the
-    * incrementally-maintained model is BIT-IDENTICAL to a batch retrain
-    * over the union ([[graft.TextRulesSpec]] pins it; `q_nb_incr`
+  /** Assemble the NB model from the accumulated count shards, a
+    * [[ShardWrite.CountChannel]] read — the same integer counts and
+    * [[nbAssemble]] arithmetic, so the maintained model is BIT-IDENTICAL
+    * to a batch retrain ([[graft.TextRulesSpec]] pins it; `q_nb_incr`
     * shares `q_nb_classify`'s oracle). Feature totals need no sidecar:
     * every feature lands in exactly one (class, bucket) cell, so
     * tot(c) = Σ_b cnt. A fully-retired class nets to no doc row, so it
@@ -1111,7 +1111,8 @@ object TextAnalysis {
     * netted to zero vanish — a fully-retired group must not linger as
     * a zero-feature row), then the SAME KL derivation as the fused
     * path. Bit-identical to a recompute by count additivity; shares
-    * its oracle. */
+    * its oracle.
+    * A [[ShardWrite.CountChannel]] read. */
   def sourceKlFromCounts(spark: org.apache.spark.sql.SparkSession,
                          dir: String, group: String,
                          buckets: Int = 1024, alpha: Double = 1.0)

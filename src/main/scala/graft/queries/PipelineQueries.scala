@@ -399,25 +399,6 @@ object PipelineQueries {
           .otherwise(lit("tail")).as("ppl_bucket"))
   }
 
-  /** The INCREMENTALLY-MAINTAINED perplexity filter: the corpus arrives
-    * as three hash-split batches, each appending a (term, tc) count
-    * shard ([[TA.unigramCountsAppend]] — `_SUCCESS`-claimed, replay-
-    * idempotent, torn shards healed); scoring derives the frequency
-    * table from the accumulated shards ([[TA.unigramXentFromCounts]]).
-    * Token counts are exact and additive, so the row shares
-    * `q_unigram_ppl`'s exact oracle — with this, every corpus-statistics
-    * family the engine maintains (CMS, DSIR, PageRank/CC edges, df/tf
-    * postings, unigram LM) has an online twin. */
-  def unigramIncrQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"uniincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(
-        TA.unigramCountsAppend(_, "doc_id", "text", dir, _))
-    }
-    TA.unigramXentFromCounts(par(documents(s, d)), "doc_id", "text", dir)
-  }
-
   // ---- BPE tokenizer family ([[graft.functions.Bpe]]) ----
 
   /** q_bpe_train: the tokenizer's merge table trained in-plan — the
@@ -674,39 +655,6 @@ tempplan AS (SELECT source, n_docs, n_tokens,
           CAST(min(n_tokens) OVER () AS BIGINT) AS min_tokens
         FROM agg))"""
 
-  /** q_bpe_incr: the tokenizer maintained ONLINE — the corpus arrives
-    * as three hash-split batches appending (word, wc) count shards
-    * ([[Bpe.wordCountsAppend]], `_SUCCESS`-claimed, replay-idempotent);
-    * training reads the summed shards. Word counts are exact integers
-    * and additive, so shard-maintained ≡ batch recount and the merge
-    * sequence is identical — pinned by sharing q_bpe_train's oracle. */
-  def bpeIncrQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"bpeincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(Bpe.wordCountsAppend(_, "text", dir, _))
-    }
-    Bpe.mergesDf(s,
-      Bpe.trainMerges(Bpe.wordCountsFromShards(s, dir), Bpe.DefaultMerges))
-  }
-
-  /** q_bpe_retire: tokenizer takedowns — retired docs replay their
-    * word counts through the retire channel ([[Bpe.wordCountsRetire]])
-    * and training reads ingest − retire. Oracle = q_bpe_train's SQL
-    * over the retained corpus: a takedown CHANGES THE TOKENIZER the
-    * next maintenance window, which is exactly the contractual point
-    * (the retired text's subwords stop being privileged). */
-  def bpeRetireQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"bperet:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(Bpe.wordCountsAppend(_, "text", dir, _))
-      Bpe.wordCountsRetire(docs.where(RetiredPred), "text", dir, 0L)
-    }
-    Bpe.mergesDf(s,
-      Bpe.trainMerges(Bpe.wordCountsFromShards(s, dir), Bpe.DefaultMerges))
-  }
-
   /** Gopher-style quality-rule battery (Rae et al. 2021): per-rule 0/1
     * flags + conjunction — the standard pre-training filter set. */
   def qualityRules(s: SparkSession, d: String): DataFrame = {
@@ -917,44 +865,12 @@ tempplan AS (SELECT source, n_docs, n_tokens,
       .orderBy(col("doc_freq").desc, col("shingle").asc)
       .limit(topK)
 
-  /** q_boilerplate_incr: the drop-list miner SERVED from maintained
-    * shingle doc-frequency shards ([[Dedup.shingleDfAppend]]) — the
-    * degenerate-bucket mitigation stays current per ingest batch with
-    * zero corpus re-scans. Exact by count additivity; shares
-    * `q_boilerplate`'s oracle. */
-  def boilerplateIncrQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"boilincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(
-        Dedup.shingleDfAppend(_, "doc_id", "text", dir, _))
-    }
-    Dedup.boilerplateFromShards(s, dir, BoilerMinDf, BoilerTopK)
-  }
-
   /** minDf for the retire row: the fixture's planted repeats all cross
     * a `% 10 == 7` doc, so at the miner's default 3 the retained drop
     * list is EMPTY (a trivially-green oracle row asserts nothing); at
     * 2 the retained corpus still mines real shingles and the
     * subtraction is exercised. Shared with the SQL twin. */
   private val RetireBoilerMinDf = 2
-
-  /** q_boilerplate_retire: the miner with tombstones — retired docs'
-    * shingle counts net out ([[Dedup.shingleDfRetire]]), so a shingle
-    * hot only because of taken-down documents leaves the drop list in
-    * the NEXT reading. Oracle = the miner's SQL at
-    * [[RetireBoilerMinDf]] over the retained corpus. */
-  def boilerplateRetireQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"boilret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(
-        Dedup.shingleDfAppend(_, "doc_id", "text", dir, _))
-      Dedup.shingleDfRetire(docs.where(RetiredPred), "doc_id", "text",
-        dir, 0L)
-    }
-    Dedup.boilerplateFromShards(s, dir, RetireBoilerMinDf, BoilerTopK)
-  }
 
   /** Winnowing fingerprints — the ROLLING-hash document fingerprint of
     * the builder brief (windowed minima over the shingle-hash stream,
@@ -967,58 +883,6 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     * shared-paragraph pairs whole-document minhash scores near 0. */
   def winnowPairsQ(s: SparkSession, d: String): DataFrame =
     Dedup.winnowPairs(documents(s, d), "doc_id", "text")
-
-  /** q_winnow_incr: the INCREMENTALLY-MAINTAINED winnow — three
-    * hash-split batches shingle + hash + window once each at ingest
-    * ([[Dedup.winnowFpAppend]]); pairs derive from the accumulated
-    * fingerprint shards with zero mining jobs at read
-    * ([[Dedup.winnowPairsFromShards]]). Fingerprints are per-doc, so
-    * the shard union is the exact whole-corpus table and the row
-    * shares `q_winnow_pairs`' oracle. */
-  def winnowIncrQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"winnowincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(
-        Dedup.winnowFpAppend(_, "doc_id", "text", dir, _))
-    }
-    Dedup.winnowPairsFromShards(s, dir)
-  }
-
-  /** q_winnow_retire: document tombstones on the maintained
-    * fingerprint table — pairs that existed only through a retired doc
-    * vanish at read (pairwise-exact, the pair-shard discipline).
-    * Oracle = `q_winnow_pairs`' SQL over the retained corpus. */
-  def winnowRetireQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"winnowret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(
-        Dedup.winnowFpAppend(_, "doc_id", "text", s"$dir/fps", _))
-      Dedup.windowRetireAppend(docs.where(RetiredPred), "doc_id",
-        s"$dir/ret", 0L)
-    }
-    Dedup.winnowPairsFromShards(s, s"$dir/fps",
-      retirePath = Some(s"$dir/ret"))
-  }
-
-  /** q_winnow_fold: the fingerprint table's PHYSICAL tombstone fold
-    * ([[Dedup.foldRetiredWinnowFps]] — the shared doc-keyed fold
-    * kernel) — same ingest + retire as `q_winnow_retire`, fold, serve
-    * with NO retirePath. Shares the retained-corpus oracle. */
-  def winnowFoldQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"winnowfold:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(
-        Dedup.winnowFpAppend(_, "doc_id", "text", s"$dir/fps", _))
-      Dedup.windowRetireAppend(docs.where(RetiredPred), "doc_id",
-        s"$dir/ret", 0L)
-      require(Dedup.foldRetiredWinnowFps(s, s"$dir/fps", s"$dir/ret"),
-        "winnow fold must consume the channel at three live shards")
-    }
-    Dedup.winnowPairsFromShards(s, s"$dir/fps")
-  }
 
   // no global orderBy: the driver canonicalizes row order before hashing,
   // and a total sort of the pair set is pure cost at corpus scale
@@ -1314,106 +1178,6 @@ tempplan AS (SELECT source, n_docs, n_tokens,
   def substrDedupQ(s: SparkSession, d: String): DataFrame =
     Dedup.exactSubstrStats(par(documents(s, d)), "doc_id", "text", L = 8)
 
-  /** q_substr_incr: the INCREMENTALLY-MAINTAINED ExactSubstr — three
-    * hash-split batches tokenize + hash once each at ingest
-    * ([[Dedup.substrWindowsAppend]]), spans derive from the
-    * accumulated window shards with zero mining jobs at read
-    * ([[Dedup.exactSubstrSpansFromShards]]). Doc-disjoint batches make
-    * the shard union the exact whole-corpus window table, so the row
-    * shares `q_substr_spans`' oracle. */
-  def substrIncrQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"substrincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(
-        Dedup.substrWindowsAppend(_, "doc_id", "text", dir, _, L = 8))
-    }
-    Dedup.exactSubstrSpansFromShards(s, dir)
-  }
-
-  /** q_substr_retire: document tombstones on the maintained window
-    * table — full-corpus ingest (three hash-split window-shard
-    * appends) then ONE retire batch recording the tombstoned doc ids
-    * ([[Dedup.windowRetireAppend]]); the span derivation anti-joins
-    * the retired docs' rows out at read. The window table is
-    * doc-keyed, so retained rows ARE the retained corpus's window
-    * table — the oracle recomputes `q_substr_spans` over the retained
-    * corpus and equality is exact, not approximate. */
-  def substrRetireQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"substrret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(
-        Dedup.substrWindowsAppend(_, "doc_id", "text", s"$dir/win", _, L = 8))
-      Dedup.windowRetireAppend(docs.where(RetiredPred), "doc_id",
-        s"$dir/ret", 0L)
-    }
-    Dedup.exactSubstrSpansFromShards(s, s"$dir/win", Some(s"$dir/ret"))
-  }
-
-  /** q_substr_fold: the window table's PHYSICAL tombstone fold end to
-    * end ([[Dedup.foldRetiredWindows]]) — same ingest + retire as
-    * `q_substr_retire`, then the fold drops the retired docs' rows
-    * from the BYTES (anti-join compaction merge, channel consumed) and
-    * the serve runs with NO retirePath. Shares `q_substr_retire`'s
-    * retained-corpus oracle: read-time subtraction and byte-real
-    * folding pinned identical. */
-  def substrFoldQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"substrfold:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(
-        Dedup.substrWindowsAppend(_, "doc_id", "text", s"$dir/win", _, L = 8))
-      Dedup.windowRetireAppend(docs.where(RetiredPred), "doc_id",
-        s"$dir/ret", 0L)
-      // require: the serve below runs with NO retirePath, so a fold
-      // that WAITED (watermark tie) would silently include retired
-      // rows until the oracle flagged it — match the sibling fold
-      // rows' loud contract (winnowFoldQ / pageRankFoldQ)
-      require(Dedup.foldRetiredWindows(s, s"$dir/win", s"$dir/ret"),
-        "window fold must consume the channel at three live shards")
-    }
-    Dedup.exactSubstrSpansFromShards(s, s"$dir/win")
-  }
-
-  /** q_line_dedup_incr: the incrementally-maintained cross-doc line
-    * statistics ([[Dedup.lineStatsAppend]] — per-batch distinct-doc
-    * counts, additive across doc-disjoint batches), served by
-    * rewriting the corpus against the shard-derived hot set
-    * ([[Dedup.lineDedupFromShards]]). Same dirtied fixture and oracle
-    * as `q_line_dedup`. */
-  def lineDedupIncrQ(s: SparkSession, d: String): DataFrame = {
-    val dirty = lineDedupFixture(s, d)
-    val dir = cachedArtifacts(
-        s"lineincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(dirty, "doc_id")(
-        Dedup.lineStatsAppend(_, "doc_id", "text", dir, _))
-    }
-    Dedup.lineDedupFromShards(dirty, "doc_id", "text", dir, minDocs = 5)
-  }
-
-  /** q_line_dedup_retire: tombstones on the maintained line
-    * statistics — full-corpus ingest (three count-shard appends) then
-    * ONE retire batch replaying the tombstoned docs' per-line
-    * distinct-doc contributions on the SAME dirtied text
-    * ([[Dedup.lineStatsRetire]]); the hot-line decision nets
-    * ingest − retire (exact by doc-disjoint additivity) and the
-    * RETAINED docs are rewritten against it. Oracle = `q_line_dedup`'s
-    * SQL over the retained corpus — a footer hot only because of
-    * retired docs must stop being stripped. */
-  def lineDedupRetireQ(s: SparkSession, d: String): DataFrame = {
-    val dirty = lineDedupFixture(s, d)
-    val dir = cachedArtifacts(
-        s"lineret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(dirty, "doc_id")(
-        Dedup.lineStatsAppend(_, "doc_id", "text", s"$dir/cnt", _))
-      Dedup.lineStatsRetire(dirty.where(RetiredPred), "doc_id", "text",
-        s"$dir/ret", 0L)
-    }
-    Dedup.lineDedupFromShards(dirty.where(RetainedPred), "doc_id", "text",
-      s"$dir/cnt", minDocs = 5, Some(s"$dir/ret"))
-  }
-
   def substrApplyQ(s: SparkSession, d: String): DataFrame =
     Dedup.exactSubstrApply(par(documents(s, d)), "doc_id", "text", L = 8)
 
@@ -1421,38 +1185,6 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     * the Markov-order-1 upgrade of `q_unigram_ppl`. */
   def bigramPpl(s: SparkSession, d: String): DataFrame =
     TA.bigramXent(par(documents(s, d)), "doc_id", "text")
-
-  /** q_bigram_incr: the bigram LM SERVED from maintained kind-tagged
-    * count shards ([[TA.bigramCountsAppend]] — bigram + context +
-    * vocab counts land atomically per batch under one claim). Exact by
-    * additivity; shares `q_bigram_ppl`'s oracle. */
-  def bigramIncrQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"biincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(
-        TA.bigramCountsAppend(_, "doc_id", "text", dir, _))
-    }
-    TA.bigramXentFromCounts(docs, "doc_id", "text", dir)
-  }
-
-  /** q_bigram_retire: the bigram LM with tombstones — the retired
-    * docs' counts replay into the retire channel
-    * ([[TA.bigramCountsRetire]]); the retained docs score against
-    * netted counts, with retired-only terms GONE from the vocabulary
-    * (v is the retained countDistinct by zero-netted-row deletion).
-    * Oracle = `q_bigram_ppl`'s SQL over the retained corpus. */
-  def bigramRetireQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"biret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(
-        TA.bigramCountsAppend(_, "doc_id", "text", dir, _))
-      TA.bigramCountsRetire(docs.where(RetiredPred), "doc_id", "text",
-        dir, 0L)
-    }
-    TA.bigramXentFromCounts(docs.where(RetainedPred), "doc_id", "text", dir)
-  }
 
   /** DSIR importance weights ([[TA.dsirWeights]], Xie et al. 2023):
     * target = the `lang = 'en'` slice, source = everything else —
@@ -1506,43 +1238,6 @@ tempplan AS (SELECT source, n_docs, n_tokens,
       parquet(s, s"$dir/model"))
   }
 
-  /** The INCREMENTALLY-MAINTAINED classifier: three hash-split batches
-    * each append one shard of per-class feature AND doc counts
-    * ([[TA.nbCountsAppend]]); the model assembles from the accumulated
-    * counts ([[TA.nbModelFromCounts]]) — counts (and priors) are
-    * additive, so online maintenance ≡ batch retrain, pinned to
-    * `q_nb_classify`'s exact oracle. The gate a live pipeline runs
-    * stays current as labeled batches stream in, with no retrain
-    * jobs. */
-  def nbIncrQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"nbincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(
-        TA.nbCountsAppend(_, "doc_id", "text", "lang", dir, _))
-    }
-    TA.nbClassify(par(documents(s, d)), "doc_id", "text",
-      TA.nbModelFromCounts(s, dir))
-  }
-
-  /** The INCREMENTALLY-MAINTAINED twin: the corpus arrives as three
-    * hash-split batches, each appending a count shard
-    * ([[TA.dsirCountsAppend]] — replay-idempotent by construction);
-    * scoring derives the model from the accumulated counts
-    * ([[TA.dsirModelFromCounts]]). Counts are exact and additive, so
-    * the result is pinned to `q_dsir_weights`' EXACT oracle — online
-    * maintenance ≡ batch retrain. */
-  def dsirIncrQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"dsirincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(TA.dsirCountsAppend(
-        _, "doc_id", "text", col("lang") === "en", dir, _))
-    }
-    TA.dsirScoreWith(par(documents(s, d)), "doc_id", "text",
-      TA.dsirModelFromCounts(s, dir))
-  }
-
   // ---- document tombstones across the maintained stored families ----
 
   /** The tombstone rule every `q_*_retire` row (and its oracle) shares:
@@ -1579,73 +1274,131 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     }
   }
 
-  /** q_unigram_retire: full-corpus ingest (three hash-split count-shard
-    * appends) then ONE retire batch replaying the tombstoned docs'
-    * (term, tc) contribution ([[TA.unigramCountsRetire]]); scoring
-    * reads ingest − retire. Oracle = `q_unigram_ppl`'s SQL over the
-    * retained corpus. */
-  def unigramRetireQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"uniret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(
-        TA.unigramCountsAppend(_, "doc_id", "text", dir, _))
-      TA.unigramCountsRetire(docs.where(RetiredPred), "doc_id", "text",
-        dir, 0L)
-    }
-    TA.unigramXentFromCounts(docs.where(RetainedPred), "doc_id", "text", dir)
+  // ---- maintained families: one descriptor derives each family's
+  // ---- `_incr`, `_retire` and `_fold` rows and their oracles ---------
+
+  /** One maintained family as registry fixtures. The `rows` of a
+    * corpus arrive as three hash-split batches through `append`
+    * (batch rows, ingest table, batch id). A `_retire` row then replays
+    * the [[RetiredPred]] rows through `retire` (rows, channel, batch
+    * id); a `_fold` row (families with a `fold`) also folds them out of
+    * the bytes, which must consume the channel. `serve` (session, served
+    * rows, ingest table, channel) answers from the maintained tables:
+    * the served rows are all of them on `_incr`, the [[RetainedPred]]
+    * ones otherwise. Every row shares the oracle of the `base` row —
+    * `_incr` as is, `_retire` and `_fold` through [[retainedWrap]]. A
+    * family with a `sub` keeps its retire/fold ingest table at
+    * `$dir/<sub>` and its channel at `$dir/ret`, its `_incr` table at
+    * the artifact root; the others pass the artifact root as both. */
+  private final case class Maintained(
+      name: String, base: String,
+      rows: (SparkSession, String) => DataFrame,
+      append: (DataFrame, String, Long) => Boolean,
+      retire: (DataFrame, String, Long) => Boolean,
+      serve: (SparkSession, DataFrame, String, String) => DataFrame,
+      sub: Option[String] = None,
+      fold: Option[(SparkSession, String, String) => Boolean] = None,
+      deriveRetire: Boolean = true) {
+    def kinds: Seq[String] =
+      Seq("incr") ++ Option.when(deriveRetire)("retire") ++ fold.map(_ => "fold")
   }
 
-  /** q_nb_retire: the classifier's count shards with tombstones — the
-    * retire channel subtracts likelihood AND prior mass, both in one
-    * shard per batch ([[TA.nbCountsRetire]]); the model
-    * assembled over the retained counts classifies the retained docs.
-    * Oracle = `q_nb_classify`'s SQL over the retained corpus. */
-  def nbRetireQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"nbret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(
-        TA.nbCountsAppend(_, "doc_id", "text", "lang", dir, _))
-      TA.nbCountsRetire(docs.where(RetiredPred), "doc_id", "text", "lang",
-        dir, 0L)
+  private val corpus: (SparkSession, String) => DataFrame =
+    (s, d) => par(documents(s, d))
+
+  // CountChannel families (graft.functions.ShardWrite.CountChannel)
+  private val Unigram = Maintained("unigram", "q_unigram_ppl", corpus,
+    TA.unigramCountsAppend(_, "doc_id", "text", _, _),
+    TA.unigramCountsRetire(_, "doc_id", "text", _, _),
+    (_, docs, dir, _) => TA.unigramXentFromCounts(docs, "doc_id", "text", dir))
+  private val Bigram = Maintained("bigram", "q_bigram_ppl", corpus,
+    TA.bigramCountsAppend(_, "doc_id", "text", _, _),
+    TA.bigramCountsRetire(_, "doc_id", "text", _, _),
+    (_, docs, dir, _) => TA.bigramXentFromCounts(docs, "doc_id", "text", dir))
+  private val BpeWords = Maintained("bpe", "q_bpe_train", corpus,
+    Bpe.wordCountsAppend(_, "text", _, _), Bpe.wordCountsRetire(_, "text", _, _),
+    (s, _, dir, _) => Bpe.mergesDf(s,
+      Bpe.trainMerges(Bpe.wordCountsFromShards(s, dir), Bpe.DefaultMerges)))
+  // q_boilerplate_retire mines at RetireBoilerMinDf, so it is explicit
+  private val Boilerplate = Maintained("boilerplate", "q_boilerplate",
+    corpus, Dedup.shingleDfAppend(_, "doc_id", "text", _, _),
+    Dedup.shingleDfRetire(_, "doc_id", "text", _, _),
+    (s, _, dir, _) => Dedup.boilerplateFromShards(s, dir, BoilerMinDf, BoilerTopK),
+    deriveRetire = false)
+  private val LineDedup = Maintained("line_dedup", "q_line_dedup",
+    lineDedupFixture, Dedup.lineStatsAppend(_, "doc_id", "text", _, _),
+    Dedup.lineStatsRetire(_, "doc_id", "text", _, _),
+    (_, docs, cnt, ret) =>
+      Dedup.lineDedupFromShards(docs, "doc_id", "text", cnt, 5, Some(ret)),
+    sub = Some("cnt"))
+  private val NaiveBayes = Maintained("nb", "q_nb_classify", corpus,
+    TA.nbCountsAppend(_, "doc_id", "text", "lang", _, _),
+    TA.nbCountsRetire(_, "doc_id", "text", "lang", _, _),
+    (s, docs, dir, _) =>
+      TA.nbClassify(docs, "doc_id", "text", TA.nbModelFromCounts(s, dir)))
+  private val Dsir = Maintained("dsir", "q_dsir_weights", corpus,
+    TA.dsirCountsAppend(_, "doc_id", "text", col("lang") === "en", _, _),
+    TA.dsirCountsRetire(_, "doc_id", "text", col("lang") === "en", _, _),
+    (s, docs, dir, _) =>
+      TA.dsirScoreWith(docs, "doc_id", "text", TA.dsirModelFromCounts(s, dir)))
+  private val SourceKl = Maintained("source_kl", "q_source_kl", corpus,
+    TA.sourceKlCountsAppend(_, "doc_id", "text", "source", _, _),
+    TA.sourceKlCountsRetire(_, "doc_id", "text", "source", _, _),
+    (s, _, dir, _) => TA.sourceKlFromCounts(s, dir, "source"))
+  private val Cms = Maintained("cms", "q_cms_freq", (s, d) =>
+    corpus(s, d).select(col("doc_id"), explode(TA.tokens(col("text"))).as("v")),
+    Sketches.cmsAppend(_, "v", _, _), Sketches.cmsRetire(_, "v", _, _),
+    (s, _, dir, _) =>
+      Sketches.cmsEstimate(Sketches.cmsFromShards(s, dir), CmsProbeTerms))
+  // SetChannel families (graft.functions.ShardWrite.SetChannel)
+  private val Winnow = Maintained("winnow", "q_winnow_pairs",
+    corpus, Dedup.winnowFpAppend(_, "doc_id", "text", _, _),
+    Dedup.windowRetireAppend(_, "doc_id", _, _),
+    (s, _, fps, ret) => Dedup.winnowPairsFromShards(s, fps, ret),
+    sub = Some("fps"), fold = Some(Dedup.foldRetiredWinnowFps))
+  private val Substr = Maintained("substr", "q_substr_spans",
+    corpus, Dedup.substrWindowsAppend(_, "doc_id", "text", _, _, L = 8),
+    Dedup.windowRetireAppend(_, "doc_id", _, _),
+    (s, _, win, ret) => Dedup.exactSubstrSpansFromShards(s, win, ret),
+    sub = Some("win"), fold = Some(Dedup.foldRetiredWindows))
+
+  /** Every derived row: (registry key, family, kind). */
+  private val maintainedRows: Seq[(String, Maintained, String)] = for {
+    f <- Seq(Unigram, Bigram, BpeWords, Boilerplate, LineDedup, NaiveBayes,
+      Dsir, SourceKl, Cms, Winnow, Substr)
+    kind <- f.kinds
+  } yield (s"q_${f.name}_$kind", f, kind)
+
+  /** The `kind` row of family `f`: build its maintained tables once per
+    * corpus fingerprint, then serve. */
+  private def maintainedQ(f: Maintained, kind: String)(
+      s: SparkSession, d: String): DataFrame = {
+    val rows = f.rows(s, d)
+    // (ingest table, channel) under the artifact dir
+    def tables(dir: String) = f.sub match {
+      case None => (dir, dir)
+      case Some(sub) => (if (kind == "incr") dir else s"$dir/$sub", s"$dir/ret")
     }
-    TA.nbClassify(docs.where(RetainedPred), "doc_id", "text",
-      TA.nbModelFromCounts(s, dir))
+    val key = s"q_${f.name}_$kind"
+    val dir = cachedArtifacts(
+        s"$key:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
+      val (table, ret) = tables(dir)
+      appendSplit(rows, "doc_id")(f.append(_, table, _))
+      if (kind != "incr") f.retire(rows.where(RetiredPred), ret, 0L)
+      if (kind == "fold") require(f.fold.exists(_(s, table, ret)),
+        s"$key must consume the channel at three live shards")
+    }
+    val (table, ret) = tables(dir)
+    f.serve(s, if (kind == "incr") rows else rows.where(RetainedPred),
+      table, ret)
   }
 
-  /** q_dsir_retire: importance-weight counts with tombstones
-    * ([[TA.dsirCountsRetire]]); the retained-count model scores the
-    * retained docs. Oracle = `q_dsir_weights`' SQL over the retained
-    * corpus. */
-  def dsirRetireQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"dsirret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(TA.dsirCountsAppend(
-        _, "doc_id", "text", col("lang") === "en", dir, _))
-      TA.dsirCountsRetire(docs.where(RetiredPred), "doc_id", "text",
-        col("lang") === "en", dir, 0L)
-    }
-    TA.dsirScoreWith(docs.where(RetainedPred), "doc_id", "text",
-      TA.dsirModelFromCounts(s, dir))
-  }
-
-  /** q_cms_retire: the frequency sketch with tombstones — CMS is
-    * linear, so subtracting the retired items' cell table
-    * ([[Sketches.cmsRetire]]) yields cells BIT-IDENTICAL to a sketch
-    * over the retained stream; the estimates share `q_cms_freq`'s
-    * closed-form oracle over the retained corpus. */
-  def cmsRetireQ(s: SparkSession, d: String): DataFrame = {
-    val items = par(documents(s, d))
-      .select(col("doc_id"), explode(TA.tokens(col("text"))).as("v"))
-    val dir = cachedArtifacts(
-        s"cmsret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(items, "doc_id")(Sketches.cmsAppend(_, "v", dir, _))
-      Sketches.cmsRetire(items.where(RetiredPred), "v", dir, 0L)
-    }
-    Sketches.cmsEstimate(Sketches.cmsFromShards(s, dir), CmsProbeTerms)
-  }
+  /** q_boilerplate_retire: the boilerplate family's retire row, mined at
+    * [[RetireBoilerMinDf]]. */
+  private def boilerplateRetireQ(s: SparkSession, d: String): DataFrame =
+    maintainedQ(Boilerplate.copy(serve = (s, _, dir, _) =>
+      Dedup.boilerplateFromShards(s, dir, RetireBoilerMinDf, BoilerTopK)),
+      "retire")(s, d)
 
   /** q_pagerank_retire: the maintained edge set with tombstones — the
     * stored pairs (copied from the `q_pagerank_incr` shards, no
@@ -1673,7 +1426,7 @@ tempplan AS (SELECT source, n_docs, n_tokens,
   }
 
   def pageRankRetireQ(s: SparkSession, d: String): DataFrame =
-    graft.functions.GraphRank.pageRankFromPairsRetained(s, pairRetireDir(s, d))
+    graft.functions.GraphRank.pageRankFromPairs(s, pairRetireDir(s, d))
       .select(col("node").as("doc_id"), col("rank"))
 
   /** q_pagerank_fold: the edge list's PHYSICAL tombstone fold
@@ -2165,39 +1918,6 @@ tempplan AS (SELECT source, n_docs, n_tokens,
           .as("zipf_slope"))
   }
 
-  /** q_source_kl_incr: the drift monitor SERVED from maintained
-    * (source, bucket) count shards ([[TA.sourceKlCountsAppend]]) —
-    * mixture monitoring that stays current as batches stream in, with
-    * zero corpus re-scans at read. Exact by count additivity; shares
-    * `q_source_kl`'s oracle. */
-  def sourceKlIncrQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"klincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(
-        TA.sourceKlCountsAppend(_, "doc_id", "text", "source", dir, _))
-    }
-    TA.sourceKlFromCounts(s, dir, "source")
-  }
-
-  /** q_source_kl_retire: the drift monitor with tombstones — the
-    * retired docs' (source, bucket) contributions replay into the
-    * retire channel ([[TA.sourceKlCountsRetire]]) and the KL derives
-    * from netted counts. A takedown is visible in the NEXT drift
-    * reading with no recount. Oracle = `q_source_kl`'s SQL over the
-    * retained corpus. */
-  def sourceKlRetireQ(s: SparkSession, d: String): DataFrame = {
-    val docs = par(documents(s, d))
-    val dir = cachedArtifacts(
-        s"klret:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(docs, "doc_id")(
-        TA.sourceKlCountsAppend(_, "doc_id", "text", "source", dir, _))
-      TA.sourceKlCountsRetire(docs.where(RetiredPred),
-        "doc_id", "text", "source", dir, 0L)
-    }
-    TA.sourceKlFromCounts(s, dir, "source")
-  }
-
   /** Per-cluster retention cap for `q_cluster_sample`: binding for the
     * fixture's over-quota clusters (500/2000 vectors over 16 seeded
     * clusters average 31/125 members), pass-through (rate 1.0) for the
@@ -2299,21 +2019,6 @@ tempplan AS (SELECT source, n_docs, n_tokens,
       translate(planted, ConfusablesFrom, ConfusablesTo).as("text_fold"),
       (length(planted) - length(translate(planted, ConfusablesFrom, "")))
         .as("n_confusable"))
-  }
-
-  /** The incrementally-maintained CMS twin: the corpus arrives as three
-    * hash-split batches, each appending a cell shard
-    * ([[Sketches.cmsAppend]] — replay-idempotent); estimates read the
-    * shard sum ([[Sketches.cmsFromShards]]). Linearity makes it
-    * oracle-pinned to `q_cms_freq`'s EXACT SQL. */
-  def cmsIncr(s: SparkSession, d: String): DataFrame = {
-    val items = par(documents(s, d))
-      .select(col("doc_id"), explode(TA.tokens(col("text"))).as("v"))
-    val dir = cachedArtifacts(
-        s"cmsincr:$d:${corpusFingerprintOf(s, d, "documents")}") { dir =>
-      appendSplit(items, "doc_id")(Sketches.cmsAppend(_, "v", dir, _))
-    }
-    Sketches.cmsEstimate(Sketches.cmsFromShards(s, dir), CmsProbeTerms)
   }
 
   /** φ for `q_heavy_hitters`: splits the fixture's [840, 964]-count
@@ -3133,10 +2838,7 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     "q_tfidf_stored"   -> (tfidfStoredQ _),
     "q_unigram_ppl"    -> (unigramPpl _),
     "q_ppl_buckets"    -> (pplBucketsQ _),
-    "q_unigram_incr"   -> (unigramIncrQ _),
     "q_bigram_ppl"     -> (bigramPpl _),
-    "q_bigram_incr"    -> (bigramIncrQ _),
-    "q_bigram_retire"  -> (bigramRetireQ _),
     "q_bpe_train"      -> (bpeTrainQ _),
     "q_bpe_stored"     -> (bpeStoredQ _),
     "q_bpe_tokens"     -> (bpeTokensQ _),
@@ -3153,15 +2855,11 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     "q_mix_apply_bpe"  -> (mixApplyBpeQ _),
     "q_mix_repeat_bpe" -> (mixRepeatPlanBpeQ _),
     "q_mix_repeat_apply_bpe" -> (mixRepeatApplyBpeQ _),
-    "q_bpe_incr"       -> (bpeIncrQ _),
-    "q_bpe_retire"     -> (bpeRetireQ _),
     "q_quality_rules"  -> (qualityRules _),
     "q_repetition"     -> (repetition _),
     "q_dup_ngrams"     -> (dupNgrams _),
     "q_dup_lines"      -> (dupLines _),
     "q_line_dedup"     -> (lineDedupQ _),
-    "q_line_dedup_incr" -> (lineDedupIncrQ _),
-    "q_line_dedup_retire" -> (lineDedupRetireQ _),
     "q_hash_split"     -> (hashSplit _),
     "q_split_leakproof" -> (splitLeakproofQ _),
     "q_pii_scrub"      -> (piiScrub _),
@@ -3171,13 +2869,9 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     "q_dedup_keep"     -> (dedupKeep _),
     "q_ngram_jaccard"  -> (ngramJaccard _),
     "q_boilerplate"    -> (boilerplate _),
-    "q_boilerplate_incr" -> (boilerplateIncrQ _),
     "q_boilerplate_retire" -> (boilerplateRetireQ _),
     "q_winnow"         -> (winnow _),
     "q_winnow_pairs"   -> (winnowPairsQ _),
-    "q_winnow_incr"    -> (winnowIncrQ _),
-    "q_winnow_retire"  -> (winnowRetireQ _),
-    "q_winnow_fold"    -> (winnowFoldQ _),
     "q_minhash_pairs"  -> (minhashPairs _),
     "q_pagerank"       -> (pageRankQ _),
     "q_pagerank_topk"  -> (pageRankTopKQ _),
@@ -3192,21 +2886,12 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     "q_hybrid_wand_ann_retire" -> (hybridWandAnnRetireQ _),
     "q_hybrid_rrf_stored" -> (hybridRrfStoredQ _),
     "q_substr_spans"   -> (substrSpansQ _),
-    "q_substr_incr"    -> (substrIncrQ _),
-    "q_substr_retire"  -> (substrRetireQ _),
-    "q_substr_fold"    -> (substrFoldQ _),
     "q_substr_dedup"   -> (substrDedupQ _),
     "q_substr_apply"   -> (substrApplyQ _),
     "q_dsir_weights"   -> (dsirWeightsQ _),
     "q_dsir_stored"    -> (dsirStoredQ _),
-    "q_dsir_incr"      -> (dsirIncrQ _),
-    "q_dsir_retire"    -> (dsirRetireQ _),
     "q_nb_classify"    -> (nbClassifyQ _),
     "q_nb_stored"      -> (nbStoredQ _),
-    "q_nb_incr"        -> (nbIncrQ _),
-    "q_nb_retire"      -> (nbRetireQ _),
-    "q_unigram_retire" -> (unigramRetireQ _),
-    "q_cms_retire"     -> (cmsRetireQ _),
     "q_pagerank_retire" -> (pageRankRetireQ _),
     "q_pagerank_fold"  -> (pageRankFoldQ _),
     "q_cc_retire"      -> (ccRetireQ _),
@@ -3237,11 +2922,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     "q_cluster_sample" -> (clusterSample _),
     "q_source_kl"      -> (sourceKl _),
     "q_zipf"           -> (zipfShape _),
-    "q_source_kl_incr" -> (sourceKlIncrQ _),
-    "q_source_kl_retire" -> (sourceKlRetireQ _),
     "q_embed_outliers" -> (embedOutliers _),
     "q_cms_freq"       -> (cmsFreq _),
-    "q_cms_incr"       -> (cmsIncr _),
     "q_nfc_clean"      -> (nfcClean _),
     "q_script_mix"     -> (scriptMix _),
     "q_homoglyph_fold" -> (homoglyphFold _),
@@ -3284,7 +2966,8 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     "q_multimodal_audiohash" -> (multimodalAudioHash _),
     "q_multimodal_vhash" -> (multimodalVhash _),
     "q_pipeline_clean"  -> (pipelineClean _),
-    "q_pipeline_neardup" -> (pipelineNearDup _))
+    "q_pipeline_neardup" -> (pipelineNearDup _)) ++
+    maintainedRows.map { case (key, f, kind) => key -> (maintainedQ(f, kind) _) }
 
   // plain (non-interpolated) string: the regex end-anchor $ needs no
   // escaping here, and s""-splicing below copies the VALUE verbatim
@@ -3684,7 +3367,7 @@ tempplan AS (SELECT source, n_docs, n_tokens,
        |       ln((COALESCE(c, 0) + 1.0) / (t + 1024.0)))) AS kl
        |FROM fl GROUP BY source""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = withMaintained(Map(
     "q_source_kl" -> SourceKlSql,
     // spectrum regression: same least-squares sums as the engine, the
     // denominator nullif-guarded on both sides; integer sums cast back
@@ -3706,10 +3389,6 @@ tempplan AS (SELECT source, n_docs, n_tokens,
          |  CAST(n_types AS DOUBLE) / n_tokens AS ttr,
          |  (np * sxy - sx * sy) / nullif(np * sxx - sx * sx, 0) AS zipf_slope
          |FROM a""".stripMargin,
-    // maintained counts are additive across doc-disjoint batches —
-    // identical SQL; the retire twin pins to the retained recompute
-    "q_source_kl_incr" -> SourceKlSql,
-    "q_source_kl_retire" -> retainedWrap(SourceKlSql),
     "q_bucket_join" ->
       """SELECT d.lang AS lang, count(*) AS n,
         |  CAST(sum(d.n_chars) AS BIGINT) AS chars,
@@ -3846,19 +3525,12 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     // the stored-model scorer must return the IDENTICAL weights — the
     // same oracle SQL pins it to q_dsir_weights
     "q_dsir_stored" -> DsirSql,
-    // counts are additive: incremental maintenance ≡ batch retrain,
-    // pinned by sharing the exact same SQL
-    "q_dsir_incr" -> DsirSql,
     "q_nb_classify" -> NbSql,
     // the stored model replays the same counts — same oracle SQL
     "q_nb_stored" -> NbSql,
-    // counts and priors are additive: incremental ≡ batch retrain
-    "q_nb_incr" -> NbSql,
     // tombstones: ingest − retire ≡ recompute over the retained corpus,
     // pinned by ONE wrapper filtering the documents CTE — the engine
     // subtracts maintained shards, the oracle recomputes from scratch
-    "q_nb_retire" -> retainedWrap(NbSql),
-    "q_dsir_retire" -> retainedWrap(DsirSql),
     "q_bm25_retire" -> retainedWrap(Bm25DfBoundedSql),
     // the PHYSICAL fold must serve the identical answer the read-time
     // subtraction did — the same retained-corpus SQL pins both
@@ -3870,19 +3542,6 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     "q_substr_spans" ->
       s"""$SUBSTR_CTES
          |SELECT doc_id, span_start, span_end FROM spans""".stripMargin,
-    // the shard-served spans are exact by doc-disjoint batch union, so
-    // the incremental row pins to the identical SQL
-    "q_substr_incr" ->
-      s"""$SUBSTR_CTES
-         |SELECT doc_id, span_start, span_end FROM spans""".stripMargin,
-    // the retire (read-time anti-join) and fold (byte-real) twins both
-    // pin to the retained-corpus recompute — exact by doc-keyed rows
-    "q_substr_retire" -> retainedWrap(
-      s"""$SUBSTR_CTES
-         |SELECT doc_id, span_start, span_end FROM spans""".stripMargin),
-    "q_substr_fold" -> retainedWrap(
-      s"""$SUBSTR_CTES
-         |SELECT doc_id, span_start, span_end FROM spans""".stripMargin),
     "q_substr_dedup" ->
       s"""$SUBSTR_CTES,
          |dl AS (SELECT doc_id, CAST(len($TOKS) AS BIGINT) AS n_tokens FROM documents),
@@ -3943,46 +3602,19 @@ tempplan AS (SELECT source, n_docs, n_tokens,
          |       WHEN xent6 <= b2 THEN 'middle'
          |       ELSE 'tail' END AS ppl_bucket
          |FROM x CROSS JOIN b""".stripMargin,
-    // counts are additive: incremental maintenance ≡ batch recount,
-    // pinned by sharing the exact same SQL (the q_dsir_incr discipline)
-    "q_unigram_incr" ->
-      s"""WITH toks AS (SELECT doc_id, unnest($TOKS) AS term FROM documents),
-         |freq AS (SELECT term, count(*) AS tc FROM toks GROUP BY term),
-         |tot AS (SELECT count(*) AS total FROM toks)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |  avg(-ln(CAST(tc AS DOUBLE) / total)) AS xent,
-         |  exp(avg(-ln(CAST(tc AS DOUBLE) / total))) AS ppl
-         |FROM toks JOIN freq USING (term) CROSS JOIN tot
-         |GROUP BY doc_id""".stripMargin,
-    // tombstones: ingest − retire count shards ≡ recount over the
-    // retained corpus (scored docs filtered the same way)
-    "q_unigram_retire" -> retainedWrap(
-      s"""WITH toks AS (SELECT doc_id, unnest($TOKS) AS term FROM documents),
-         |freq AS (SELECT term, count(*) AS tc FROM toks GROUP BY term),
-         |tot AS (SELECT count(*) AS total FROM toks)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |  avg(-ln(CAST(tc AS DOUBLE) / total)) AS xent,
-         |  exp(avg(-ln(CAST(tc AS DOUBLE) / total))) AS ppl
-         |FROM toks JOIN freq USING (term) CROSS JOIN tot
-         |GROUP BY doc_id""".stripMargin),
     // bigram model: context counts over positions 0..k-2 (so the
     // conditional sums to 1), corpus-vocab add-1 smoothing; exp/ln in
     // double on both engines, driver rounding absorbs merge-order ulps
     "q_bigram_ppl" -> BigramPplSql,
-    "q_bigram_incr" -> BigramPplSql,
-    "q_bigram_retire" -> retainedWrap(BigramPplSql),
     // BPE tokenizer: the oracle UNROLLS the greedy training loop — per
     // merge, pair counts over the delimited vocabulary, argmax with the
     // (cnt DESC, x, y) tie-break, one literal replace (both engines
     // share left-to-right non-overlap replace semantics, which IS the
-    // greedy merge — see graft.functions.Bpe). stored ≡ trained and
-    // shard-maintained ≡ batch recount share the same SQL; the retire
-    // twin retrains over the retained corpus (takedowns change the
-    // tokenizer, by contract).
+    // greedy merge — see graft.functions.Bpe). stored ≡ trained share
+    // the same SQL; the maintained retire row retrains over the
+    // retained corpus (takedowns change the tokenizer, by contract).
     "q_bpe_train" -> Bpe.trainOracleSql(TOKS),
     "q_bpe_stored" -> Bpe.trainOracleSql(TOKS),
-    "q_bpe_incr" -> Bpe.trainOracleSql(TOKS),
-    "q_bpe_retire" -> retainedWrap(Bpe.trainOracleSql(TOKS)),
     // the opt-in sentinel deviation, oracle-pinned like the default
     "q_bpe_train_eow" -> Bpe.trainOracleSql(TOKS, eow = true),
     "q_bpe_tokens" -> Bpe.applyOracleSql(TOKS),
@@ -4099,11 +3731,7 @@ WHERE epoch < epochs_full
         |FROM lined""".stripMargin,
     // cross-doc line dedup: identical dirty construction as the engine;
     // docs whose every line is boilerplate drop out of the group-by.
-    // Count additivity over doc-disjoint batches makes the shard-served
-    // rewrite bit-identical to the fused one — the same SQL pins both.
     "q_line_dedup" -> LineDedupSql,
-    "q_line_dedup_incr" -> LineDedupSql,
-    "q_line_dedup_retire" -> retainedWrap(LineDedupSql),
     "q_dup_ngrams" ->
       s"""WITH g AS (SELECT doc_id,
          |  CASE WHEN len($TOKS) >= 2
@@ -4167,9 +3795,7 @@ WHERE epoch < epochs_full
     // same toks/pos/sh distinct-shingle CTEs as the jaccard oracle; the
     // (doc_freq DESC, shingle) order makes the top-k fully deterministic
     "q_boilerplate" -> BoilerplateSql,
-    // maintained shingle doc-frequency counts are additive — identical
-    // SQL; the retire twin pins to the retained recompute
-    "q_boilerplate_incr" -> BoilerplateSql,
+    // the maintained retire row mines at its own minDf
     "q_boilerplate_retire" -> retainedWrap(boilerplateSqlAt(RetireBoilerMinDf)),
     "q_dedup_keep" ->
       """SELECT doc_id, text, lang, source, n_chars FROM documents
@@ -4272,12 +3898,6 @@ WHERE epoch < epochs_full
     "q_minhash_join" -> Dedup.minhashPairsOracleSql(),
     // the winnow CTE self-joined on fingerprint: docs sharing >= 2
     "q_winnow_pairs" -> WinnowPairsSql,
-    // shard-served fingerprints are the exact whole-corpus table (per-
-    // doc rows, doc-disjoint batches) — identical SQL; the retire and
-    // fold twins pin to the retained-corpus recompute
-    "q_winnow_incr" -> WinnowPairsSql,
-    "q_winnow_retire" -> retainedWrap(WinnowPairsSql),
-    "q_winnow_fold" -> retainedWrap(WinnowPairsSql),
     // same mined drop list (distinct-pair df >= minDf, top-k by
     // (df DESC, shingle)), ANTI JOINed before the signature CTEs
     "q_minhash_dropped" -> Dedup.minhashPairsOracleSql(
@@ -4496,12 +4116,6 @@ WHERE epoch < epochs_full
         |       ELSE 'latin' END AS script
         |FROM c""".stripMargin,
     "q_cms_freq" -> CmsFreqSql,
-    // linearity: shard-summed cells == whole-stream cells, so the
-    // incrementally-maintained estimates share the exact same SQL
-    "q_cms_incr" -> CmsFreqSql,
-    // tombstones: CMS linearity makes ingest − retire bit-identical to
-    // a sketch over the retained stream
-    "q_cms_retire" -> retainedWrap(CmsFreqSql),
     // the exact phi-cut IS the contract: the CMS prefilter provably
     // changes nothing (no false negatives; false positives die at the
     // exact HAVING), so the oracle is the plain exact SQL
@@ -4725,5 +4339,12 @@ WHERE epoch < epochs_full
          |  $QUALITY_SQL AS quality,
          |  CAST(len($TOKS) AS INTEGER) AS n_tokens
          |FROM d)
-         |SELECT doc_id, quality, n_tokens FROM q WHERE quality >= 0.5""".stripMargin)
+         |SELECT doc_id, quality, n_tokens FROM q WHERE quality >= 0.5""".stripMargin))
+
+  /** `rows` plus the oracle of every derived maintained row: its
+    * family's base SQL, over the retained corpus on `_retire`/`_fold`. */
+  private def withMaintained(rows: Map[String, String]): Map[String, String] =
+    rows ++ maintainedRows.map { case (key, f, kind) =>
+      key -> (if (kind == "incr") rows(f.base) else retainedWrap(rows(f.base)))
+    }
 }

@@ -348,6 +348,17 @@ object SemDeDupGate {
       .map(p => (list, p.toString))
   }
 
+  /** The stored vectors in `dirs` — flat `list=L` and split
+    * `list=L/sub=S` dirs of the vecs tree at `root` — as (seen_id,
+    * seen_v, list): one read per layout ([[Tables.parquetByLayout]]),
+    * `list` typed INT from the dir names. */
+  private[graft] def seenVectors(spark: SparkSession, root: String,
+                                 dirs: Seq[String]): DataFrame =
+    Tables.parquetByLayout(spark, dirs.map(d => (root,
+        d.split("/").reverse.takeWhile(_.contains("=")).reverse.mkString("/"), d)),
+      org.apache.spark.sql.types.StructType.fromDDL("list INT"))
+      .select(col("vid").as("seen_id"), col("v").as("seen_v"), col("list"))
+
   /** One micro-batch through the gate. `batch` must carry
     * (vid: long, v: array — float or double). Returns the number of
     * rows THIS call admitted (0 for an empty or fully-replayed batch). */
@@ -400,12 +411,7 @@ object SemDeDupGate {
       val seenOpt = (flatDirs ++ splitDirs) match {
         case Nil => None
         case dirs =>
-          // per-dir reads with the list id attached as a literal — the
-          // partition column lives only in the dir name
-          val seen0 = dirs.map { case (l, d) =>
-            Tables.parquet(spark, d).select(col("vid").as("seen_id"),
-              col("v").as("seen_v"), lit(l).as("list"))
-          }.reduce(_ unionByName _)
+          val seen0 = seenVectors(spark, vecsPath(statePath), dirs.map(_._2))
           Some(hold(retired.fold(seen0)(r => seen0.join(
             broadcast(r.select(col("vid").as("seen_id"))),
             Seq("seen_id"), "left_anti"))))

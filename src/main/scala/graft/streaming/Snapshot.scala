@@ -234,14 +234,14 @@ object Snapshot {
     * unescaped, with Hive's default-partition name read back as null,
     * and null for a file whose path has no such dir. The columns are
     * the data columns, then `partitionCols` in order. The version is
-    * read as ONE [[Tables.parquet]] relation per layout group — a base
-    * tree (the live root or one `_stale/vN` tree) and the dir shape
-    * under it — with `basePath` at the tree and the named columns typed
-    * string, so Spark's partition discovery parses the dirs from the
-    * listing [[Tables.parquet]] already holds. The live root and each
-    * stale tree are separate groups: under one `basePath`, discovery
-    * stops at the `_stale/vN` segments and fails the read with
-    * CONFLICTING_DIRECTORY_STRUCTURES.
+    * read as ONE [[Tables.parquet]] relation per layout group
+    * ([[Tables.parquetByLayout]]) — a base tree (the live root or one
+    * `_stale/vN` tree) and the dir shape under it — with `basePath` at
+    * the tree and the named columns typed string, so Spark's partition
+    * discovery parses the dirs from the listing [[Tables.parquet]]
+    * already holds. The live root and each stale tree are separate
+    * groups: under one `basePath`, discovery stops at the `_stale/vN`
+    * segments and fails the read with CONFLICTING_DIRECTORY_STRUCTURES.
     *
     * `keepRel` is the manifest-path analog of partition PRUNING: it
     * filters the version's root-relative file paths BEFORE any read,
@@ -255,7 +255,6 @@ object Snapshot {
                   version: Option[Long] = None,
                   partitionCols: Seq[String] = Nil,
                   keepRel: String => Boolean = _ => true): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, lit}
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val v = version.orElse(latestVersion(spark, root)).getOrElse(return None)
     val rootP = new Path(root)
@@ -270,20 +269,10 @@ object Snapshot {
     val pairs = if (prunedPairs.nonEmpty) prunedPairs
                 else relsAll zip resolvedAll // see scaladoc: never an empty read
     if (partitionCols.isEmpty) return Some(Tables.parquet(spark, pairs.map(_._2): _*))
-    Some(pairs.groupBy { case (rel, file) =>
-      val shape = rel.split("/").toSeq.dropRight(1).map { seg =>
-        seg.split("=", 2) match { case Array(k, _) => k + "="; case _ => seg }
-      }
-      (file.stripSuffix(rel), shape)
-    }.map { case ((tree, shape), group) =>
-      val keys = shape.filter(_.endsWith("=")).map(_.dropRight(1))
-      val df = Tables.parquet(spark, group.map(_._2), Map("basePath" -> tree),
-        StructType(partitionCols.filter(keys.contains).map(StructField(_, StringType))))
-      df.select(df.columns.toSeq
-        .filterNot(c => keys.contains(c) || partitionCols.contains(c)).map(col) ++
-        partitionCols.map(c =>
-          if (keys.contains(c)) col(c) else lit(null).cast(StringType).as(c)): _*)
-    }.reduce(_ unionByName _))
+    Some(Tables.parquetByLayout(spark,
+      pairs.map { case (rel, file) => (file.stripSuffix(rel),
+        rel.split("/").dropRight(1).mkString("/"), file) },
+      StructType(partitionCols.map(StructField(_, StringType)))))
   }
 
   /** Expire history: keep the newest `keepVersions` manifests readable,

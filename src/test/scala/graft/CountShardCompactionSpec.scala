@@ -7,7 +7,8 @@ import graft.functions.{ShardWrite, Sketches, TextAnalysis => TA}
   * discipline ([[ShardWrite.compactShards]]): folding is bit-stable,
   * replays of consumed batches skip, and the crash window between the
   * merged commit and the consumed-dir deletes never double-counts at
-  * read (the above-watermark rule).
+  * read (the above-watermark rule). The doc-keyed set channel
+  * ([[ShardWrite.SetChannel]]) rides the same shards.
   */
 class CountShardCompactionSpec extends SparkSpec {
   import spark.implicits._
@@ -229,5 +230,49 @@ class CountShardCompactionSpec extends SparkSpec {
     assert(!TA.nbCountsAppend(labeled.where($"doc_id" % 3 === 1L),
       "doc_id", "text", "lang", dir, 1L))
     assert(model == before)
+  }
+
+  test("set channel: two-key tombstones, plain read without them, compact then fold, replay skips") {
+    val dir = tmp("set-channel")
+    val schema = "doc_a LONG, doc_b LONG"
+    val ch = ShardWrite.SetChannel(s"$dir/pairs", s"$dir/retire", schema,
+      Seq("doc_a", "doc_b"))
+    def pairs(ps: (Long, Long)*) = ps.toDF("doc_a", "doc_b")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long)].collect().toSet
+    def joins(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+    assert(ch.append(0L, pairs((1L, 2L), (2L, 7L))))
+    assert(ch.append(1L, pairs((7L, 3L), (3L, 4L))))
+    // no retire shard: the plain shard read, no anti-join in the plan
+    assert(joins(ch.retained(spark)).isEmpty)
+    assert(rows(ch.retained(spark)) ==
+      Set((1L, 2L), (2L, 7L), (7L, 3L), (3L, 4L)))
+    // a tombstone on doc 7 drops the rows naming it on either side
+    assert(ch.retire(0L, Seq(7L).toDF("id"), col("id")))
+    val kept = Set((1L, 2L), (3L, 4L))
+    assert(joins(ch.retained(spark)).length == 2)
+    assert(rows(ch.retained(spark)) == kept)
+    // compaction keeps the retained read; with one live ingest shard
+    // left the fold waits, after the next batch it runs
+    val ((in, out), _) = ch.compact(spark)
+    assert(in == 2 && out == 1, s"pairs $in->$out")
+    assert(rows(ch.retained(spark)) == kept)
+    assert(!ch.fold(spark), "a single live shard must not fold")
+    assert(ch.append(2L, pairs((5L, 6L), (6L, 7L))))
+    val retained = rows(ch.retained(spark))
+    assert(retained == kept + ((5L, 6L)))
+    assert(ch.fold(spark))
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/retire")),
+      "the fold must consume the channel")
+    assert(rows(ShardWrite.readShards(spark, s"$dir/pairs", schema)) == retained)
+    assert(rows(ch.retained(spark)) == retained)
+    // replays at or below the folded watermark skip
+    assert(!ch.append(1L, pairs((7L, 3L), (3L, 4L))))
+    assert(!ch.append(2L, pairs((5L, 6L), (6L, 7L))))
+    assert(rows(ch.retained(spark)) == retained)
   }
 }

@@ -434,7 +434,7 @@ class DedupSpec extends SparkSpec {
     for (b <- 0L until 3L)
       assert(Dedup.substrWindowsAppend(docs.where($"doc_id" % 3 === b),
         "doc_id", "text", dir, b, L = 4))
-    def spans = Dedup.exactSubstrSpansFromShards(spark, dir)
+    def spans = Dedup.exactSubstrSpansFromShards(spark, dir, s"$dir/retire")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
     val fused = Dedup.exactSubstrSpans(docs, "doc_id", "text", L = 4)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet

@@ -1,8 +1,9 @@
 package graft
 
-/** Driver-contract smoke: entry() must return rows on sf0.001 and every
-  * oracleSql key must reference a registered query (the reverse need not
-  * hold — rows-only ops are legitimate).
+/** Driver-contract smoke: entry() must return rows on sf0.001, and the
+  * oracleSql keys must be exactly the registered queries — all 275 rows
+  * are oracle-checked, so a registry row that goes missing, gains a
+  * twin or loses its oracle fails here.
   */
 class EntrySpec extends SparkSpec {
 
@@ -14,7 +15,8 @@ class EntrySpec extends SparkSpec {
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet
     assert(o.subsetOf(q), s"oracle-only keys: ${o.diff(q)}")
-    assert(q.size >= 70 && o.size >= 67)
+    assert(q.subsetOf(o), s"queries without an oracle: ${q.diff(o)}")
+    assert(q.size == 275, s"registry holds ${q.size} queries, expected 275")
   }
 
   test("API queries serialize to JSON frames at the edge (API.py contract)") {

@@ -231,7 +231,7 @@ class RetireSpec extends SparkSpec {
     // the window table's tombstoned read equals a retained-corpus mine,
     // and the netted line stats equal a retained-corpus count
     def winSpans = graft.functions.Dedup.exactSubstrSpansFromShards(
-        spark, s"$dir/win", Some(s"$dir/winret"))
+        spark, s"$dir/win", s"$dir/winret")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
     assert(winSpans == graft.functions.Dedup.exactSubstrSpans(
         retained, "doc_id", "text", L = 2)
@@ -617,7 +617,7 @@ class RetireSpec extends SparkSpec {
     assert(Dedup.windowRetireAppend(retired, "doc_id", ret, 0L))
     def spans(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    val truth = spans(Dedup.exactSubstrSpansFromShards(spark, win, Some(ret)))
+    val truth = spans(Dedup.exactSubstrSpansFromShards(spark, win, ret))
     // exactness: the anti-joined read ≡ a fresh mine over the retained set
     assert(truth == spans(
       Dedup.exactSubstrSpans(retained, "doc_id", "text", L = 2)))
@@ -629,7 +629,7 @@ class RetireSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(ret)),
       "the channel must be consumed")
-    assert(spans(Dedup.exactSubstrSpansFromShards(spark, win)) == truth,
+    assert(spans(Dedup.exactSubstrSpansFromShards(spark, win, ret)) == truth,
       "folded serve diverged from the tombstoned contract")
     assert(ShardWrite.readShards(spark, win, "doc_id BIGINT, i INT, h BIGINT")
       .where($"doc_id" === 7L).isEmpty, "retired rows must be gone")
@@ -641,7 +641,7 @@ class RetireSpec extends SparkSpec {
       "a single live m-shard must not fold (watermark tie)")
     assert(fs.exists(new org.apache.hadoop.fs.Path(ret)),
       "the channel must survive a waiting fold")
-    assert(spans(Dedup.exactSubstrSpansFromShards(spark, win, Some(ret)))
+    assert(spans(Dedup.exactSubstrSpansFromShards(spark, win, ret))
       == truth)
   }
 
@@ -670,16 +670,16 @@ class RetireSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // shard-served ≡ fused over the same corpus
-    assert(pairs(Dedup.winnowPairsFromShards(spark, fps)) ==
+    assert(pairs(Dedup.winnowPairsFromShards(spark, fps, ret)) ==
       pairs(Dedup.winnowPairs(wdocs, "doc_id", "text")))
-    assert(pairs(Dedup.winnowPairsFromShards(spark, fps))
+    assert(pairs(Dedup.winnowPairsFromShards(spark, fps, ret))
       .contains((1L, 7L)))
     // retire doc 7: the (1,7) pair vanishes, (2,3) survives — equal to
     // a fused re-mine over the retained corpus
     assert(Dedup.windowRetireAppend(retired, "doc_id", ret, 0L))
     val want = pairs(Dedup.winnowPairs(
       wdocs.where($"doc_id" =!= 7L), "doc_id", "text"))
-    assert(pairs(Dedup.winnowPairsFromShards(spark, fps, retirePath = Some(ret)))
+    assert(pairs(Dedup.winnowPairsFromShards(spark, fps, ret))
       == want)
     assert(want == Set((2L, 3L)))
     // the fold drops the fingerprints from the BYTES and consumes the
@@ -688,12 +688,12 @@ class RetireSpec extends SparkSpec {
     val fsys = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fsys.exists(new org.apache.hadoop.fs.Path(ret)))
-    assert(pairs(Dedup.winnowPairsFromShards(spark, fps)) == want)
+    assert(pairs(Dedup.winnowPairsFromShards(spark, fps, ret)) == want)
     assert(ShardWrite.readShards(spark, fps, "doc_id BIGINT, fp BIGINT")
       .where($"doc_id" === 7L).isEmpty, "retired fingerprints must be gone")
     // a non-maintained dir is rejected loudly (no _NW marker)
     intercept[IllegalArgumentException] {
-      Dedup.winnowPairsFromShards(spark, tmp("not-a-table"))
+      Dedup.winnowPairsFromShards(spark, tmp("not-a-table"), ret)
     }
   }
 

@@ -266,6 +266,22 @@ class SemDeDupGateSpec extends SparkSpec {
     val subDirs = fs.listStatus(hotDir)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("sub="))
     assert(subDirs.length >= 2)
+    // the gate's seen side reads one relation per layout — the flat
+    // lists and the split sub-lists — however many dirs it touches, and
+    // holds the rows the per-dir reads do
+    val vecs = s"$dir/state-spl/vecs"
+    val cold0 = Seq(1, 2).find(_ != hot).get
+    val touched = s"$vecs/list=$cold0" +: subDirs.map(_.getPath.toString).toSeq
+    assert(touched.length >= 3)
+    val seen = SemDeDupGate.seenVectors(spark, vecs, touched)
+    val scans = seen.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+    assert(scans.length <= 2, s"${scans.length} parquet scans on the seen side")
+    def perDir(d: String, l: Int) = spark.read.parquet(d).select("vid")
+      .as[Long].collect().map(_ -> l)
+    assert(seen.select("seen_id", "list").as[(Long, Int)].collect().toSet ==
+      (perDir(s"$vecs/list=$cold0", cold0) ++
+        subDirs.flatMap(sd => perDir(sd.getPath.toString, hot))).toSet)
     // the SAME probe batches produce the SAME decisions in both states
     val probes = Seq(
       (100L, noisy(base(5)._2).toSeq),   // near-dup of a seen vector
