@@ -471,7 +471,7 @@ object Dedup {
                      n: Int = 5, w: Int = 4): Boolean = {
     require(w >= 1, s"winnow window must be >= 1, got $w")
     val spark = batch.sparkSession
-    verifyParamsMarker(spark, s"$dir/_NW", s"$n,$w",
+    ShardWrite.verifyMarker(spark, s"$dir/_NW", s"$n,$w",
       "shingle/window widths (fingerprints are (n,w)-bound)")
     ShardWrite.appendBatch(dir, batchId,
       winnowFingerprints(batch, id, text, n, w))
@@ -490,7 +490,7 @@ object Dedup {
   def winnowPairsFromShards(spark: org.apache.spark.sql.SparkSession,
                             dir: String, retirePath: String,
                             minShared: Int = 2): DataFrame = {
-    require(readParamsMarker(spark, s"$dir/_NW").isDefined,
+    require(ShardWrite.readMarker(spark, s"$dir/_NW").isDefined,
       s"$dir has no _NW marker — not a maintained winnow fingerprint table")
     bucketPairCounts(winnowFps(dir, retirePath).retained(spark), "fp",
         "shared_fps")
@@ -603,7 +603,8 @@ object Dedup {
                           dir: String, batchId: Long, L: Int = 50): Boolean = {
     require(L >= 2, s"substring window must be >= 2 tokens, got $L")
     val spark = batch.sparkSession
-    verifyLMarker(spark, dir, L)
+    ShardWrite.verifyMarker(spark, s"$dir/_L", L.toString,
+      "window length (hash keys are L-bound)")
     ShardWrite.appendBatch(dir, batchId, substrWindows(batch, id, text, L))
   }
 
@@ -626,8 +627,9 @@ object Dedup {
     * plain table, with zero extra plan nodes. */
   def exactSubstrSpansFromShards(spark: org.apache.spark.sql.SparkSession,
                                  dir: String, retirePath: String): DataFrame = {
-    val l = readLMarker(spark, dir).getOrElse(throw new IllegalStateException(
-      s"$dir has no _L marker — not a maintained ExactSubstr window table"))
+    val l = ShardWrite.readMarker(spark, s"$dir/_L").map(_.toInt)
+      .getOrElse(throw new IllegalStateException(
+        s"$dir has no _L marker — not a maintained ExactSubstr window table"))
     spansFromWindows(windows(dir, retirePath).retained(spark), l)
   }
 
@@ -640,8 +642,8 @@ object Dedup {
     * existed (replay). */
   def windowRetireAppend(docIds: DataFrame, idCol: String,
                          retirePath: String, batchId: Long): Boolean =
-    ShardWrite.appendIds(docIds, col(idCol).as("doc_id"), retirePath,
-      batchId)
+    ShardWrite.Tombstones(retirePath, "doc_id")
+      .append(batchId, docIds, col(idCol))
 
   /** Fold the window-table shards into one merged m-shard — rows are
     * doc-disjoint so the merge is the identity union
@@ -658,61 +660,6 @@ object Dedup {
   def foldRetiredWindows(spark: org.apache.spark.sql.SparkSession,
                          dir: String, retirePath: String): Boolean =
     windows(dir, retirePath).fold(spark)
-
-  private def verifyLMarker(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, l: Int): Unit =
-    verifyParamsMarker(spark, s"$dir/_L", l.toString,
-      "window length (hash keys are L-bound)")
-
-  /** Write-once / verify-always parameter marker (the `_L` / `_span`
-    * discipline generalized): first writer records `value` at `path`,
-    * every later writer must present the identical value or the append
-    * is rejected loudly — `what` names the contract in the error. */
-  private def verifyParamsMarker(spark: org.apache.spark.sql.SparkSession,
-                                 path: String, value: String,
-                                 what: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readParamsMarker(spark, path) match {
-      case Some(existing) =>
-        require(existing == value,
-          s"${p.getParent} was mined with ${p.getName}=$existing; got " +
-            s"$value — one set of $what per table")
-      case None =>
-        fs.mkdirs(p.getParent)
-        val out = fs.create(p, true)
-        out.write(value.getBytes("UTF-8"))
-        out.close()
-    }
-  }
-
-  private def readParamsMarker(spark: org.apache.spark.sql.SparkSession,
-                               path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        // read to EOF in a loop: a single read() may SHORT-READ on
-        // non-local filesystems (HDFS read() is not guaranteed to
-        // fill), silently truncating the value and tripping the
-        // verify-always check with a bogus mismatch
-        val out = new java.io.ByteArrayOutputStream(64)
-        val buf = new Array[Byte](64)
-        var n = in.read(buf)
-        while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-        // a 0-byte marker is a TORN write (death between create and
-        // write) — treat as absent so the next verify heals it by
-        // rewriting, instead of bricking the table
-        Some(new String(out.toByteArray, "UTF-8").trim).filter(_.nonEmpty)
-      } finally in.close()
-    }
-  }
-
-  private def readLMarker(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Option[Int] =
-    readParamsMarker(spark, s"$dir/_L").map(_.toInt)
 
   /** Apply the [[exactSubstrSpans]] cut list: each document's text
     * reconstructed from the tokens OUTSIDE every dup span, in original

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions.{col, sum}
 
 /** Torn-shard-safe replay detection for the batch-shard appenders
   * ([[CountChannel]] for additive counts, [[SetChannel]] for doc-keyed
-  * row sets, [[appendIds]] for tombstone id sets).
+  * row sets, [[Tombstones]] for the tombstone id sets every retire
+  * channel writes through [[appendIds]]).
   *
   * A bare `fs.exists(shardDir)` replay check has a CRASH HOLE: a writer
   * killed mid-`write.parquet` leaves the directory present but
@@ -31,6 +32,53 @@ object ShardWrite {
     // torn: a previous writer died mid-commit — rewrite from scratch
     fs.delete(p, true)
     true
+  }
+
+  /** Write-once / verify-always parameter marker — a table's layout
+    * contract (the window-mine `_L`/`_NW`, the WAND `_span`): the first
+    * writer records `value` at `path`, every later writer must present
+    * the identical value or the write is rejected loudly — `what` names
+    * the contract in the error. A torn (0-byte) marker reads as absent,
+    * so this rewrite heals it. */
+  private[graft] def verifyMarker(spark: SparkSession, path: String,
+                                  value: String, what: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    readMarker(spark, path) match {
+      case Some(existing) =>
+        require(existing == value,
+          s"${p.getParent} was written with ${p.getName}=$existing; got " +
+            s"$value — one set of $what per table")
+      case None =>
+        fs.mkdirs(p.getParent)
+        val out = fs.create(p, true)
+        try out.write(value.getBytes("UTF-8")) finally out.close()
+    }
+  }
+
+  /** The [[verifyMarker]] value at `path`; None when absent or torn. */
+  private[graft] def readMarker(spark: SparkSession,
+                                path: String): Option[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try {
+        // read to EOF in a loop: a single read() may SHORT-READ on
+        // non-local filesystems (HDFS read() is not guaranteed to
+        // fill), silently truncating the value and tripping the
+        // verify-always check with a bogus mismatch
+        val out = new java.io.ByteArrayOutputStream(64)
+        val buf = new Array[Byte](64)
+        var n = in.read(buf)
+        while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
+        // a 0-byte marker is a TORN write (death between create and
+        // write) — treat as absent so the next verify heals it by
+        // rewriting, instead of bricking the table
+        Some(new String(out.toByteArray, "UTF-8").trim).filter(_.nonEmpty)
+      } finally in.close()
+    }
   }
 
   private def empty(spark: SparkSession,
@@ -166,27 +214,6 @@ object ShardWrite {
     }
   }
 
-  /** Consume a channel's COMPLETE shards only — the channel-deletion
-    * half of the tombstone folds. Deleting the whole channel ROOT
-    * would also destroy a concurrently in-flight append (a claimed
-    * dir with no `_SUCCESS` yet — its tombstones were NOT folded);
-    * deleting just the complete dirs — plain and merged, exactly what
-    * the fold's read covered directly or via the watermark — leaves
-    * the in-flight writer untouched: its shard commits into the
-    * surviving channel and the next fold consumes it. Replays of
-    * already-consumed batches are safe by the channels' SET semantics
-    * (a re-appended tombstone anti-joins rows that no longer exist).
-    * The root goes too once nothing survives under it. */
-  def consumeCompleteShards(spark: SparkSession, table: String): Unit = {
-    val (fs, root) = fsOf(spark, table)
-    if (!fs.exists(root)) return
-    shardDirs(spark, table).foreach { st =>
-      if (fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-        fs.delete(st.getPath, true)
-    }
-    if (fs.listStatus(root).isEmpty) fs.delete(root, true)
-  }
-
   /** Fold `table`'s live shards into ONE merged m-shard. `merge` is the
     * channel's re-aggregation (count sums; identity for doc-disjoint
     * rows; distinct for id sets). Returns (shards in, shards out);
@@ -237,12 +264,61 @@ object ShardWrite {
       case Some(shard) => rows.write.parquet(shard); true
     }
 
-  /** One batch of a doc-id tombstone channel: the distinct values of
-    * `id` appended to `table` ([[appendBatch]]). Tombstone channels
-    * have SET semantics, so their compaction merge is `distinct`. */
-  def appendIds(ids: DataFrame, id: Column, table: String,
-                batchId: Long): Boolean =
+  /** One batch of a tombstone channel: the distinct values of `id`
+    * appended to `table` ([[appendBatch]]). */
+  private def appendIds(ids: DataFrame, id: Column, table: String,
+                        batchId: Long): Boolean =
     appendBatch(table, batchId, ids.select(id).distinct())
+
+  /** A TOMBSTONE ID SET: the `key LONG` ids leaving the corpus, one
+    * `_SUCCESS`-claimed shard per batch at `table` — the one convention
+    * behind every retire channel (postings, ANN codes, the two gates,
+    * and each [[SetChannel]]). A family appends, subtracts the [[live]]
+    * set at read, and [[consume]]s it once a fold made the subtraction
+    * byte-real; the storage policy lives here:
+    *  - [[append]] goes through [[appendIds]]: replays skip, torn shards
+    *    heal.
+    *  - [[live]] is None when one listing finds no complete shard, so a
+    *    never-retired (or only in-flight) channel costs zero Spark jobs
+    *    and adds zero plan nodes; else the set under the watermark rule
+    *    ([[readShards]]).
+    *  - [[consume]] deletes the COMPLETE shards only. Deleting the root
+    *    would also destroy a concurrently in-flight append (a claimed
+    *    dir with no `_SUCCESS` yet — its ids were NOT folded); deleting
+    *    just the complete dirs, plain and merged, exactly what the
+    *    fold's read covered, leaves the in-flight writer untouched: its
+    *    shard commits into the surviving channel and the next fold
+    *    consumes it. A replayed append of already-consumed ids anti-joins
+    *    rows that no longer exist (SET semantics). The root goes too
+    *    once nothing survives under it.
+    *  - [[compact]] folds the shards to one m-shard by `distinct`. */
+  final case class Tombstones(table: String, key: String) {
+    private val schema = s"$key LONG"
+
+    /** Tombstone the distinct values of `id` over `ids`. Returns false
+      * iff the batch is a replay. */
+    def append(batchId: Long, ids: DataFrame, id: Column): Boolean =
+      appendIds(ids, id.as(key), table, batchId)
+
+    def live(spark: SparkSession): Option[DataFrame] = {
+      val shards = liveShards(spark, table)
+      if (shards.isEmpty) None else Some(readLive(spark, shards, schema))
+    }
+
+    def consume(spark: SparkSession): Unit = {
+      val (fs, root) = fsOf(spark, table)
+      if (!fs.exists(root)) return
+      shardDirs(spark, table).foreach { st =>
+        if (fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
+          fs.delete(st.getPath, true)
+      }
+      if (fs.listStatus(root).isEmpty) fs.delete(root, true)
+    }
+
+    /** (shards in, shards out). */
+    def compact(spark: SparkSession): (Int, Int) =
+      compactShards(spark, table, schema)(_.distinct())
+  }
 
   /** An ADDITIVE COUNT CHANNEL: per-batch count shards at `ingestTable`
     * and tombstone counts at `retireTable`, both `schema` (DDL), keyed
@@ -294,61 +370,54 @@ object ShardWrite {
   }
 
   /** A doc-keyed SET CHANNEL: row shards at `ingestTable` (`schema`,
-    * DDL) and a tombstone id set at `retireTable` (`doc_id LONG`). A
+    * DDL) and a [[Tombstones]] set at `retireTable` (`doc_id LONG`). A
     * row belongs to every document its `docKeys` columns name, and a
     * tombstone on any of them drops it. A family supplies its
     * per-batch rows and reads [[retained]]; the storage policy lives
     * here:
     *  - [[append]]/[[retire]] write one `_SUCCESS`-claimed shard per
-    *    batch ([[appendBatch]], [[appendIds]]): replays skip, torn
-    *    shards heal.
+    *    batch ([[appendBatch]], [[Tombstones.append]]): replays skip,
+    *    torn shards heal.
     *  - [[retained]] is the live rows minus every row that names a
-    *    tombstoned document, one left-anti join per key. With no
-    *    complete retire shard, decided from the listing, it is the
-    *    plain [[readShards]] plan.
+    *    tombstoned document, one left-anti join per key. With no live
+    *    tombstone ([[Tombstones.live]]) it is the plain [[readShards]]
+    *    plan.
     *  - [[compact]] folds each table to one m-shard: rows by identity
     *    (the caller keeps batches row-disjoint; a DISTINCT would mask a
     *    row appended twice), tombstones by `distinct` (set semantics).
     *  - [[fold]] drops the tombstoned rows from the BYTES as a
-    *    compaction of the ingest table, then consumes the channel. With
-    *    fewer than two live ingest shards there is nothing to compact
-    *    and the fold WAITS (returns false, channel kept; [[retained]]
-    *    stays correct). The consume deletes only the COMPLETE retire
-    *    shards the fold read ([[consumeCompleteShards]]), so an
-    *    in-flight tombstone append survives for the next fold; a
-    *    replayed tombstone drops rows that no longer exist. Returns
-    *    true iff the fold consumed the channel. */
+    *    compaction of the ingest table, then consumes the tombstones
+    *    ([[Tombstones.consume]]: an in-flight append survives for the
+    *    next fold). With fewer than two live ingest shards there is
+    *    nothing to compact and the fold WAITS (returns false, channel
+    *    kept; [[retained]] stays correct). Returns true iff the fold
+    *    consumed the channel. */
   final case class SetChannel(ingestTable: String, retireTable: String,
                               schema: String, docKeys: Seq[String]) {
+    private val tombs = Tombstones(retireTable, "doc_id")
+
     def append(batchId: Long, rows: DataFrame): Boolean =
       appendBatch(ingestTable, batchId, rows)
 
-    /** Tombstone the distinct values of `id` over `ids`. */
     def retire(batchId: Long, ids: DataFrame, id: Column): Boolean =
-      appendIds(ids, id.as("doc_id"), retireTable, batchId)
+      tombs.append(batchId, ids, id)
 
     def retained(spark: SparkSession): DataFrame = {
       val rows = readShards(spark, ingestTable, schema)
-      val gone = liveShards(spark, retireTable)
-      if (gone.isEmpty) rows else drop(rows, readLive(spark, gone, "doc_id LONG"))
+      tombs.live(spark).fold(rows)(drop(rows, _))
     }
 
     /** (ingest, retire) pairs of (shards in, shards out). */
     def compact(spark: SparkSession): ((Int, Int), (Int, Int)) =
-      (compactShards(spark, ingestTable, schema)(identity),
-        compactShards(spark, retireTable, "doc_id LONG")(_.distinct()))
+      (compactShards(spark, ingestTable, schema)(identity), tombs.compact(spark))
 
     def fold(spark: SparkSession): Boolean = {
-      val (fs, retP) = fsOf(spark, retireTable)
-      if (!fs.exists(retP)) return false
-      val gone = readShards(spark, retireTable, "doc_id LONG").persist()
+      val gone = tombs.live(spark).getOrElse(return false).persist()
       try {
-        if (gone.head(1).isEmpty) {
-          consumeCompleteShards(spark, retireTable); return false
-        }
+        if (gone.head(1).isEmpty) { tombs.consume(spark); return false }
         val (in, _) = compactShards(spark, ingestTable, schema)(drop(_, gone))
         if (in <= 1) return false // nothing to compact — wait for ingest
-        consumeCompleteShards(spark, retireTable)
+        tombs.consume(spark)
         true
       } finally gone.unpersist()
     }

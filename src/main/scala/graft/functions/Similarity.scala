@@ -1133,8 +1133,10 @@ object Similarity {
     * already existed (replay). */
   def retireFromDir(vecIds: DataFrame, idCol: String, dir: String,
                     batchId: Long): Boolean =
-    ShardWrite.appendIds(vecIds, col(idCol).as("vid"), s"$dir/retire",
-      batchId)
+    tombstones(dir).append(batchId, vecIds, col(idCol))
+
+  private def tombstones(dir: String) =
+    ShardWrite.Tombstones(s"$dir/retire", "vid")
 
   /** PHYSICAL tombstone fold — the maintenance-window completion of
     * [[retireFromDir]], FAISS `remove_ids` made byte-real: rewrite the
@@ -1152,14 +1154,15 @@ object Similarity {
     * inside the window reruns the fold to the same final bytes — run
     * it in the same paused window as compaction (mid-swap readers can
     * transiently see duplicated retained rows, the documented
-    * compaction caveat). Returns true iff a fold ran (false: no
-    * channel, or nothing tombstoned intersects the codes). */
+    * compaction caveat). The consume deletes only the complete
+    * tombstone shards the fold read ([[ShardWrite.Tombstones.consume]]),
+    * so an in-flight append survives for the next fold. Returns true
+    * iff a fold ran (false: no complete tombstone shard, or nothing
+    * tombstoned intersects the codes). */
   def foldRetired(spark: org.apache.spark.sql.SparkSession,
                   dir: String): Boolean = {
-    val retP = new org.apache.hadoop.fs.Path(s"$dir/retire")
-    val fs = retP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(retP)) return false
-    val ids = ShardWrite.readShards(spark, s"$dir/retire", "vid LONG").persist()
+    val tombs = tombstones(dir)
+    val ids = tombs.live(spark).getOrElse(return false).persist()
     try {
       val rewrote = graft.streaming.LakeMaintenance.evictFromDir(
         spark, s"$dir/codes", ids, "vid",
@@ -1185,24 +1188,20 @@ object Similarity {
         corpusRowsCache.remove(metaP.toString)
       }
       // channel consumed only after the rewrite AND refresh landed —
-      // the crash contract: a death before this delete reruns the fold
-      fs.delete(retP, true)
+      // the crash contract: a death before this consume reruns the fold
+      tombs.consume(spark)
       rewrote
     } finally ids.unpersist()
   }
 
-  /** The stored codes minus the tombstone channel — what every probe
-    * scans. A dir with no retire channel reads unchanged (the common
-    * case costs one existence check, no extra plan nodes). */
+  /** The stored codes minus the live tombstones — what every probe
+    * scans. A dir with no live tombstone reads unchanged (one listing,
+    * no extra plan nodes). */
   private def readCodesRetained(spark: org.apache.spark.sql.SparkSession,
                                 dir: String): DataFrame = {
     val codes = readArtifact(spark, s"$dir/codes")
-    val p = new org.apache.hadoop.fs.Path(s"$dir/retire")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) codes
-    else codes.join(
-      ShardWrite.readShards(spark, s"$dir/retire", "vid LONG"),
-      Seq("vid"), "left_anti")
+    tombstones(dir).live(spark)
+      .fold(codes)(codes.join(_, Seq("vid"), "left_anti"))
   }
 
   /** Whether the artifacts at `dir` were built over unit-normalized

@@ -1400,13 +1400,6 @@ tempplan AS (SELECT source, n_docs, n_tokens,
       Dedup.boilerplateFromShards(s, dir, RetireBoilerMinDf, BoilerTopK)),
       "retire")(s, d)
 
-  /** q_pagerank_retire: the maintained edge set with tombstones — the
-    * stored pairs (copied from the `q_pagerank_incr` shards, no
-    * re-mine) plus a doc_id retire shard; rank derives over edges not
-    * touching a tombstoned doc ([[graft.functions.GraphRank
-    * .readRetainedPairs]] — exact, pair existence is pairwise under
-    * the minhash miner). Oracle = the same unrolled-iteration SQL over
-    * pairs mined from the retained corpus. */
   /** Pair shards + a doc_id tombstone shard — the retained-edge view
     * both graph retire rows serve from (the `pairShardsDir` sharing
     * discipline: one maintained edge set, many serves). */
@@ -1425,6 +1418,13 @@ tempplan AS (SELECT source, n_docs, n_tokens,
     }
   }
 
+  /** q_pagerank_retire: the maintained edge set with tombstones — the
+    * stored pairs (copied from the `q_pagerank_incr` shards, no
+    * re-mine) plus a doc_id retire shard; rank derives over edges not
+    * touching a tombstoned doc ([[graft.functions.GraphRank
+    * .readRetainedPairs]] — exact, pair existence is pairwise under
+    * the minhash miner). Oracle = the same unrolled-iteration SQL over
+    * pairs mined from the retained corpus. */
   def pageRankRetireQ(s: SparkSession, d: String): DataFrame =
     graft.functions.GraphRank.pageRankFromPairs(s, pairRetireDir(s, d))
       .select(col("node").as("doc_id"), col("rank"))

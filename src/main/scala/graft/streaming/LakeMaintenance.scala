@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import graft.Tables
+import graft.functions.ShardWrite
 
 /** Lake maintenance for the micro-batch sink's small-files problem: a
   * 10-second append cadence ([[TickIngest.startLakeSink]]) accretes one
@@ -109,8 +110,7 @@ object LakeMaintenance {
                             targetBytes: Long, maxFiles: Int,
                             snapshotRoot: Option[String] = None): Option[(Int, Int)] = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val files = fs.listStatus(p)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+    val files = parquetFiles(fs, p)
     if (files.length <= maxFiles) return None
     val bytes = files.map(_.getLen).sum
     val n = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
@@ -120,17 +120,32 @@ object LakeMaintenance {
     // any partition column lives in the dir name, which stays put
     Tables.parquet(spark, files.map(_.getPath.toString): _*)
       .coalesce(n).write.mode("overwrite").parquet(tmp.toString)
-    val compacted = fs.listStatus(tmp)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    // COMMIT ORDER — rename in first, delete originals only after every
-    // rename succeeded; see the loss-proof contract above. The name
-    // carries time + UUID so a collision with ANY prior run's output is
-    // impossible and the rollback path below only fires on real failures
+    val compacted = swapIn(spark, fs, p, tmp, files, "compacted",
+      s"compaction: rename into $p failed; partition left unchanged",
+      snapshotRoot)
+    Some((files.length, compacted))
+  }
+
+  /** The loss-proof swap tail every rewrite here ends with (contract
+    * above): each parquet file of the hidden `tmp` dir renames into `p`
+    * as `<prefix>-<stamp>-<i>.parquet`; a failed rename rolls the
+    * renamed ones back out, drops `tmp` and throws `failMsg`, leaving
+    * the originals intact. Only then do the `originals` go — RETIRED in
+    * one [[Snapshot]] commit that re-lists `p` when `snapshotRoot` has
+    * manifests (older versions resolve them from `_stale`), deleted
+    * otherwise — and `tmp` is dropped. The stamp carries time + UUID, so
+    * a collision with ANY prior run's output is impossible and the
+    * rollback only fires on real failures. Returns the files swapped in. */
+  private[streaming] def swapIn(spark: SparkSession, fs: FileSystem, p: Path,
+                                tmp: Path, originals: Array[FileStatus],
+                                prefix: String, failMsg: String,
+                                snapshotRoot: Option[String] = None): Int = {
+    val written = parquetFiles(fs, tmp)
     val stamp = java.lang.Long.toHexString(System.nanoTime()) + "-" +
       java.util.UUID.randomUUID().toString
     val renamed = scala.collection.mutable.ArrayBuffer.empty[Path]
-    val allRenamed = compacted.zipWithIndex.forall { case (f, i) =>
-      val dest = new Path(p, f"compacted-$stamp-$i%05d.parquet")
+    val allRenamed = written.zipWithIndex.forall { case (f, i) =>
+      val dest = new Path(p, f"$prefix-$stamp-$i%05d.parquet")
       val ok = fs.rename(f.getPath, dest)
       if (ok) renamed += dest
       ok
@@ -138,22 +153,23 @@ object LakeMaintenance {
     if (!allRenamed) {
       renamed.foreach(fs.delete(_, false)) // originals all intact
       fs.delete(tmp, true)
-      throw new java.io.IOException(
-        s"compaction: rename into $p failed; partition left unchanged")
+      throw new java.io.IOException(failMsg)
     }
     snapshotRoot.filter(Snapshot.enabled(spark, _)) match {
       case Some(r) =>
-        // retire the originals and re-list this partition in ONE commit:
-        // manifest readers at older versions resolve them from _stale
         val rootUri = new Path(r).toUri.getPath.stripSuffix("/")
         val rel = p.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
         Snapshot.commit(spark, r, Seq(rel),
-          retired = files.map(_.getPath).toSeq)
-      case None => files.foreach(f => fs.delete(f.getPath, false))
+          retired = originals.map(_.getPath).toSeq)
+      case None => originals.foreach(f => fs.delete(f.getPath, false))
     }
     fs.delete(tmp, true)
-    Some((files.length, compacted.length))
+    written.length
   }
+
+  private[streaming] def parquetFiles(fs: FileSystem, dir: Path): Array[FileStatus] =
+    fs.listStatus(dir)
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
 
   /** RETIRE-CHANNEL EVICTION kernel: rewrite ONE directory's parquet
     * files to their `distinct()` rows MINUS those whose `key` column
@@ -195,8 +211,7 @@ object LakeMaintenance {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return false
-    val files = fs.listStatus(p)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+    val files = parquetFiles(fs, p)
     if (files.isEmpty) return false
     val df = Tables.parquet(spark, files.map(_.getPath.toString): _*)
     val hit = df.join(org.apache.spark.sql.functions.broadcast(ids),
@@ -232,8 +247,7 @@ object LakeMaintenance {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return (false, false)
-    val files = fs.listStatus(p)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+    val files = parquetFiles(fs, p)
     if (files.isEmpty) return (false, false)
     import org.apache.spark.sql.functions.{broadcast, col, count, lit}
     val df = Tables.parquet(spark, files.map(_.getPath.toString): _*)
@@ -252,7 +266,7 @@ object LakeMaintenance {
     * rewrite into the hidden temp, stamped renames in, originals
     * deleted/snapshot-retired (the loss-proof swap contract above). */
   private def rewriteMinus(spark: SparkSession, p: Path, fs: FileSystem,
-                           files: Array[org.apache.hadoop.fs.FileStatus],
+                           files: Array[FileStatus],
                            df: org.apache.spark.sql.DataFrame,
                            ids: org.apache.spark.sql.DataFrame, key: String,
                            snapshotRoot: Option[String]): Unit = {
@@ -275,31 +289,37 @@ object LakeMaintenance {
     df.distinct()
       .join(org.apache.spark.sql.functions.broadcast(ids), Seq(key), "left_anti")
       .write.mode("overwrite").parquet(tmp.toString)
-    val filtered = fs.listStatus(tmp)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val stamp = java.lang.Long.toHexString(System.nanoTime()) + "-" +
-      java.util.UUID.randomUUID().toString
-    val renamed = scala.collection.mutable.ArrayBuffer.empty[Path]
-    val allRenamed = filtered.zipWithIndex.forall { case (f, i) =>
-      val dest = new Path(p, f"evicted-$stamp-$i%05d.parquet")
-      val ok = fs.rename(f.getPath, dest)
-      if (ok) renamed += dest
-      ok
-    }
-    if (!allRenamed) {
-      renamed.foreach(fs.delete(_, false)) // originals all intact
-      fs.delete(tmp, true)
-      throw new java.io.IOException(
-        s"eviction: rename into $p failed; directory left unchanged")
-    }
-    snapshotRoot.filter(Snapshot.enabled(spark, _)) match {
-      case Some(r) =>
-        val rootUri = new Path(r).toUri.getPath.stripSuffix("/")
-        val rel = p.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-        Snapshot.commit(spark, r, Seq(rel),
-          retired = files.map(_.getPath).toSeq)
-      case None => files.foreach(f => fs.delete(f.getPath, false))
-    }
-    fs.delete(tmp, true)
+    swapIn(spark, fs, p, tmp, files, "evicted",
+      s"eviction: rename into $p failed; directory left unchanged",
+      snapshotRoot)
+  }
+
+  /** The retire-channel EVICTION PASS of the dedup gates: rewrite every
+    * `(dir, snapshotRoot)` of `dirs` holding rows of the live
+    * `tombs` ([[evictFromDirIfDense]] at `minDensity`), then CONSUME
+    * the tombstones — or, when any dir was CARRIED under the density
+    * bound, keep them for the caller's probe-time subtraction,
+    * compacted to one m-shard so that read stays flat. The consume runs
+    * LAST, only after every dir rewrote: a crash anywhere inside the
+    * pass leaves the tombstones in place and the next pass reruns the
+    * converging kernel. `dirs` is enumerated only when there is
+    * something to evict. None when `tombs` has no live shard; else
+    * Some((dirs scanned, dirs rewritten)). */
+  def evictRetired(spark: SparkSession, tombs: ShardWrite.Tombstones,
+                   minDensity: Double)(
+      dirs: => Seq[(String, String)]): Option[(Int, Int)] = {
+    val ids = tombs.live(spark).getOrElse(return None).persist()
+    try {
+      var scanned = 0; var rewritten = 0; var carried = false
+      if (ids.head(1).nonEmpty) dirs.foreach { case (dir, root) =>
+        scanned += 1
+        val (rw, cr) = evictFromDirIfDense(spark, dir, ids, tombs.key,
+          minDensity, snapshotRoot = Some(root))
+        if (rw) rewritten += 1
+        carried ||= cr
+      }
+      if (carried) tombs.compact(spark) else tombs.consume(spark)
+      Some((scanned, rewritten))
+    } finally ids.unpersist()
   }
 }

@@ -265,37 +265,29 @@ object NearDupGate {
     * [[mitigateHotBands]] run and duplicate keys are inert for the
     * anti-join consumer — but neither is free to read forever, so the
     * maintenance cadence ([[compactLayouts]]) rewrites it bounded at
-    * exactly the distinct key count. Replace-before-delete: the merged
-    * file renames in FIRST, the originals delete after — a crash
-    * between the two leaves duplicate keys, which are inert; no crash
-    * point loses a key (losing one would silently re-open a mined
-    * collision channel). */
+    * exactly the distinct key count. Replace-before-delete
+    * ([[LakeMaintenance.swapIn]]): the merged file renames in FIRST,
+    * the originals delete after — a crash between the two leaves
+    * duplicate keys, which are inert; no crash point loses a key
+    * (losing one would silently re-open a mined collision channel). */
   def compactHotBands(spark: SparkSession, statePath: String): Unit = {
     val dir = new Path(hotBandsDir(statePath))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return
-    val files = fs.listStatus(dir)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+    val files = LakeMaintenance.parquetFiles(fs, dir)
     if (files.length <= 1) return
     val tmp = new Path(dir, ".hotbands_tmp")
     fs.delete(tmp, true)
     Tables.parquet(spark, files.map(_.getPath.toString): _*)
       .distinct().coalesce(1).write.parquet(tmp.toString)
-    val stamp = java.util.UUID.randomUUID().toString
-    fs.listStatus(tmp)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .zipWithIndex.foreach { case (f, i) =>
-        require(fs.rename(f.getPath,
-          new Path(dir, f"hotbands-$stamp-$i%03d.parquet")),
-          s"compactHotBands: rename into $dir failed")
-      }
-    files.foreach(f => fs.delete(f.getPath, false))
-    fs.delete(tmp, true)
+    LakeMaintenance.swapIn(spark, fs, dir, tmp, files, "hotbands",
+      s"compactHotBands: rename into $dir failed")
   }
 
   // ---- document tombstones (the retire channel on gate STATE) -------
 
-  private def retireDir(statePath: String): String = s"$statePath/retire"
+  private def tombstones(statePath: String) =
+    graft.functions.ShardWrite.Tombstones(s"$statePath/retire", "doc_id")
 
   /** TOMBSTONES for the gate's memory: docs leaving the corpus
     * (takedowns, license pulls) append their ids to
@@ -326,44 +318,23 @@ object NearDupGate {
     * design. Returns false iff the shard already existed. */
   def retireAppend(docIds: DataFrame, statePath: String,
                    batchId: Long): Boolean =
-    graft.functions.ShardWrite.appendIds(docIds, col("doc_id"),
-      retireDir(statePath), batchId)
-
-  /** The accumulated tombstone set, or None when the channel was never
-    * written (the common case costs one existence check and adds zero
-    * plan nodes downstream). */
-  private def retiredDocs(spark: SparkSession,
-                          statePath: String): Option[DataFrame] = {
-    val p = new Path(retireDir(statePath))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else Some(graft.functions.ShardWrite
-      .readShards(spark, retireDir(statePath), "doc_id LONG"))
-  }
+    tombstones(statePath).append(batchId, docIds, col("doc_id"))
 
   /** MAINTENANCE: physically rewrite every leaf holding rows of
     * tombstoned docs — bands, sigs AND output — then CONSUME the
-    * channel. Runs in the compaction window ([[startNearDupSink]] wires
-    * it in before [[compactLayouts]]); per-leaf rewrites use the
-    * loss-proof converging kernel ([[LakeMaintenance.evictFromDir]]):
-    * a crash anywhere inside the window leaves the channel in place
-    * (it deletes LAST, only after every layout rewrote), so the next
-    * window reruns the eviction and the distinct-based rewrite
-    * converges — and the probe-time subtraction keeps decisions
-    * correct throughout the crash window. Returns (leaves scanned,
-    * leaves rewritten).
+    * channel: the shared eviction pass ([[LakeMaintenance.evictRetired]],
+    * loss-proof and crash-convergent) over every leaf of the three
+    * layouts. Runs in the compaction window ([[startNearDupSink]] wires
+    * it in before [[compactLayouts]]); the probe-time subtraction keeps
+    * decisions correct throughout a crash window. Returns (leaves
+    * scanned, leaves rewritten).
     *
     * `minEvictDensity` > 0 bounds the rewrite to the takedown's actual
     * FOOTPRINT (the r15 verdict's #3 — uniform 10% takedowns rewrote
-    * 192/192 leaves): a leaf rewrites only when its tombstoned-row
-    * fraction reaches the bound
-    * ([[LakeMaintenance.evictFromDirIfDense]]); under-threshold leaves
-    * are CARRIED — byte-untouched, decisions stay exact through the
-    * probe-time channel subtraction — so the channel is kept (its
-    * shards compacted to one m-shard so channel reads stay flat) and
-    * the stragglers fold when density accumulates or a full
-    * (minEvictDensity = 0, the default) pass runs on the compaction
-    * cadence. */
+    * 192/192 leaves): under-threshold leaves are CARRIED —
+    * byte-untouched, exact through the probe-time subtraction — and
+    * fold when density accumulates or a full (minEvictDensity = 0, the
+    * default) pass runs on the compaction cadence. */
   def evictRetired(spark: SparkSession, outPath: String,
                    statePath: String,
                    minEvictDensity: Double = 0.0): (Int, Int) = {
@@ -372,36 +343,12 @@ object NearDupGate {
     val marker = new Path(statePath, "_gate_params")
     if (!fs.exists(marker) || readMarker(fs, marker).contains(";")) return (0, 0)
     val gp = GateParams.parse(readMarker(fs, marker)).getOrElse(return (0, 0))
-    val ids = retiredDocs(spark, statePath).getOrElse(return (0, 0))
-    val idsP = ids.persist()
-    try {
-      var scanned = 0; var rewritten = 0; var carried = false
-      if (idsP.head(1).nonEmpty) {
-        for (l <- GateParams.Layouts) {
-          val root = new Path(layoutDir(l, outPath, statePath))
-          leafSizes(fs, root, gp, l).foreach { case (p, _) =>
-            scanned += 1
-            val (rw, cr) = LakeMaintenance.evictFromDirIfDense(spark,
-              nodeDir(root, p).toString, idsP, "doc_id", minEvictDensity,
-              snapshotRoot = Some(root.toString))
-            if (rw) rewritten += 1
-            carried ||= cr
-          }
-        }
-      }
-      if (!carried)
-        // channel consumed only after EVERY leaf rewrote — the crash
-        // contract above; only COMPLETE shards (an in-flight retire
-        // append survives for the next window)
-        graft.functions.ShardWrite.consumeCompleteShards(
-          spark, retireDir(statePath))
-      else
-        // stragglers stay in the channel: compact it so the read the
-        // probe path pays stays one m-shard, not takedown-history dirs
-        graft.functions.ShardWrite.compactShards(spark,
-          retireDir(statePath), "doc_id LONG")(_.distinct())
-      (scanned, rewritten)
-    } finally idsP.unpersist()
+    LakeMaintenance.evictRetired(spark, tombstones(statePath), minEvictDensity) {
+      for (l <- GateParams.Layouts;
+           root = new Path(layoutDir(l, outPath, statePath));
+           (p, _) <- leafSizes(fs, root, gp, l))
+        yield (nodeDir(root, p).toString, root.toString)
+    }.getOrElse((0, 0))
   }
 
   /** The hash column each layout is keyed by — ONE definition so the
@@ -595,9 +542,9 @@ object NearDupGate {
       // near-duplicates immediately, not at the next eviction window.
       // The sigs fetch needs no twin filter: colliding seen_ids derive
       // from these filtered rows. Absent channel → identical plan.
-      val retired = retiredDocs(spark, statePath)
+      val gone = tombstones(statePath).live(spark)
       val stateBands = readLeaves(spark, s"$statePath/bands", probeLeaves)
-        .map(sb => retired.fold(sb)(r =>
+        .map(sb => gone.fold(sb)(r =>
           sb.join(broadcast(r), Seq("doc_id"), "left_anti")))
 
       // ---- gate 1: state collisions ---------------------------------
@@ -768,7 +715,7 @@ object NearDupGate {
     // with the gate's statePath given, pending tombstones subtract at
     // read — a taken-down doc is invisible to corpus readers from the
     // instant of retireAppend, not the next eviction window
-    statePath.flatMap(sp => retiredDocs(spark, sp)).fold(raw)(r =>
+    statePath.flatMap(tombstones(_).live(spark)).fold(raw)(r =>
       raw.join(broadcast(r), Seq("doc_id"), "left_anti"))
   }
 

@@ -669,21 +669,10 @@ object PostingsIndex {
     * false iff the shard already existed (replay). */
   def retireAppend(docIds: DataFrame, retirePath: String,
                    batchId: Long): Boolean =
-    graft.functions.ShardWrite.appendIds(docIds, col("doc_id"),
-      retirePath, batchId)
+    tombstones(retirePath).append(batchId, docIds, col("doc_id"))
 
-  /** The accumulated tombstone set (zero rows when the channel was
-    * never written); reads through the compaction watermark rule. */
-  def retiredDocs(spark: SparkSession, retirePath: String): DataFrame =
-    graft.functions.ShardWrite.readShards(spark, retirePath, "doc_id LONG")
-
-  /** Fold the tombstone channel's batch shards into one distinct
-    * m-shard — the [[graft.functions.ShardWrite.compactShards]]
-    * discipline (set semantics, so distinct is the exact merge). */
-  def compactRetire(spark: SparkSession,
-                    retirePath: String): (Int, Int) =
-    graft.functions.ShardWrite.compactShards(spark, retirePath,
-      "doc_id LONG")(_.distinct())
+  private def tombstones(retirePath: String) =
+    ShardWrite.Tombstones(retirePath, "doc_id")
 
   /** PHYSICAL tombstone fold for the postings family — the maintenance
     * completion of [[retireAppend]]: until now takedowns subtracted at
@@ -789,19 +778,17 @@ object PostingsIndex {
   def foldRetiredPostings(spark: SparkSession, tfPath: String,
                           dlPath: String, retirePath: String,
                           dfPath: Option[String] = None): Boolean = {
-    val retP = new Path(retirePath)
-    val fs = retP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(retP)) {
+    val tombs = tombstones(retirePath)
+    val gone = tombs.live(spark).getOrElse {
       // channel gone but a crashed fold's fence may still brick serves
       // — the advertised recovery IS this rerun, so it must self-heal
       healPostingsFence(spark, tfPath, dlPath, dfPath)
       return false
-    }
-    val gone = retiredDocs(spark, retirePath).persist()
+    }.persist()
     try {
       if (gone.head(1).isEmpty) {
         healPostingsFence(spark, tfPath, dlPath, dfPath)
-        ShardWrite.consumeCompleteShards(spark, retirePath)
+        tombs.consume(spark)
         return false
       }
       // fence FIRST: from here until every piece below is consistent,
@@ -834,10 +821,8 @@ object PostingsIndex {
       // every piece consistent again → fence off, THEN the channel
       // (a death between the two leaves a correct-serving state: the
       // sidecars are retained and tf ∩ tombstones is already empty).
-      // Consume only the COMPLETE tombstone shards — an in-flight
-      // append survives for the next fold (ShardWrite scaladoc)
       clearFoldFence(spark, dlPath)
-      ShardWrite.consumeCompleteShards(spark, retirePath)
+      tombs.consume(spark)
       true
     } finally gone.unpersist()
   }
@@ -927,7 +912,7 @@ object PostingsIndex {
         val (t, _, d) = partnerOf("dlVersion", l, _._2 == l)
         (Some(t), Some(l), dfVersion.orElse(d))
     }
-    val gone = retirePath.map(rp => retiredDocs(spark, rp))
+    val gone = retirePath.flatMap(tombstones(_).live(spark))
     val dl = {
       val dl0 = readUnionShards(spark, dlPath, dlV)
       gone.fold(dl0)(g => dl0.join(g, Seq("doc_id"), "left_anti"))
@@ -1022,7 +1007,7 @@ object PostingsIndex {
                      span: Long = 64L,
                      version: Option[Long] = None): Unit = {
     require(span >= 1, s"span=$span must be positive")
-    writeSpanMarker(spark, wandPath, span)
+    verifySpan(spark, wandPath, span)
     val tf = readTfIndex(spark, tfPath, version)
       .withColumn("tbucket",
         coalesce(col("tbucket"), tokenBucket(col("token"))))
@@ -1055,7 +1040,7 @@ object PostingsIndex {
                      span: Long = 64L): Unit = {
     require(span >= 1, s"span=$span must be positive")
     val spark = batch.sparkSession
-    writeSpanMarker(spark, wandPath, span)
+    verifySpan(spark, wandPath, span)
     val tfMerged = mergedUpTo(spark, s"$wandPath/tf").exists(batchId <= _)
     val bmMerged = mergedUpTo(spark, s"$wandPath/bm").exists(batchId <= _)
     if (tfMerged && bmMerged) { logWatermarkSkip(wandPath, batchId); return }
@@ -1086,9 +1071,7 @@ object PostingsIndex {
     * caller-remembered number). */
   def compactWandShards(spark: SparkSession, wandPath: String)
       : ((Int, Int), (Int, Int)) = {
-    val span = readSpanMarker(spark, wandPath).getOrElse(
-      throw new IllegalStateException(
-        s"$wandPath has no _span marker — not a maintained WAND layout"))
+    val span = spanOf(spark, wandPath)
     val tfRes = compactWith(spark, s"$wandPath/tf", identity,
       (df, p) => df
         .drop("tbucket", "dblock")
@@ -1123,12 +1106,10 @@ object PostingsIndex {
     * channel. */
   def foldRetiredWand(spark: SparkSession, wandPath: String,
                       retirePath: String): Boolean = {
-    val span = readSpanMarker(spark, wandPath).getOrElse(
-      throw new IllegalStateException(
-        s"$wandPath has no _span marker — not a maintained WAND layout"))
-    val retP = new Path(retirePath)
-    val fs = retP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(retP)) {
+    val span = spanOf(spark, wandPath)
+    val tombs = tombstones(retirePath)
+    val live = tombs.live(spark)
+    if (live.isEmpty) {
       // channel removed out-of-band after a crashed fold: heal the
       // fence so the rerun (the advertised recovery) unbricks serving
       healWandFence(spark, wandPath, span)
@@ -1138,11 +1119,11 @@ object PostingsIndex {
       s"$wandPath/tf has no shard dirs — a one-shot wandLayoutFrom " +
         "layout folds by REBUILDING from the folded tf artifact " +
         "(foldRetiredPostings then wandLayoutFrom), not in place")
-    val gone = retiredDocs(spark, retirePath).persist()
+    val gone = live.get.persist()
     try {
       if (gone.head(1).isEmpty) {
         healWandFence(spark, wandPath, span)
-        ShardWrite.consumeCompleteShards(spark, retirePath)
+        tombs.consume(spark)
         return false
       }
       raiseFoldFence(spark, wandPath)
@@ -1158,7 +1139,7 @@ object PostingsIndex {
       // (doc_id, span), never the dir name; fresh maxima, exact df
       rebuildWandSidecar(spark, wandPath, span)
       clearFoldFence(spark, wandPath)
-      ShardWrite.consumeCompleteShards(spark, retirePath)
+      tombs.consume(spark)
       true
     } finally gone.unpersist()
   }
@@ -1190,44 +1171,20 @@ object PostingsIndex {
     clearFoldFence(spark, wandPath)
   }
 
-  /** The layout's block-span contract, recorded at the root: writers
-    * record it once, rewrites re-derive `dblock` from it, and a
-    * conflicting span THROWS — two spans in one layout would scatter
-    * docs across blocks and void the pruning-exactness proof. */
-  private def writeSpanMarker(spark: SparkSession, wandPath: String,
-                              span: Long): Unit = {
-    val p = new Path(s"$wandPath/_span")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readSpanMarker(spark, wandPath) match {
-      case Some(existing) =>
-        require(existing == span,
-          s"$wandPath was laid out with span=$existing; got span=$span")
-      case None =>
-        fs.mkdirs(p.getParent)
-        val out = fs.create(p, true)
-        out.write(span.toString.getBytes("UTF-8"))
-        out.close()
-    }
-  }
+  /** The layout's block-span contract, recorded at the root
+    * ([[ShardWrite.verifyMarker]]): writers record it once, rewrites
+    * re-derive `dblock` from it, and a conflicting span THROWS — two
+    * spans in one layout would scatter docs across blocks and void the
+    * pruning-exactness proof. */
+  private def verifySpan(spark: SparkSession, wandPath: String,
+                         span: Long): Unit =
+    ShardWrite.verifyMarker(spark, s"$wandPath/_span", span.toString,
+      "block span (dblock is span-bound)")
 
-  private def readSpanMarker(spark: SparkSession,
-                             wandPath: String): Option[Long] = {
-    val p = new Path(s"$wandPath/_span")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        // loop to EOF: a single read() may short-read on non-local
-        // filesystems, truncating the span digits (Dedup marker fix)
-        val out = new java.io.ByteArrayOutputStream(32)
-        val buf = new Array[Byte](32)
-        var n = in.read(buf)
-        while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-        Some(new String(out.toByteArray, "UTF-8").trim.toLong)
-      } finally in.close()
-    }
-  }
+  private def spanOf(spark: SparkSession, wandPath: String): Long =
+    ShardWrite.readMarker(spark, s"$wandPath/_span").map(_.toLong)
+      .getOrElse(throw new IllegalStateException(
+        s"$wandPath has no _span marker — not a maintained WAND layout"))
 
   /** BM25 top-k with BLOCK-MAX pruning — exact WAND-lite over the
     * [[wandLayoutFrom]] layout, two phases:
@@ -1298,13 +1255,9 @@ object PostingsIndex {
     val distinctTerms = terms.distinct
     val buckets: Seq[Integer] = distinctTerms.map(tokenBucketLocal)
       .toSet.toSeq.map((b: Int) => Integer.valueOf(b))
-    // tombstones: gate on channel existence so a never-retired layout
-    // serves the IDENTICAL plan (the readCodesRetained discipline) —
+    // tombstones: a never-retired layout serves the IDENTICAL plan —
     // the anti-joins exist only when there is something to subtract
-    val gone = retirePath.filter { rp =>
-      val p = new Path(rp)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }.map(rp => retiredDocs(spark, rp))
+    val gone = retirePath.flatMap(tombstones(_).live(spark))
     val dl = {
       val dl0 = readUnionShards(spark, dlPath)
       gone.fold(dl0)(g => dl0.join(g, Seq("doc_id"), "left_anti"))

@@ -18,8 +18,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * skips or heals independently — the split-write contract the batch
   * twins pin, now under streaming replay. Families that need the
   * retired docs' CONTENT (unigram/DSIR/NB/CMS count subtraction) get
-  * the full rows; set-semantics channels (pairs, postings, ANN codes)
-  * use the ids alone.
+  * the full rows (they write `ShardWrite.CountChannel` retire counts);
+  * set-semantics channels (pairs, postings, ANN codes, the gates) use
+  * the ids alone, each appender writing one `ShardWrite.Tombstones`
+  * id set.
   *
   * The GATE channels ride the same sink (r15): [[NearDupGate
   * .retireAppend]] / [[SemDeDupGate.retireAppend]] are

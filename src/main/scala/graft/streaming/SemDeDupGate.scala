@@ -113,13 +113,14 @@ object SemDeDupGate {
     // with the gate's statePath given, pending tombstones subtract at
     // read — a taken-down vector is invisible to corpus readers from
     // the instant of retireAppend, not the next eviction window
-    statePath.flatMap(sp => retiredVids(spark, sp)).fold(raw)(r =>
+    statePath.flatMap(tombstones(_).live(spark)).fold(raw)(r =>
       raw.join(broadcast(r), Seq("vid"), "left_anti"))
   }
 
   // ---- vector tombstones (the retire channel on gate STATE) --------
 
-  private def retireDir(statePath: String): String = s"$statePath/retire"
+  private def tombstones(statePath: String) =
+    graft.functions.ShardWrite.Tombstones(s"$statePath/retire", "vid")
 
   /** TOMBSTONES for the gate's memory — the embedding-space twin of
     * [[NearDupGate.retireAppend]]: vec ids leaving the corpus append
@@ -136,25 +137,16 @@ object SemDeDupGate {
     * false iff the shard already existed (replay). */
   def retireAppend(vecIds: DataFrame, statePath: String,
                    batchId: Long): Boolean =
-    graft.functions.ShardWrite.appendIds(vecIds, col("vid"),
-      retireDir(statePath), batchId)
-
-  private def retiredVids(spark: SparkSession,
-                          statePath: String): Option[DataFrame] = {
-    val p = new Path(retireDir(statePath))
-    val fs = fsOf(spark, statePath)
-    if (!fs.exists(p)) None
-    else Some(graft.functions.ShardWrite
-      .readShards(spark, retireDir(statePath), "vid LONG"))
-  }
+    tombstones(statePath).append(batchId, vecIds, col("vid"))
 
   /** MAINTENANCE: physically rewrite every `list=`/`sub=` dir holding
     * tombstoned vectors — state vecs AND output — then CONSUME the
-    * channel, behind the gate's `_sem_fence` (a crash mid-window heals
+    * channel ([[LakeMaintenance.evictRetired]], the shared eviction
+    * pass), behind the gate's `_sem_fence` (a crash mid-window heals
     * through [[recoverMaintenance]], which reruns this; the converging
     * [[LakeMaintenance.evictFromDir]] kernel makes the rerun exact).
-    * The channel deletes before the fence clears: a crash between the
-    * two leaves only the fence, which the rerun clears as a no-op.
+    * The channel is consumed before the fence clears: a crash between
+    * the two leaves only the fence, which the rerun clears as a no-op.
     * Returns (dirs scanned, dirs rewritten).
     *
     * `minEvictDensity` > 0 bounds the rewrite to the takedown's
@@ -170,59 +162,33 @@ object SemDeDupGate {
         s"a DIFFERENT maintenance operation is interrupted ($f) — run " +
           "recoverMaintenance to complete it before evicting")
     }
-    val ids = retiredVids(spark, statePath) match {
-      case None =>
-        // channel already consumed — a crash between the channel delete
-        // and the fence clear leaves only the fence; clearing it IS the
-        // remaining recovery
-        if (readFence(spark, statePath).contains("evicting"))
-          clearFence(spark, statePath)
-        return (0, 0)
-      case Some(i) => i
+    val res = LakeMaintenance.evictRetired(spark, tombstones(statePath),
+        minEvictDensity) {
+      writeFence(spark, statePath, "evicting") // up before the first rewrite
+      dataDirs(spark, outPath, statePath)
     }
-    val idsP = ids.persist()
-    try {
-      writeFence(spark, statePath, "evicting")
-      var scanned = 0; var rewritten = 0; var carried = false
-      if (idsP.head(1).nonEmpty) {
-        for (root <- Seq(outPath, vecsPath(statePath))) {
-          val rootP = new Path(root)
-          val fs = fsOf(spark, root)
-          if (fs.exists(rootP)) {
-            fs.listStatus(rootP).filter(_.isDirectory).map(_.getPath)
-              .filter(_.getName.startsWith("list=")).foreach { lp =>
-                scanned += 1
-                val (rw, cr) = LakeMaintenance.evictFromDirIfDense(spark,
-                  lp.toString, idsP, "vid", minEvictDensity,
-                  snapshotRoot = Some(root))
-                if (rw) rewritten += 1
-                carried ||= cr
-                fs.listStatus(lp).filter(_.isDirectory).map(_.getPath)
-                  .filter(_.getName.startsWith("sub=")).foreach { sp =>
-                    scanned += 1
-                    val (rw2, cr2) = LakeMaintenance.evictFromDirIfDense(spark,
-                      sp.toString, idsP, "vid", minEvictDensity,
-                      snapshotRoot = Some(root))
-                    if (rw2) rewritten += 1
-                    carried ||= cr2
-                  }
-              }
-          }
-        }
-      }
-      // channel consumed only after EVERY dir rewrote, fence cleared
-      // only after the channel consumed — see the crash contract above;
-      // carried dirs keep the channel (probe subtraction stays the
-      // serving contract), compacted so its read stays one m-shard
-      if (!carried)
-        graft.functions.ShardWrite.consumeCompleteShards(
-          spark, retireDir(statePath))
-      else
-        graft.functions.ShardWrite.compactShards(spark,
-          retireDir(statePath), "vid LONG")(_.distinct())
-      clearFence(spark, statePath)
-      (scanned, rewritten)
-    } finally idsP.unpersist()
+    // any fence left here is "evicting" and the channel is settled:
+    // clearing it completes this run or an interrupted one
+    clearFence(spark, statePath)
+    res.getOrElse((0, 0))
+  }
+
+  /** Every `list=` dir and its `sub=` dirs under the output and the
+    * state vecs, each with its root: (dir, root) pairs, what the
+    * maintenance rewrites walk. */
+  private def dataDirs(spark: SparkSession, outPath: String,
+                       statePath: String): Seq[(String, String)] = {
+    def subDirs(dir: String, prefix: String): Seq[String] = {
+      val p = new Path(dir)
+      val fs = fsOf(spark, dir)
+      if (!fs.exists(p)) Nil
+      else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
+        .filter(_.getName.startsWith(prefix)).map(_.toString)
+    }
+    for (root <- Seq(outPath, vecsPath(statePath));
+         lp <- subDirs(root, "list=");
+         dir <- lp +: subDirs(lp, "sub="))
+      yield (dir, root)
   }
 
   private def readFence(spark: SparkSession, statePath: String): Option[String] = {
@@ -407,12 +373,12 @@ object SemDeDupGate {
       // cosine gate — a retired representative must stop suppressing
       // its neighborhood immediately, not at the next eviction window.
       // Absent channel → identical plan (the WAND/codes discipline).
-      val retired = retiredVids(spark, statePath)
+      val gone = tombstones(statePath).live(spark)
       val seenOpt = (flatDirs ++ splitDirs) match {
         case Nil => None
         case dirs =>
           val seen0 = seenVectors(spark, vecsPath(statePath), dirs.map(_._2))
-          Some(hold(retired.fold(seen0)(r => seen0.join(
+          Some(hold(gone.fold(seen0)(r => seen0.join(
             broadcast(r.select(col("vid").as("seen_id"))),
             Seq("seen_id"), "left_anti"))))
       }
@@ -519,21 +485,9 @@ object SemDeDupGate {
           "recoverMaintenance to complete it before compacting")
     }
     writeFence(spark, statePath, "compacting")
-    for (root <- Seq(outPath, vecsPath(statePath))) {
-      val rootP = new Path(root)
-      val fs = fsOf(spark, root)
-      if (fs.exists(rootP)) {
-        fs.listStatus(rootP).filter(_.isDirectory).map(_.getPath)
-          .filter(_.getName.startsWith("list=")).foreach { lp =>
-            LakeMaintenance.compactFlat(spark, lp.toString, targetBytes,
-              maxFiles, snapshotRoot = Some(root))
-            fs.listStatus(lp).filter(_.isDirectory).map(_.getPath)
-              .filter(_.getName.startsWith("sub=")).foreach { sp =>
-                LakeMaintenance.compactFlat(spark, sp.toString, targetBytes,
-                  maxFiles, snapshotRoot = Some(root))
-              }
-          }
-      }
+    dataDirs(spark, outPath, statePath).foreach { case (dir, root) =>
+      LakeMaintenance.compactFlat(spark, dir, targetBytes, maxFiles,
+        snapshotRoot = Some(root))
     }
     clearFence(spark, statePath)
   }

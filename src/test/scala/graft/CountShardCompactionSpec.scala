@@ -275,4 +275,39 @@ class CountShardCompactionSpec extends SparkSpec {
     assert(!ch.append(2L, pairs((5L, 6L), (6L, 7L))))
     assert(rows(ch.retained(spark)) == retained)
   }
+
+  test("tombstones: only complete shards are live; compact then consume keeps an in-flight append") {
+    import graft.functions.Similarity
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val dir = tmp("tombstones")
+    val emb = spark.range(20L).toDF("vec_id")
+      .select(col("vec_id"), transform(sequence(lit(1), lit(4)),
+        j => sin(col("vec_id") * j.cast("double"))).as("embedding"))
+    Similarity.sqWriteArtifacts(emb, "vec_id", "embedding", dir)
+    val tombs = ShardWrite.Tombstones(s"$dir/retire", "vid")
+    def antiJoins = Similarity.sqProbeFromDir(emb, "vec_id", "embedding",
+        dir, 0L, 5).queryExecution.analyzed
+      .collect { case j: Join if j.joinType == LeftAnti => j }.length
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = new org.apache.hadoop.fs.Path(s"$dir/retire")
+    val inFlight = new org.apache.hadoop.fs.Path(root, "batch=9")
+    fs.mkdirs(inFlight) // claimed, not yet _SUCCESS-committed
+    assert(tombs.live(spark).isEmpty, "an in-flight shard is not live")
+    assert(antiJoins == 0)
+    assert(tombs.append(0L, Seq(3L).toDF("id"), col("id")))
+    assert(antiJoins == 1)
+    assert(tombs.append(1L, Seq(3L, 4L).toDF("id"), col("id")))
+    def ids = tombs.live(spark).get.as[Long].collect().toSet
+    assert(ids == Set(3L, 4L))
+    val (in, _) = tombs.compact(spark)
+    assert(in == 2 && ids == Set(3L, 4L))
+    tombs.consume(spark)
+    assert(fs.exists(inFlight), "consume must leave the in-flight dir")
+    assert(tombs.live(spark).isEmpty && antiJoins == 0)
+    fs.delete(inFlight, true)
+    tombs.consume(spark)
+    assert(!fs.exists(root), "with nothing left the root goes too")
+  }
 }

@@ -690,6 +690,18 @@ class PostingsIndexSpec extends SparkSpec {
       "replay below the compaction watermark re-appended rows")
   }
 
+  test("a torn (0-byte) _span marker heals on the next WAND append") {
+    val wP = java.nio.file.Files.createTempDirectory("wand-torn-span").toString
+    val fs = new org.apache.hadoop.fs.Path(wP)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val marker = new org.apache.hadoop.fs.Path(s"$wP/_span")
+    fs.create(marker, true).close() // death between create and write
+    PostingsIndex.wandIndexBatch(docs(0 until 10), 0L, wP, span = 64L)
+    val in = fs.open(marker)
+    try assert(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim == "64")
+    finally in.close()
+  }
+
   test("a new stream over a compacted index fails fast instead of losing batches") {
     // the lineage contract: the watermark skip is only safe for a TRUE
     // replay. A sink records its checkpoint in _lineage; a different

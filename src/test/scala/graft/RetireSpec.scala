@@ -176,10 +176,10 @@ class RetireSpec extends SparkSpec {
     assert(PostingsIndex.retireAppend(retired.select($"doc_id"), rp, 0L))
     assert(PostingsIndex.retireAppend(
       docs.where($"doc_id" === 4L).select($"doc_id"), rp, 1L))
-    val rBefore = PostingsIndex.retiredDocs(spark, rp)
+    val rBefore = ShardWrite.Tombstones(rp, "doc_id").live(spark).get
       .collect().map(_.getLong(0)).toSet
-    assert(PostingsIndex.compactRetire(spark, rp) == ((2, 1)))
-    assert(PostingsIndex.retiredDocs(spark, rp)
+    assert(ShardWrite.Tombstones(rp, "doc_id").compact(spark) == ((2, 1)))
+    assert(ShardWrite.Tombstones(rp, "doc_id").live(spark).get
       .collect().map(_.getLong(0)).toSet == rBefore)
   }
 
@@ -411,6 +411,27 @@ class RetireSpec extends SparkSpec {
       "an in-flight tombstone append must survive the consume")
     assert(serve(None) == truth)
     fs.delete(inFlight, true)
+  }
+
+  test("ANN tombstone fold consumes complete shards only: an in-flight append survives") {
+    import graft.functions.Similarity
+    val emb = spark.range(40L).toDF("vec_id")
+      .select(col("vec_id"), transform(sequence(lit(1), lit(8)),
+        j => sin(col("vec_id") * j.cast("double") * 0.7321)).as("embedding"))
+    val dir = tmp("fold-inflight")
+    Similarity.sqWriteArtifacts(emb, "vec_id", "embedding", dir)
+    assert(Similarity.retireFromDir(
+      emb.where(col("vec_id") % 10 === 7).select("vec_id"), "vec_id", dir, 0L))
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val inFlight = new org.apache.hadoop.fs.Path(s"$dir/retire/batch=1")
+    fs.mkdirs(inFlight) // claimed, not yet _SUCCESS-committed
+    assert(Similarity.foldRetired(spark, dir), "the fold must run")
+    assert(spark.read.parquet(s"$dir/codes").where(col("vid") % 10 === 7).isEmpty)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/retire/batch=0")),
+      "the complete shard is consumed")
+    assert(fs.exists(inFlight),
+      "an in-flight tombstone append must survive the fold")
   }
 
   test("pairs fold: byte-real edge drop, waits without a strictly-increasing watermark") {
