@@ -19,7 +19,10 @@ import org.apache.spark.sql.SparkSession
   * Usage: `runMain graft.ProfileProbe [--runs=K] [q_name...]` (no names
   * = the whole registry), on [[SessionTuning.session]] like Bench, so
   * `SPARK_GRAFT_CPUS` sets the width. Warms at the sf0.001 sibling like
-  * Bench so codegen/JIT is out of the numbers.
+  * Bench so codegen/JIT is out of the numbers; each row's warm-up wall
+  * time is printed as `cold`, so one-time costs a first call pays (a
+  * JVM-wide table built on first use, codegen, class loading) show
+  * beside the measured minimum instead of vanishing into the warm-up.
   */
 object ProfileProbe {
 
@@ -75,13 +78,16 @@ object ProfileProbe {
       if (w.isDirectory && w.getPath != sfDir) w.getPath else sfDir
     }
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    for (n <- names)
+    val cold = names.map { n =>
+      val t0 = System.nanoTime()
       try Bench.materialize(SparkEntry.queries(n)(spark, warmDir))
       catch { case e: Throwable =>
         System.err.println(s"[profile] warmup $n failed: ${e.getMessage}") }
+      n -> (System.nanoTime() - t0) / 1e9
+    }.toMap
 
     def fmt(v: Double) = String.format(Locale.ROOT, "%7.3f", Double.box(v))
-    println(f"${"query"}%-28s ${"build"}%7s ${"plan"}%7s ${"exec"}%7s ${"total"}%7s ${"jobs"}%5s ${"stg"}%5s ${"tasks"}%6s ${"taskSum"}%7s ${"maxTask"}%7s")
+    println(f"${"query"}%-28s ${"build"}%7s ${"plan"}%7s ${"exec"}%7s ${"total"}%7s ${"jobs"}%5s ${"stg"}%5s ${"tasks"}%6s ${"taskSum"}%7s ${"maxTask"}%7s ${"cold"}%7s")
     val rows = names.map { n =>
       // min over `runs` reps of each phase, taken per-rep so phases sum
       val reps = (1 to runs).map { _ =>
@@ -101,12 +107,12 @@ object ProfileProbe {
           taskMs.get() / 1e3, maxTaskMs.get() / 1e3)
       }
       val best = reps.minBy(_._4)
-      println(f"$n%-28s ${fmt(best._1)} ${fmt(best._2)} ${fmt(best._3)} ${fmt(best._4)} ${best._5}%5d ${best._6}%5d ${best._7}%6d ${fmt(best._8)} ${fmt(best._9)}")
+      println(f"$n%-28s ${fmt(best._1)} ${fmt(best._2)} ${fmt(best._3)} ${fmt(best._4)} ${best._5}%5d ${best._6}%5d ${best._7}%6d ${fmt(best._8)} ${fmt(best._9)} ${fmt(cold(n))}")
       (n, best)
     }
     val tb = rows.map(_._2._1).sum; val tp = rows.map(_._2._2).sum
     val te = rows.map(_._2._3).sum; val tt = rows.map(_._2._4).sum
-    println(f"${"TOTAL"}%-28s ${fmt(tb)} ${fmt(tp)} ${fmt(te)} ${fmt(tt)} ${rows.map(_._2._5).sum}%5d ${rows.map(_._2._6).sum}%5d ${rows.map(_._2._7).sum}%6d ${fmt(rows.map(_._2._8).sum)} ${fmt(rows.map(_._2._9).max)}")
+    println(f"${"TOTAL"}%-28s ${fmt(tb)} ${fmt(tp)} ${fmt(te)} ${fmt(tt)} ${rows.map(_._2._5).sum}%5d ${rows.map(_._2._6).sum}%5d ${rows.map(_._2._7).sum}%6d ${fmt(rows.map(_._2._8).sum)} ${fmt(rows.map(_._2._9).max)} ${fmt(cold.values.sum)}")
     spark.stop()
   }
 }

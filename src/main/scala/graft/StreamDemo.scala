@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.{IndicatorState, TickIngest}
 import graft.streaming.IndicatorState.BarIn
@@ -14,13 +13,7 @@ import graft.streaming.IndicatorState.BarIn
   */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session()
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
 

@@ -2,6 +2,8 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
+import org.apache.spark.sql.functions.spark_partition_id
 import graft.Tables
 import graft.functions.ShardWrite
 
@@ -13,34 +15,43 @@ import graft.functions.ShardWrite
   * into ⌈bytes/target⌉ files sized for the scan-side
   * `maxPartitionBytes` split.
   *
-  * Three entry points over ONE per-directory kernel:
+  * Entry points over ONE multi-directory kernel ([[compactDirs]]):
   *  - [[compactLake]] — the tick lake's `symbol=` partitions;
   *  - [[compactPartitioned]] — any prefix-named partition layout (the
-  *    near-dup gate's `bucket=` dirs — [[NearDupGate]] wires this in);
+  *    near-dup gate's `bucket=` dirs);
   *  - [[compactFlat]] — a single unpartitioned directory (the r5
   *    ADVICE gap: the old symbol=-only walk was a silent no-op on flat
-  *    dirs).
+  *    dirs);
+  *  - [[NearDupGate.compactLayouts]] and [[SemDeDupGate.compactState]]
+  *    hand it every leaf of their layouts at once.
+  *
+  * One pass costs one Spark write job per first-footer schema (one in
+  * the tick lake) and one [[Snapshot.commit]] per snapshot root,
+  * whatever the number of due directories: a job and a full manifest
+  * rewrite per directory made compaction's cost grow by ~150 ms per
+  * symbol of pure per-action overhead.
   *
   * Consistency contract (plain parquet directories — no table format, so
   * no snapshot isolation): the compacted files are fully written into a
   * hidden temp dir FIRST, and the swap is LOSS-PROOF by ordering —
   * compacted files rename IN first (uniquely stamped names), originals
-  * delete only after EVERY rename succeeded. Any crash or rename
+  * go only after EVERY rename of the pass succeeded. Any crash or rename
   * failure inside the window therefore leaves all originals intact;
   * the worst case is DUPLICATED rows (already-renamed compacted files
-  * alongside originals), bounded to one partition and repairable by a
-  * dedup rewrite — rows are never lost, and a stale `.compact_tmp`
-  * dir from a crashed run holds only copies of still-present originals,
-  * so deleting it on the next run is safe. A failed rename rolls the
-  * already-renamed files back out before aborting. Compacted names carry
-  * nanoTime AND a random UUID, so the abort path can only fire on real
-  * rename failures, never on a cross-JVM stamp collision. Readers
-  * listing mid-swap can still observe the duplicate window — run
-  * compaction in a maintenance window, pause the sink for the touched
-  * partitions (the [[TickIngest.startLakeSink]]/[[NearDupGate]] hooks
-  * run it INSIDE foreachBatch, where the stream's own appends are
-  * naturally paused), or adopt a transactional table format when
-  * concurrent readers matter.
+  * alongside originals), bounded to the pass's directories and
+  * repairable by a dedup rewrite — rows are never lost, and a stale
+  * `.compact_tmp` dir from a crashed run holds only copies of
+  * still-present originals, so deleting it on the next run is safe. A
+  * failed rename rolls every already-renamed file of the pass back out
+  * before aborting. Compacted names carry nanoTime AND a random UUID, so
+  * the abort path can only fire on real rename failures, never on a
+  * cross-JVM stamp collision. Readers listing mid-swap can still
+  * observe the duplicate window — run compaction in a maintenance
+  * window, pause the sink for the touched partitions (the
+  * [[TickIngest.startLakeSink]]/[[NearDupGate]] hooks run it INSIDE
+  * foreachBatch, where the stream's own appends are naturally paused),
+  * or adopt a transactional table format when concurrent readers
+  * matter.
   *
   * The rewrite reads EXACTLY the file list captured before the job (not
   * the live directory): a file a concurrent sink appends is neither
@@ -48,17 +59,18 @@ import graft.functions.ShardWrite
   * the compacted output while the original survived the swap,
   * duplicating them unconditionally.
   *
-  * Scale shape: one partition at a time — the rewrite is a single
-  * coalesce(⌈bytes/target⌉) job over one partition's files; driver FS
-  * work is O(files in that partition), never the whole lake. */
+  * Scale shape: driver FS work is O(files in the due directories) plus
+  * one footer read per due directory; the rewrite is one job whose
+  * tasks each write one output file, so the due directories' bytes
+  * spread over ⌈bytes/target⌉ parallel tasks. */
 object LakeMaintenance {
 
   /** Compact every `symbol=` partition under `path` that holds more than
     * `maxFiles` parquet files. Returns (partitions compacted, files
     * before, files after). `snapshotRoot`: when the named dir has
     * [[Snapshot]] manifests, replaced originals are RETIRED into its
-    * `_stale` tree and a new manifest version commits per compacted
-    * partition — concurrent manifest readers keep a consistent view. */
+    * `_stale` tree by one new manifest version — concurrent manifest
+    * readers keep a consistent view. */
   def compactLake(spark: SparkSession, path: String,
                   targetBytes: Long = 128L << 20,
                   maxFiles: Int = 4,
@@ -78,14 +90,9 @@ object LakeMaintenance {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return (0, 0, 0)
-    var parts = 0; var before = 0; var after = 0
-    fs.listStatus(root).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith(prefix))
-      .foreach { p =>
-        compactOneDir(spark, fs, p, targetBytes, maxFiles, snapshotRoot)
-          .foreach { case (b, a) => parts += 1; before += b; after += a }
-      }
-    (parts, before, after)
+    val dirs = fs.listStatus(root).filter(_.isDirectory)
+      .map(_.getPath).filter(_.getName.startsWith(prefix)).sortBy(_.getName)
+    compactDirs(spark, dirs.map(_ -> snapshotRoot).toSeq, targetBytes, maxFiles)
   }
 
   /** Compact ONE unpartitioned directory (returns the same triple shape;
@@ -93,77 +100,156 @@ object LakeMaintenance {
   def compactFlat(spark: SparkSession, dir: String,
                   targetBytes: Long = 128L << 20,
                   maxFiles: Int = 4,
-                  snapshotRoot: Option[String] = None): (Int, Int, Int) = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return (0, 0, 0)
-    compactOneDir(spark, fs, p, targetBytes, maxFiles, snapshotRoot)
-      .map { case (b, a) => (1, b, a) }.getOrElse((0, 0, 0))
+                  snapshotRoot: Option[String] = None): (Int, Int, Int) =
+    compactDirs(spark, Seq(new Path(dir) -> snapshotRoot), targetBytes, maxFiles)
+
+  private val CompactTmp = ".compact_tmp"
+  private val BinTag = "_compact_bin"
+
+  /** The multi-directory kernel: compact every `(dir, snapshotRoot)` of
+    * `dirs` holding more than `maxFiles` parquet files; a dir at or
+    * under it, or missing, is left byte-untouched. Returns (dirs
+    * compacted, files before, files after).
+    *
+    * Each due dir's captured file list is split into ⌈bytes/target⌉
+    * size-balanced bins (never more bins than files: a file is not
+    * split). The dirs are grouped by filesystem and by the schema of
+    * their first footer (the file [[Tables.parquet]] would read it
+    * from); each group is ONE write job into a hidden `.compact_tmp`
+    * in its first dir: one scan per bin, read one partition per bin
+    * ([[FooterSchema.concat]]) and written partitioned by the
+    * partition id, so every bin is one task and one output file, with
+    * no shuffle. A single scan over all the files would pack files of
+    * several dirs into one task (one output file per dir per task),
+    * and sorting them back out needs a shuffle, a second job. The tag
+    * is the partition id, not a literal per bin, so the bins' scans
+    * generate identical code, compiled once.
+    * [[swapAll]] then renames each dir's output in and retires the
+    * originals of the whole pass: one [[Snapshot.commit]] per root. A
+    * dir whose files hold no row is left as it is (a rewrite would
+    * leave it without a file to take its schema from). */
+  private[streaming] def compactDirs(spark: SparkSession,
+                                     dirs: Seq[(Path, Option[String])],
+                                     targetBytes: Long,
+                                     maxFiles: Int): (Int, Int, Int) = {
+    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val due = dirs.flatMap { case (dir, root) =>
+      val fs = dir.getFileSystem(conf)
+      val listed = try fs.listStatus(dir)
+        catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+      // a crashed run's temp holds only copies of present originals
+      listed.find(s => s.isDirectory && s.getPath.getName == CompactTmp)
+        .foreach(s => fs.delete(s.getPath, true))
+      val files = listed.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      if (files.length > maxFiles) Some(Swap(dir, fs, Array.empty, files, root)) else None
+    }.toIndexedSeq
+    if (due.isEmpty) return (0, 0, 0)
+    val groups = due.zipWithIndex.groupBy { case (d, _) =>
+      (d.fs.getUri, FooterSchema.of(spark, d.originals.minBy(_.getPath.toString)))
+    }.toSeq.sortBy(_._2.head._2)
+    val written = groups.map { case ((_, schema), members) =>
+      val first = members.head._1
+      val tmp = new Path(first.dir, CompactTmp)
+      val dataSchema = schema.getOrElse(throw new IllegalStateException(
+        s"compaction: no footer schema in ${first.dir}"))
+      require(!dataSchema.fieldNames.contains(BinTag),
+        s"compaction: data column $BinTag collides with the bin tag")
+      val binned = members.flatMap { case (d, i) => bins(d.originals, targetBytes).map(i -> _) }
+      FooterSchema.concat(spark, binned.map { case (_, bin) =>
+        FooterSchema.scan(spark, bin.map(f => f.getPath -> Seq(f)), Map.empty, dataSchema)
+      }).withColumn(BinTag, spark_partition_id())
+        .write.partitionBy(BinTag).mode("overwrite").parquet(tmp.toString)
+      (first.fs, tmp, binned.map(_._1))
+    }
+    // each bin's output dir, back to the due dir it came from
+    val swaps = written.flatMap { case (fs, tmp, binDirs) =>
+      fs.listStatus(tmp).toSeq.filter(_.isDirectory).flatMap { o =>
+        val bin = o.getPath.getName.stripPrefix(s"$BinTag=").toInt
+        parquetFiles(fs, o.getPath).toSeq.map(f => binDirs(bin) -> f.getPath)
+      }
+    }.groupBy(_._1).toSeq.sortBy(_._1).map { case (i, out) =>
+      due(i).copy(written = out.map(_._2).toArray) }
+    swapAll(spark, swaps, written.map(w => w._1 -> w._2), "compacted",
+      d => s"compaction: rename into $d failed; every directory left unchanged")
+    (swaps.length, swaps.map(_.originals.length).sum, swaps.map(_.written.length).sum)
   }
 
-  /** The per-directory kernel: captured-file-list rewrite + loss-proof
-    * swap (contract above). The temp dir lives INSIDE the partition as a
-    * dot-dir — hidden from Spark readers, deleted up front if a crashed
-    * run left one. Returns Some((files before, files after)) iff the dir
-    * exceeded `maxFiles` and was compacted. */
-  private def compactOneDir(spark: SparkSession, fs: FileSystem, p: Path,
-                            targetBytes: Long, maxFiles: Int,
-                            snapshotRoot: Option[String] = None): Option[(Int, Int)] = {
-    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val files = parquetFiles(fs, p)
-    if (files.length <= maxFiles) return None
+  /** `files` in ⌈bytes/target⌉ bins of about equal bytes (largest file
+    * first into the lightest bin), at most one bin per file. */
+  private def bins(files: Array[FileStatus], targetBytes: Long): Seq[Seq[FileStatus]] = {
     val bytes = files.map(_.getLen).sum
-    val n = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
-    val tmp = new Path(p, ".compact_tmp")
-    fs.delete(tmp, true) // stale temp: copies of still-present originals
-    // rewrite EXACTLY the captured file list (see consistency contract);
-    // any partition column lives in the dir name, which stays put
-    Tables.parquet(spark, files.map(_.getPath.toString): _*)
-      .coalesce(n).write.mode("overwrite").parquet(tmp.toString)
-    val compacted = swapIn(spark, fs, p, tmp, files, "compacted",
-      s"compaction: rename into $p failed; partition left unchanged",
-      snapshotRoot)
-    Some((files.length, compacted))
+    val n = math.min(files.length,
+      math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt)
+    val load = Array.fill(n)(0L)
+    val out = Array.fill(n)(Seq.newBuilder[FileStatus])
+    files.sortBy(f => (-f.getLen, f.getPath.toString)).foreach { f =>
+      val b = load.indices.minBy(load)
+      load(b) += f.getLen
+      out(b) += f
+    }
+    out.map(_.result()).toSeq
   }
+
+  /** One directory's part of a swap: the `written` files rename into
+    * `dir`, the captured `originals` go (retired into `snapshotRoot`'s
+    * manifest when it has one). */
+  private final case class Swap(dir: Path, fs: FileSystem, written: Array[Path],
+                                originals: Array[FileStatus],
+                                snapshotRoot: Option[String])
 
   /** The loss-proof swap tail every rewrite here ends with (contract
-    * above): each parquet file of the hidden `tmp` dir renames into `p`
-    * as `<prefix>-<stamp>-<i>.parquet`; a failed rename rolls the
-    * renamed ones back out, drops `tmp` and throws `failMsg`, leaving
-    * the originals intact. Only then do the `originals` go — RETIRED in
-    * one [[Snapshot]] commit that re-lists `p` when `snapshotRoot` has
-    * manifests (older versions resolve them from `_stale`), deleted
-    * otherwise — and `tmp` is dropped. The stamp carries time + UUID, so
-    * a collision with ANY prior run's output is impossible and the
-    * rollback only fires on real failures. Returns the files swapped in. */
+    * above): each written file renames into its dir as
+    * `<prefix>-<stamp>-<i>.parquet`; a failed rename rolls every
+    * renamed file of every dir back out, drops the `tmps` and throws
+    * `failMsg` of the failing dir, leaving the originals
+    * intact. Only then do the originals go — RETIRED in one
+    * [[Snapshot]] commit per root that has manifests, which re-lists
+    * that root's swapped dirs (older versions resolve them from
+    * `_stale`), deleted otherwise — and the `tmps` are dropped. The
+    * stamp carries time + UUID, so a collision with ANY prior run's
+    * output is impossible and the rollback only fires on real
+    * failures. */
+  private def swapAll(spark: SparkSession, swaps: Seq[Swap],
+                      tmps: Seq[(FileSystem, Path)], prefix: String,
+                      failMsg: Path => String): Unit = {
+    val stamp = java.lang.Long.toHexString(System.nanoTime()) + "-" +
+      java.util.UUID.randomUUID().toString
+    val renamed = scala.collection.mutable.ArrayBuffer.empty[(FileSystem, Path)]
+    swaps.foreach { sw =>
+      val allRenamed = sw.written.zipWithIndex.forall { case (f, i) =>
+        val dest = new Path(sw.dir, f"$prefix-$stamp-$i%05d.parquet")
+        val ok = sw.fs.rename(f, dest)
+        if (ok) renamed += sw.fs -> dest
+        ok
+      }
+      if (!allRenamed) {
+        renamed.foreach { case (fs, f) => fs.delete(f, false) } // originals all intact
+        tmps.foreach { case (fs, t) => fs.delete(t, true) }
+        throw new java.io.IOException(failMsg(sw.dir))
+      }
+    }
+    swaps.groupBy(_.snapshotRoot).foreach {
+      case (Some(r), group) if Snapshot.enabled(spark, r) =>
+        val rootUri = new Path(r).toUri.getPath.stripSuffix("/")
+        Snapshot.commit(spark, r,
+          group.map(_.dir.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")),
+          retired = group.flatMap(_.originals.map(_.getPath)))
+      case (_, group) =>
+        group.foreach(sw => sw.originals.foreach(f => sw.fs.delete(f.getPath, false)))
+    }
+    tmps.foreach { case (fs, t) => fs.delete(t, true) }
+  }
+
+  /** [[swapAll]] for ONE dir rewritten into the hidden `tmp`. Returns
+    * the files swapped in. */
   private[streaming] def swapIn(spark: SparkSession, fs: FileSystem, p: Path,
                                 tmp: Path, originals: Array[FileStatus],
                                 prefix: String, failMsg: String,
                                 snapshotRoot: Option[String] = None): Int = {
-    val written = parquetFiles(fs, tmp)
-    val stamp = java.lang.Long.toHexString(System.nanoTime()) + "-" +
-      java.util.UUID.randomUUID().toString
-    val renamed = scala.collection.mutable.ArrayBuffer.empty[Path]
-    val allRenamed = written.zipWithIndex.forall { case (f, i) =>
-      val dest = new Path(p, f"$prefix-$stamp-$i%05d.parquet")
-      val ok = fs.rename(f.getPath, dest)
-      if (ok) renamed += dest
-      ok
-    }
-    if (!allRenamed) {
-      renamed.foreach(fs.delete(_, false)) // originals all intact
-      fs.delete(tmp, true)
-      throw new java.io.IOException(failMsg)
-    }
-    snapshotRoot.filter(Snapshot.enabled(spark, _)) match {
-      case Some(r) =>
-        val rootUri = new Path(r).toUri.getPath.stripSuffix("/")
-        val rel = p.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-        Snapshot.commit(spark, r, Seq(rel),
-          retired = originals.map(_.getPath).toSeq)
-      case None => originals.foreach(f => fs.delete(f.getPath, false))
-    }
-    fs.delete(tmp, true)
+    val written = parquetFiles(fs, tmp).map(_.getPath)
+    swapAll(spark, Seq(Swap(p, fs, written, originals, snapshotRoot)),
+      Seq(fs -> tmp), prefix, _ => failMsg)
     written.length
   }
 
@@ -178,7 +264,7 @@ object LakeMaintenance {
     * retired rows is left byte-untouched (only the existence-probe scan
     * is paid).
     *
-    * Same loss-proof swap as [[compactFlat]]'s kernel (captured file
+    * Same loss-proof swap as the compaction kernel (captured file
     * list → hidden temp → stamped renames in → originals delete /
     * snapshot-retire), with one addition that makes a CRASH INSIDE THE
     * SWAP heal by rerun: the rewrite starts from `distinct()`. The

@@ -1151,15 +1151,14 @@ object NearDupGate {
     val marker = new Path(statePath, "_gate_params")
     if (!fs.exists(marker) || readMarker(fs, marker).contains(";")) return
     val gp = GateParams.parse(readMarker(fs, marker)).getOrElse(return)
-    for (l <- GateParams.Layouts) {
+    // every leaf of the three layouts in one pass: one write job per
+    // layout schema, one manifest commit per layout root (a no-op for
+    // layouts without manifests — the kernel probes enabled())
+    LakeMaintenance.compactDirs(spark, GateParams.Layouts.flatMap { l =>
       val root = new Path(layoutDir(l, outPath, statePath))
-      leafSizes(fs, root, gp, l).foreach { case (p, _) =>
-        // snapshotRoot is a no-op for layouts without manifests — the
-        // enabled() probe inside the kernel gates the retire path
-        LakeMaintenance.compactFlat(spark, nodeDir(root, p).toString,
-          targetBytes, maxFiles, snapshotRoot = Some(root.toString))
-      }
-    }
+      leafSizes(fs, root, gp, l).map { case (p, _) =>
+        nodeDir(root, p) -> Some(root.toString) }
+    }, targetBytes, maxFiles)
     // the drop list rides the same cadence — bounded at its distinct
     // key count instead of one file per mitigation run
     compactHotBands(spark, statePath)

@@ -674,48 +674,17 @@ object PostingsIndex {
   private def tombstones(retirePath: String) =
     ShardWrite.Tombstones(retirePath, "doc_id")
 
-  /** PHYSICAL tombstone fold for the postings family — the maintenance
-    * completion of [[retireAppend]]: until now takedowns subtracted at
-    * READ forever, so the channel (and every serve's anti-join input)
-    * grew with takedown history. The fold makes deletions byte-real in
-    * ONE maintenance window, as a compaction variant:
-    *
-    *  - tf and dl live shards fold into one m-shard each WITHOUT the
-    *    retired docs' rows — [[compactWith]] with an anti-join merge,
-    *    replay watermark and token-bucket layout preserved (so later
-    *    appends still skip correctly and pruned reads still prune);
-    *  - the df summary sidecar REWRITES from the retained tf (df is a
-    *    per-token count over doc-level rows — recomputing it from the
-    *    already-folded tf is exact, and cheaper to reason about than
-    *    per-shard subtraction across unaligned compaction histories);
-    *  - the channel is consumed LAST, so a crash ANYWHERE inside the
-    *    window reruns the fold (each piece is an idempotent rewrite);
-    *  - a `_fold_fence` on the dl root brackets the whole window: the
-    *    read-side df correction (tf ∩ tombstones) is ZERO once tf is
-    *    folded, so a serve between the tf fold and the sidecar rewrite
-    *    would pair retained tf bytes with a STALE df — fenced serves
-    *    fail loudly instead of silently mis-ranking, and the fold's
-    *    rerun is the recovery (it raises, heals, and clears the fence).
-    *
-    * After the fold, serving WITHOUT `retirePath` equals the
-    * tombstoned serve before it (the oracle row pins this end to end).
-    * Version note: under [[Snapshot]] manifests the replaced shards
-    * retire into `_stale`, so PINNED pre-fold versions still resolve
-    * the pre-takedown corpus — vacuum retention is therefore the legal
-    * deletion horizon; without manifests there are no pinned reads and
-    * the fold is immediately global. Returns true iff a fold ran. */
-  // ---- fold fence: the stale-sidecar crash window made LOUD ---------
-  //
-  // Between a committed tf fold and the df/bm sidecar rewrite, the
-  // sidecar still counts the retired docs while the read-side
-  // correction (tf ∩ tombstones) is already zero — a serve in that
-  // window would silently mis-rank (wrong stopword cut, wrong idf).
-  // The fold therefore raises a fence at entry and clears it only
-  // after EVERY piece is consistent again; serves fail fast on the
-  // fence (the `_sem_fence` discipline) and the fold's rerun — which
-  // is idempotent — is the recovery. The fence lives on the root BOTH
-  // serve shapes read (dl for the flat index, the layout root for
-  // WAND).
+  /** The FOLD FENCE marker of `root`: the stale-sidecar crash window
+    * made loud. Between a committed tf fold and the df/bm sidecar
+    * rewrite, the sidecar still counts the retired docs while the
+    * read-side correction (tf ∩ tombstones) is already zero — a serve
+    * in that window would silently mis-rank (wrong stopword cut, wrong
+    * idf). The fold therefore raises this fence at entry and clears it
+    * only after EVERY piece is consistent again; serves fail fast on
+    * the fence (the `_sem_fence` discipline) and the fold's rerun —
+    * which is idempotent — is the recovery. The fence lives on the root
+    * BOTH serve shapes read (dl for the flat index, the layout root for
+    * WAND). */
   private def foldFence(root: String) = new Path(s"$root/_fold_fence")
 
   private def raiseFoldFence(spark: SparkSession, root: String): Unit = {
@@ -775,6 +744,36 @@ object PostingsIndex {
         "rerun foldRetiredPostings/foldRetiredWand to heal before serving")
   }
 
+  /** PHYSICAL tombstone fold for the postings family — the maintenance
+    * completion of [[retireAppend]]: until now takedowns subtracted at
+    * READ forever, so the channel (and every serve's anti-join input)
+    * grew with takedown history. The fold makes deletions byte-real in
+    * ONE maintenance window, as a compaction variant:
+    *
+    *  - tf and dl live shards fold into one m-shard each WITHOUT the
+    *    retired docs' rows — [[compactWith]] with an anti-join merge,
+    *    replay watermark and token-bucket layout preserved (so later
+    *    appends still skip correctly and pruned reads still prune);
+    *  - the df summary sidecar REWRITES from the retained tf (df is a
+    *    per-token count over doc-level rows — recomputing it from the
+    *    already-folded tf is exact, and cheaper to reason about than
+    *    per-shard subtraction across unaligned compaction histories);
+    *  - the channel is consumed LAST, so a crash ANYWHERE inside the
+    *    window reruns the fold (each piece is an idempotent rewrite);
+    *  - a `_fold_fence` on the dl root brackets the whole window: the
+    *    read-side df correction (tf ∩ tombstones) is ZERO once tf is
+    *    folded, so a serve between the tf fold and the sidecar rewrite
+    *    would pair retained tf bytes with a STALE df — fenced serves
+    *    fail loudly instead of silently mis-ranking, and the fold's
+    *    rerun is the recovery (it raises, heals, and clears the fence).
+    *
+    * After the fold, serving WITHOUT `retirePath` equals the
+    * tombstoned serve before it (the oracle row pins this end to end).
+    * Version note: under [[Snapshot]] manifests the replaced shards
+    * retire into `_stale`, so PINNED pre-fold versions still resolve
+    * the pre-takedown corpus — vacuum retention is therefore the legal
+    * deletion horizon; without manifests there are no pinned reads and
+    * the fold is immediately global. Returns true iff a fold ran. */
   def foldRetiredPostings(spark: SparkSession, tfPath: String,
                           dlPath: String, retirePath: String,
                           dfPath: Option[String] = None): Boolean = {

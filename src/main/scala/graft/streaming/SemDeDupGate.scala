@@ -471,8 +471,8 @@ object SemDeDupGate {
 
   /** MAINTENANCE: compact the one-file-per-batch accretion in every
     * list dir of the output and state layouts (snapshot-aware — with
-    * manifests enabled, replaced files retire into `_stale` and a new
-    * version commits per compacted dir). Runs behind the fence; MUST
+    * manifests enabled, replaced files retire into `_stale` and one new
+    * version commits per root). Runs behind the fence; MUST
     * run with the gate paused (the sink's hook runs it inside
     * `foreachBatch`). Re-entrant: a crash mid-compaction leaves the
     * fence down and [[recoverMaintenance]] reruns it — the kernel's
@@ -485,10 +485,8 @@ object SemDeDupGate {
           "recoverMaintenance to complete it before compacting")
     }
     writeFence(spark, statePath, "compacting")
-    dataDirs(spark, outPath, statePath).foreach { case (dir, root) =>
-      LakeMaintenance.compactFlat(spark, dir, targetBytes, maxFiles,
-        snapshotRoot = Some(root))
-    }
+    LakeMaintenance.compactDirs(spark, dataDirs(spark, outPath, statePath)
+      .map { case (dir, root) => new Path(dir) -> Some(root) }, targetBytes, maxFiles)
     clearFence(spark, statePath)
   }
 

@@ -54,27 +54,6 @@ class TablesParquetSpec extends SparkSpec {
     root
   }
 
-  /** Jobs started while `build` runs: a sentinel job in the same group
-    * runs after it, and the group is read once the sentinel shows, so
-    * every earlier job has reached the status store by then. */
-  private def jobsToBuild(build: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"tables-parquet-${System.nanoTime()}"
-    sc.setJobGroup(group, "build only")
-    try {
-      build
-      sc.parallelize(Seq(1), 1).count()
-    } finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000000000L
-    var seen = sc.statusTracker.getJobIdsForGroup(group)
-    while (seen.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(20)
-      seen = sc.statusTracker.getJobIdsForGroup(group)
-    }
-    assert(seen.nonEmpty, "the sentinel job never reached the status store")
-    seen.length - 1
-  }
-
   test("schema parity: sf0.001 events (nanos-as-long / NTZ timestamp branch)") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val p = s"$sf0001/events.parquet"
@@ -141,7 +120,7 @@ class TablesParquetSpec extends SparkSpec {
     val recursive = Map("recursiveFileLookup" -> "true")
     val base = Map("basePath" -> lake)
     var dfs = Seq.empty[DataFrame]
-    assert(jobsToBuild {
+    assert(jobsStarted {
       dfs = Seq(
         Tables.parquet(spark, lake),
         Tables.events(spark, sf0001),
@@ -158,7 +137,7 @@ class TablesParquetSpec extends SparkSpec {
     sameRows(dfs(7), spark.read.options(base).parquet(s"$lake/symbol=005930"))
     assert(dfs(7).columns.toSeq == Seq("time", "price", "symbol"))
     // the check sees inference jobs when there are any
-    assert(jobsToBuild(spark.read.parquet(lake)) >= 1)
+    assert(jobsStarted(spark.read.parquet(lake)) >= 1)
   }
 
   test("an empty directory still throws Spark's own AnalysisException") {
@@ -174,8 +153,8 @@ class TablesParquetSpec extends SparkSpec {
   test("40 explicit files: zero jobs where Spark starts a parallel-listing job") {
     val (_, files) = fortyFiles()
     var ours: DataFrame = null
-    assert(jobsToBuild { ours = Tables.parquet(spark, files: _*) } == 0)
-    assert(jobsToBuild(spark.read.parquet(files: _*)) >= 1)
+    assert(jobsStarted { ours = Tables.parquet(spark, files: _*) } == 0)
+    assert(jobsStarted(spark.read.parquet(files: _*)) >= 1)
     sameRows(ours, spark.read.parquet(files: _*))
   }
 
@@ -184,13 +163,13 @@ class TablesParquetSpec extends SparkSpec {
     val dirs = (0 until 40).map(i => f"$root/symbol=$i%06d")
     val base = Map("basePath" -> root)
     var ours: DataFrame = null
-    assert(jobsToBuild {
+    assert(jobsStarted {
       ours = Tables.parquet(spark, dirs, base, symbolString)
     } == 0)
     val schema = StructType(Seq(StructField("time", LongType),
       StructField("price", DoubleType), StructField("symbol", StringType)))
     var theirs: DataFrame = null
-    assert(jobsToBuild {
+    assert(jobsStarted {
       theirs = spark.read.options(base).schema(schema).parquet(dirs: _*)
     } >= 1)
     sameRows(ours, theirs)

@@ -11,6 +11,8 @@
 #  - lambda class names (Multimodal$$$Lambda$6110/0x00007f8005628798)
 #  - source positions in RDD names (at localCheckpoint at
 #    TextAnalysis.scala:1019), which move with any edit above the call
+#  - the corpus fingerprint in bucketed table names
+#    (graft_docs_b_196152c77a4), which follows the fixture files' stats
 #  - expression ids (node#8614L), which shift with the order eager
 #    builds run in: renumbered from 1 in order of first appearance
 #    within each plan section, so the links between operators stay
@@ -26,6 +28,7 @@ sbt -batch "runMain graft.ExplainAudit" 2>/dev/null \
       -e 's/=m[0-9a-f]+u([0-9]+)/=mSTAMPu\1/g' \
       -e 's/\$\$Lambda\$[0-9]+\/0x[0-9a-f]+/$$Lambda/g' \
       -e 's/ at ([A-Za-z0-9_$]+)\.scala:[0-9]+/ at \1.scala:LINE/g' \
+      -e 's/(graft_[a-z]+_b)_[0-9a-f]+/\1_FP/g' \
   | perl -pe 'if (/^## /) { %id = (); $n = 0 } s/#(\d+)/"#" . ($id{$1} \/\/= ++$n)/ge' \
   > docs/EXPLAIN.md
 echo "docs/EXPLAIN.md regenerated ($(grep -c '^## ' docs/EXPLAIN.md) plans)"
